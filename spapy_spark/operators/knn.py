@@ -5,17 +5,24 @@ resampling, /root/reference/SpaRasters.py:1390); this operator is new
 engine surface mandated by BASELINE.json's north_star ("STRtree-per-
 partition kNN").
 
-Two physical strategies, picked by the size of the feature side:
+Physical strategies, picked by the size of the feature side:
 
 - ``knn_join_broadcast`` — the feature layer (sites) is small: ship it
   to every executor and resolve each point batch with one vectorized
   distance matrix + ``argpartition`` top-k.  No shuffle of the point
   side; this is the 10^12-doc plan when |sites| is O(10^4..10^5).
-- ``knn_join_cells`` — both sides large: sites are bucketed by Z-order
-  cell (cells.py); each point probes its own cell's bucket and expands
-  k-rings until ``k`` candidates are guaranteed correct (ring distance
-  lower bound exceeds the current k-th best).  Executed as a cell
-  equi-join + grouped refine.
+- ``knn_join_cells`` — the same broadcast, probed through a
+  :class:`SiteGrid`: sites are bucketed by Z-order cell (cells.py);
+  each point scans its own cell's span of sites and expands Chebyshev
+  rings of cells until no unexplored site can beat its k-th best — the
+  distance from the point to the edge of its explored block, less a
+  float-quantization margin.  Each (point, cell) span keeps its own
+  top-k by ``k`` rounds of ``np.minimum.reduceat`` (linear, no sort);
+  only those winners are folded into the point's running top-k.  The
+  probe runs in ``mapInArrow``, so payload columns never become Python
+  objects.
+- ``knn_join_grid`` / ``_grid_exact`` / ``_grid_total`` — pure
+  Catalyst cell joins for a point stream with no broadcast at all.
 
 Tie-break is deterministic everywhere: order by (distance, site_id) —
 the DuckDB oracle mirrors it with ``ORDER BY dist, site_id``.
@@ -24,7 +31,6 @@ the DuckDB oracle mirrors it with ``ORDER BY dist, site_id``.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (
     DoubleType,
@@ -99,6 +105,12 @@ def _topk_block(
         if kc < c:
             part = np.argpartition(d2, kc - 1, axis=1)[:, :kc]
             cd = np.take_along_axis(d2, part, axis=1)
+            # argpartition splits a tie at the kc-th distance
+            # arbitrarily: redo those rows in full (dist, site_id) order
+            tied = np.nonzero((d2 <= cd.max(axis=1)[:, None]).sum(axis=1) > kc)[0]
+            for r in tied:
+                part[r] = np.lexsort((sid[lo:hi], d2[r]))[:kc]
+                cd[r] = d2[r, part[r]]
             cs = sid[lo:hi][part]
         else:
             cd = d2
@@ -589,19 +601,67 @@ def knn_join_grid_total(
 # ---------------------------------------------------------------------------
 
 
+# a site or point may sit this far (degrees) outside the cell it was
+# quantized to and the exact ring bound still holds: ~10⁴× the float
+# error of quantizing a coordinate of magnitude ≤ 360
+_QUANT = 1e-9
+
+
+def _span_topk(d2: np.ndarray, starts: np.ndarray, cnt: np.ndarray, kk: int,
+               sid: np.ndarray | None = None):
+    """Top-``kk`` positions of each contiguous, non-empty span of ``d2``.
+
+    Spans are ``[starts[i], starts[i] + cnt[i])``.  Ties go to the lower
+    ``sid`` when given, else to the lower position.  Runs ``kk`` rounds
+    of a segmented min: take the span's min distance, the first
+    position holding it, then mask that entry out — linear in
+    ``len(d2)`` per round, with no sort.  Returns (nspan, kk) arrays of
+    dist² (+inf once a span runs out) and positions.  ``d2`` is
+    consumed.
+    """
+    big = np.iinfo(np.int64).max
+    pos = np.arange(len(d2))
+    win_d = np.empty((len(starts), kk))
+    win_p = np.empty((len(starts), kk), dtype=np.int64)
+    for j in range(kk):
+        md = np.minimum.reduceat(d2, starts)
+        tie = d2 == np.repeat(md, cnt)
+        if sid is not None:
+            ms = np.minimum.reduceat(np.where(tie, sid, big), starts)
+            tie &= sid == np.repeat(ms, cnt)
+        mp = np.minimum.reduceat(np.where(tie, pos, big), starts)
+        win_d[:, j] = md
+        win_p[:, j] = mp
+        d2[mp] = np.inf
+    return win_d, win_p
+
+
 class SiteGrid:
     """Cell-bucketed site index for ring-expansion kNN (picklable).
 
-    Sites are bucketed at a single resolution; queries expand Chebyshev
-    rings of cells until the best-k distances are provably final: once
-    ``(r-1) · min(cell_w, cell_h) > kth_best`` no farther ring can
-    improve the answer (cells are axis-aligned squares).
+    Sites are bucketed at one resolution and sorted by (cell, site_id),
+    so every cell is a contiguous span of the site arrays, ordered by
+    the tie-break.  A query expands Chebyshev rings of cells around
+    each point until its best-k distances are provably final.
 
-    ``query_batch`` is fully vectorized over the point axis: per ring
-    level, each (dy, dx) offset maps every live point to at most one
-    cell, whose site span comes from two ``searchsorted`` calls; the
-    variable-length (point, site) pair lists are built with
-    repeat/arange and folded into a running per-point top-k.
+    ``query_batch`` is vectorized over the point axis.  Per ring level:
+
+    - every (live point, ring offset) pair maps to at most one cell,
+      whose site span comes from two ``searchsorted`` calls;
+    - each span keeps its own top-k by ``k`` rounds of
+      ``np.minimum.reduceat`` (``_span_topk``) — linear in the pairs,
+      no sort over them;
+    - only those ≤k winners per span and the live points' k-buffers go
+      into the fold: one more ``_span_topk`` per point, ties by site_id.
+
+    A point stops once the distance from it to the edge of its explored
+    (2r+1)² cell block, less a ``_QUANT`` margin for float cell
+    quantization, exceeds its k-th best distance: no unexplored site
+    can be nearer.  An edge on the grid's lat border, or a lon edge
+    that reaches column 0 or n-1, bounds nothing.  Lon edges are only
+    trusted when the point and every site lie in the cell they were
+    quantized to (lon in [-180, 180)); otherwise the x bound falls back
+    to the wrap-safe ``r · cell_w``.
     """
 
     def __init__(self, rows, res: int = 6):
@@ -609,15 +669,66 @@ class SiteGrid:
         sid = np.array([r[0] for r in rows], dtype=np.int64)
         sx = np.array([r[1] for r in rows], dtype=np.float64)
         sy = np.array([r[2] for r in rows], dtype=np.float64)
-        cell = cells.latlon_to_cell(sy, sx, res)
-        order = np.argsort(cell, kind="stable")
-        self.sid, self.sx, self.sy = sid[order], sx[order], sy[order]
-        self.cell_sorted = cell[order]
         n = 1 << res
         self.n = n
         self.cell_w = 360.0 / n
         self.cell_h = 180.0 / n
         self.max_ring = n
+        ix, iy = cells.latlon_to_ij(sy, sx, res)
+        self.x_edges_ok = bool(self._in_column(sx, ix).all())
+        cell = cells.ij_to_cell(ix, iy, res)
+        order = np.lexsort((sid, cell))
+        self.sid, self.sx, self.sy = sid[order], sx[order], sy[order]
+        self.cell_sorted = cell[order]
+
+    def _in_column(self, x: np.ndarray, ix: np.ndarray) -> np.ndarray:
+        x0 = ix * self.cell_w - 180.0
+        return (x >= x0 - _QUANT) & (x <= x0 + self.cell_w + _QUANT)
+
+    def _ring_spans(self, ix: np.ndarray, iy: np.ndarray, r: int):
+        """(row, lo, cnt) of every non-empty cell span on ring ``r``
+        around the points at (ix, iy); ``row`` indexes those arrays."""
+        if r == 0:
+            dy = dx = np.zeros(1, dtype=np.int64)
+        else:
+            # each cell once: once the ring wraps the lon axis, its rows
+            # list every column and its sides only the columns not yet seen
+            n = self.n
+            row_dx = np.arange(-r, r + 1) if 2 * r + 1 <= n else np.arange(n)
+            side_dx = np.array([-r, r] if 2 * r < n else [r] if 2 * r == n else [],
+                               dtype=np.int64)
+            side_dy = np.arange(-r + 1, r)
+            dy = np.concatenate([np.full(len(row_dx), -r), np.full(len(row_dx), r),
+                                 np.repeat(side_dy, len(side_dx))])
+            dx = np.concatenate([row_dx, row_dx, np.tile(side_dx, len(side_dy))])
+        ny = iy[:, None] + dy[None, :]
+        ok = (ny >= 0) & (ny < self.n)
+        row = np.nonzero(ok)[0]
+        nx = np.mod(ix[:, None] + dx[None, :], self.n)[ok]
+        cc = cells.ij_to_cell(nx, ny[ok], self.res)
+        lo = np.searchsorted(self.cell_sorted, cc, side="left")
+        cnt = np.searchsorted(self.cell_sorted, cc, side="right") - lo
+        nz = cnt > 0
+        return row[nz], lo[nz], cnt[nz]
+
+    def _bound(self, px, py, ix, iy, x_ok, r: int) -> np.ndarray:
+        """Lower bound on the distance from each point to any site
+        outside its explored (2r+1)² block."""
+        n, w, h = self.n, self.cell_w, self.cell_h
+        inf = np.inf
+        by = np.minimum(
+            np.where(iy - r > 0, py - ((iy - r) * h - 90.0), inf),
+            np.where(iy + r < n - 1, ((iy + r + 1) * h - 90.0) - py, inf),
+        )
+        if 2 * r + 1 >= n:
+            bx = np.full(len(px), inf)
+        else:
+            edge = np.minimum(
+                np.where(ix - r > 0, px - ((ix - r) * w - 180.0), inf),
+                np.where(ix + r < n - 1, ((ix + r + 1) * w - 180.0) - px, inf),
+            )
+            bx = np.where(x_ok, edge, r * w)
+        return np.maximum(np.minimum(bx, by) - 2 * _QUANT, 0.0)
 
     def query_batch(self, px: np.ndarray, py: np.ndarray, k: int):
         """k nearest sites per point → (point_idx, site_id, rank, dist)
@@ -627,74 +738,52 @@ class SiteGrid:
         if npts == 0 or kk == 0:
             e = np.empty(0, np.int64)
             return e, e, e, np.empty(0, np.float64)
+        px = np.asarray(px, dtype=np.float64)
+        py = np.asarray(py, dtype=np.float64)
         ix, iy = cells.latlon_to_ij(py, px, self.res)
+        x_ok = self.x_edges_ok & self._in_column(px, ix)
         # running top-k per point: (dist², site_id), +inf padded
         best_d = np.full((npts, kk), np.inf)
         best_s = np.full((npts, kk), -1, dtype=np.int64)
         live = np.arange(npts)
-        lb_unit = min(self.cell_w, self.cell_h)
         r = 0
         while r <= self.max_ring and len(live):
-            offsets = (
-                [(0, 0)] if r == 0 else
-                [(dy, dx) for dy in range(-r, r + 1)
-                 for dx in range(-r, r + 1)
-                 if max(abs(dy), abs(dx)) == r]
-            )
-            pr_idx: list[np.ndarray] = []
-            pr_site: list[np.ndarray] = []
-            for dy, dx in offsets:
-                ny = iy[live] + dy
-                ok = (ny >= 0) & (ny < self.n)
-                if not ok.any():
-                    continue
-                sub = live[ok]
-                nx = np.mod(ix[sub] + dx, self.n)
-                cc = cells.ij_to_cell(nx, ny[ok], self.res)
-                lo = np.searchsorted(self.cell_sorted, cc, side="left")
-                hi = np.searchsorted(self.cell_sorted, cc, side="right")
-                cnt = hi - lo
-                nz = cnt > 0
-                if not nz.any():
-                    continue
-                lo, cnt, subnz = lo[nz], cnt[nz], sub[nz]
-                # variable-length span gather: repeat + cumsum arange
-                reps = np.repeat(subnz, cnt)
-                starts = np.repeat(lo, cnt)
-                within = np.arange(len(reps)) - np.repeat(
-                    np.cumsum(cnt) - cnt, cnt
-                )
-                pr_idx.append(reps)
-                pr_site.append(starts + within)
-            if pr_idx:
-                pi = np.concatenate(pr_idx)
-                si = np.concatenate(pr_site)
-                d2 = (px[pi] - self.sx[si]) ** 2 + (py[pi] - self.sy[si]) ** 2
-                # fold pairs into the running top-k: concat + partial sort
-                allp = np.concatenate([pi, np.repeat(np.arange(npts), kk)])
-                alld = np.concatenate([d2, best_d.ravel()])
-                alls = np.concatenate([self.sid[si], best_s.ravel()])
-                order = np.lexsort((alls, alld, allp))
-                allp, alld, alls = allp[order], alld[order], alls[order]
-                # first kk entries per point (groups are contiguous)
-                grp_start = np.searchsorted(allp, np.arange(npts), "left")
-                take = (grp_start[:, None] + np.arange(kk)[None, :])
-                grp_end = np.append(grp_start[1:], len(allp))
-                valid = take < grp_end[:, None]
-                take = np.minimum(take, len(allp) - 1)
-                # ring cells are disjoint across rounds and live-point
-                # filtering only shrinks the set, so a site enters the
-                # buffer at most once — no dedup needed
-                best_d = np.where(valid, alld[take], np.inf)
-                best_s = np.where(valid, alls[take], -1)
-            kth = best_d[:, kk - 1]
-            done = (kth < np.inf) & (
-                ((r) * lb_unit) ** 2 > kth
-            )
-            live = np.arange(npts)[~done]
+            row, lo, cnt = self._ring_spans(ix[live], iy[live], r)
+            if len(row):
+                # (pair → span) layout: span i owns pairs
+                # [first[i], first[i] + cnt[i]) and sites lo[i] + j
+                first = np.cumsum(cnt) - cnt
+                si = np.arange(int(cnt.sum())) + np.repeat(lo - first, cnt)
+                p = live[row]
+                d2 = ((np.repeat(px[p], cnt) - self.sx[si]) ** 2
+                      + (np.repeat(py[p], cnt) - self.sy[si]) ** 2)
+                # a NaN distance never ranks, as if the site were absent
+                d2[np.isnan(d2)] = np.inf
+                wd, wp = _span_topk(d2, first, cnt, kk)
+                # fold, again by span top-k: each live point's segment
+                # holds its k-buffer, then its spans' winners (spans come
+                # point-major from _ring_spans)
+                ok = (wd < np.inf).ravel()
+                wq = np.repeat(row, kk)[ok]
+                nw = np.bincount(wq, minlength=len(live))
+                seg = np.cumsum(nw) - nw + kk * np.arange(len(live))
+                at = np.concatenate([(seg[:, None] + np.arange(kk)).ravel(),
+                                     np.arange(len(wq)) + kk * (wq + 1)])
+                cd = np.empty(len(at))
+                cs = np.empty(len(at), dtype=np.int64)
+                cd[at] = np.concatenate([best_d[live].ravel(), wd.ravel()[ok]])
+                cs[at] = np.concatenate([best_s[live].ravel(),
+                                         self.sid[si[wp.ravel()[ok]]]])
+                fd, fp = _span_topk(cd, seg, nw + kk, kk, sid=cs)
+                best_d[live] = fd
+                best_s[live] = cs[fp]
+            kth = best_d[live, kk - 1]
+            bound = self._bound(px[live], py[live], ix[live], iy[live],
+                                x_ok[live], r)
+            live = live[~(bound * bound > kth)]
             r += 1
+        keep = (best_d < np.inf).ravel()
         ranks = np.tile(np.arange(1, kk + 1, dtype=np.int64), npts)
-        keep = best_s.ravel() >= 0
         pidx = np.repeat(np.arange(npts), kk)
         return (
             pidx[keep],
@@ -716,12 +805,12 @@ def knn_join_cells(
     sx: str = "x",
     sy: str = "y",
 ) -> DataFrame:
-    """Ring-expansion kNN with a per-executor cell-bucketed site grid.
+    """Ring-expansion kNN with a per-task cell-bucketed site grid.
 
-    Still ships the site table via broadcast (the grid build is once
-    per executor); for a truly unbroadcastable site side the same
-    SiteGrid logic runs per cell-group after a cell equi-join — wire
-    that variant when a use case needs it.
+    Still ships the site table via broadcast (the grid builds in ~1 ms
+    per task); for a truly unbroadcastable site side the same SiteGrid
+    logic runs per cell-group after a cell equi-join — wire that
+    variant when a use case needs it.
     """
     if point_cols is None:
         point_cols = [c for c in points.columns if c not in (x, y)]
@@ -733,17 +822,23 @@ def knn_join_cells(
     )
 
     def probe(batches):
+        # mapInArrow: payload columns (urls!) stay in Arrow buffers —
+        # the neighbor gather is a C++ take(), no per-row Python objects
+        import pyarrow as pa
+
         grid = SiteGrid(bc.value[0], res=bc.value[1])
-        for pdf in batches:
-            px = pdf[x].to_numpy(np.float64)
-            py = pdf[y].to_numpy(np.float64)
+        for batch in batches:
+            px = batch.column(x).to_numpy(zero_copy_only=False)
+            py = batch.column(y).to_numpy(zero_copy_only=False)
             pidx, sids, ranks, dists = grid.query_batch(px, py, k)
             if len(pidx) == 0:
                 continue
-            out = pdf.iloc[pidx][point_cols].reset_index(drop=True)
-            out["site_id"] = sids
-            out["rank"] = ranks
-            out["dist"] = dists
-            yield out
+            at = pa.array(pidx)
+            cols = [batch.column(c).take(at) for c in point_cols]
+            cols += [pa.array(sids, type=pa.int64()),
+                     pa.array(ranks, type=pa.int64()),
+                     pa.array(dists, type=pa.float64())]
+            yield pa.RecordBatch.from_arrays(
+                cols, point_cols + ["site_id", "rank", "dist"])
 
-    return src.mapInPandas(probe, schema=schema)
+    return src.mapInArrow(probe, schema=schema)

@@ -66,9 +66,15 @@ def read_asc(path: str) -> tuple[np.ndarray, tuple, float | None]:
         raise ValueError(
             f"AAIGrid data has {len(vals)} values, expected {w * h}"
         )
-    arr = np.array(vals, dtype=np.float64).reshape(h, w)
-    if all("." not in v and "e" not in v and "E" not in v for v in vals):
-        arr = arr.astype(np.int32)
+    if all(v.lstrip("+-").isdigit() for v in vals):
+        # exact integer parse; int32 (GDAL's Int32 band) when every
+        # value fits, int64 otherwise
+        arr = np.array(vals, dtype=np.int64).reshape(h, w)
+        i32 = np.iinfo(np.int32)
+        if arr.size == 0 or (arr.min() >= i32.min and arr.max() <= i32.max):
+            arr = arr.astype(np.int32)
+    else:
+        arr = np.array(vals, dtype=np.float64).reshape(h, w)
     gt = (xll, cs, 0.0, yll + h * cs, 0.0, -cs)
     return arr, gt, nodata
 

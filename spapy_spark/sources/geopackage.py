@@ -21,7 +21,8 @@ Read paths:
 
 GPB header (spec §2.1.3): magic 'GP', version, flags
 (bit0 endianness of the envelope/srs, bits1-3 envelope indicator →
-0/32/48/48/64 bytes), int32 srs_id, envelope, then WKB verbatim.
+0/32/48/48/64 bytes, bit4 empty geometry, bit5 extended type — not
+supported), int32 srs_id, envelope, then WKB verbatim.
 """
 
 from __future__ import annotations
@@ -48,10 +49,12 @@ def gpb_to_wkb(blob: bytes | None) -> bytes | None:
     if blob[:2] != b"GP":
         raise ValueError("not a GeoPackageBinary blob (bad magic)")
     flags = blob[3]
+    if flags & 0x20:
+        raise NotImplementedError("ExtendedGeoPackageBinary blobs are not supported")
     env = (flags >> 1) & 0x07
     if env not in _ENV_LEN:
         raise ValueError(f"invalid GPB envelope indicator {env}")
-    if flags & 0x20:  # empty-geometry flag
+    if flags & 0x10:  # empty-geometry flag
         return None
     return blob[8 + _ENV_LEN[env]:]
 
@@ -117,9 +120,10 @@ def _q(c: str) -> str:
     return '"' + c.replace('"', '""') + '"'
 
 
-def _rtree_name(con, table: str) -> str | None:
-    """Name of the table's gpkg_rtree_index virtual table, if any."""
-    nm = f"rtree_{table}_geom"
+def _rtree_name(con, table: str, gcol: str) -> str | None:
+    """Name of the gpkg_rtree_index virtual table over ``table``'s
+    geometry column ``gcol``, if any."""
+    nm = f"rtree_{table}_{gcol}"
     row = con.execute(
         "SELECT name FROM sqlite_master WHERE name = ?", (nm,)
     ).fetchone()
@@ -142,8 +146,10 @@ def read_geopackage(
     joins its rowid range against the index, so only intersecting
     features are ever materialized — predicate pushdown INTO the
     single-file store, the same property the parquet scans get from
-    PushedFilters.  Without an index the bbox falls back to a plain
-    scan-and-filter inside SQLite (still no Python-side waste)."""
+    PushedFilters.  The index holds float32-rounded boxes, so its hits
+    are candidates: each is refined by its exact geometry envelope,
+    the same filter a file without an index gets after a plain scan.
+    Both paths return the same rows."""
     con = _open_ro(path)
     try:
         t, gcol = _resolve(con, table)
@@ -156,7 +162,7 @@ def read_geopackage(
         sample = con.execute(
             f'SELECT {", ".join(_q(c) for c in cols)} FROM "{t}" LIMIT 256'
         ).fetchall()
-        rtree = _rtree_name(con, t) if bbox is not None else None
+        rtree = _rtree_name(con, t, gcol) if bbox is not None else None
     finally:
         con.close()
 
@@ -217,9 +223,10 @@ def read_geopackage(
                     if not rows:
                         continue
                     out = _rows_to_pdf(cols, gcol, rows)
-                    if box is not None and rtree is None:
-                        # no index in the file: exact bbox filter on
-                        # decoded envelopes, still SQLite/Arrow-side
+                    if box is not None:
+                        # exact bbox filter on decoded envelopes: the
+                        # whole filter without an index, and the refine
+                        # of its float32-rounded candidates with one
                         from ..geometry import kernels, wkb as _wkb
 
                         keep = []

@@ -61,7 +61,7 @@ def tiles_from_array(
                 )
     df = spark.createDataFrame(rows, schema=RASTER_SCHEMA)
     return df.repartition(
-        min(len(rows), spark.sparkContext.defaultParallelism)
+        max(1, min(len(rows), spark.sparkContext.defaultParallelism))
     )
 
 

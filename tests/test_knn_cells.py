@@ -5,6 +5,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from spapy_spark import cells
 from spapy_spark.operators import knn
 from spapy_spark.operators.knn import SiteGrid
 from spapy_spark.sources import synth
@@ -193,3 +194,157 @@ def test_knn_grid_exact_k_exceeds_sites(spark):
     )
     rows = knn.knn_join_grid_exact(pts, sites, k=9, res=3).collect()
     assert len(rows) == 2 * 5
+
+
+# ---------------------------------------------------------------------------
+# SiteGrid kernel (span top-k fold + exact edge bound) against brute force
+# ---------------------------------------------------------------------------
+
+
+def _assert_grid_matches_brute(rows, px, py, k, res):
+    """SiteGrid.query_batch must return exactly what the brute-force
+    _topk_block returns: same (point, site_id, rank) and bit-equal dist."""
+    px, py = np.asarray(px, np.float64), np.asarray(py, np.float64)
+    got = SiteGrid(rows, res=res).query_batch(px, py, k)
+    sid = np.array([r[0] for r in rows], np.int64)
+    sx = np.array([r[1] for r in rows], np.float64)
+    sy = np.array([r[2] for r in rows], np.float64)
+    want = knn._topk_block(px, py, sx, sy, sid, k)
+    for name, a, b in zip(("point", "site_id", "rank", "dist"), got, want):
+        np.testing.assert_array_equal(a, b, err_msg=name)
+    return got
+
+
+@pytest.mark.parametrize("res", [3, 6])
+def test_sitegrid_exact_ties_lower_site_id_wins(res):
+    """Sites at exactly equal distance (mirror images, within one cell
+    and across cell borders) rank by site_id; ids are listed out of
+    order and include negatives."""
+    px = np.array([0.5, 10.0, -33.75, 100.0])
+    py = np.array([0.5, 20.0, 11.25, -40.0])
+    rows = []
+    sid = 50
+    for x, y in zip(px, py):
+        for d in (0.25, 1.0, 4.0, 30.0):
+            for ddx, ddy in ((d, 0.0), (-d, 0.0), (0.0, d), (0.0, -d)):
+                rows.append((sid, x + ddx, y + ddy))
+                sid -= 7
+    rows = rows[::-1]
+    for k in (1, 2, 3, 5, 9):
+        _assert_grid_matches_brute(rows, px, py, k, res)
+    pi, si, rk, _ = SiteGrid(rows, res=res).query_batch(px[:1], py[:1], 2)
+    tied = sorted(s for s, x, y in rows if (x, y) in
+                  ((0.75, 0.5), (0.25, 0.5), (0.5, 0.75), (0.5, 0.25)))
+    assert si.tolist() == tied[:2]
+
+
+@pytest.mark.parametrize("res", [3, 6])
+def test_sitegrid_points_on_cell_edges(res):
+    n = 1 << res
+    cw, ch = 360.0 / n, 180.0 / n
+    rng = np.random.default_rng(5)
+    rows = [(int(i), float(x), float(y)) for i, (x, y) in enumerate(
+        zip(rng.uniform(-180, 180, 300), rng.uniform(-80, 80, 300)))]
+    gx = np.arange(n) * cw - 180.0
+    gy = np.arange(1, n) * ch - 90.0
+    px = np.concatenate([gx, np.full(len(gy), 12.0 * cw - 180.0), gx[::3]])
+    py = np.concatenate([np.full(n, gy[n // 2]), gy, gy[: len(gx[::3])]])
+    _assert_grid_matches_brute(rows, px, py, 3, res)
+
+
+@pytest.mark.parametrize("axis", ["x", "y"])
+def test_sitegrid_block_edge_quantization_margin(axis):
+    """Site B lies a few ulps inside the point's cell, but float
+    quantization puts it in the next cell; site A lies inside the cell
+    and is farther than B but nearer than the cell edge.  Without the
+    quantization margin the point would stop after ring 0 on A."""
+    res = 6
+    edge = 5.625 if axis == "x" else 2.8125  # right/top edge of the cell
+    b = np.nextafter(edge, -np.inf)
+    p, a = edge - 1.0, np.nextafter(edge - 2.0, np.inf)
+    px, py = (p, 1.40625) if axis == "x" else (2.8125, p)
+    ax, ay = (a, py) if axis == "x" else (px, a)
+    bx, by = (b, py) if axis == "x" else (px, b)
+    # the construction's premises: B quantizes across the edge, and
+    # d(B) < d(A) < distance to the edge
+    pi_, pj = cells.latlon_to_ij(np.array([py]), np.array([px]), res)
+    bi, bj = cells.latlon_to_ij(np.array([by]), np.array([bx]), res)
+    assert (bi - pi_, bj - pj) == ((1, 0) if axis == "x" else (0, 1))
+    d2a = (px - ax) ** 2 + (py - ay) ** 2
+    d2b = (px - bx) ** 2 + (py - by) ** 2
+    assert d2b < d2a < 1.0
+    rows = [(1, ax, ay), (2, bx, by), (3, -120.0, -50.0), (4, 150.0, 60.0)]
+    pi, si, rk, d = _assert_grid_matches_brute(rows, [px], [py], 1, res)
+    assert si.tolist() == [2]
+
+
+@pytest.mark.parametrize("res", [3, 6])
+def test_sitegrid_antimeridian(res):
+    """Planar distance does not wrap, but the grid's lon axis does;
+    a site whose lon rounds onto +180 sits in column 0."""
+    near = [179.99, -179.99, 180.0 - 1e-12, -180.0, 179.0, -179.5]
+    px = np.array(near + [0.0, 90.0])
+    py = np.array([10.0, 10.0, -5.0, 0.0, 45.0, -45.0, 0.0, 30.0])
+    base = [(10, 179.9, 10.0), (11, -179.9, 10.0), (12, 178.0, -5.0),
+            (13, -178.0, 0.0), (14, 170.0, 40.0), (15, -170.0, -40.0),
+            (16, 0.0, 60.0), (17, 90.0, -60.0)]
+    wrapped = base + [(18, float(np.nextafter(180.0, -np.inf)), 9.0)]
+    assert cells.latlon_to_ij(np.array([9.0]), np.array([wrapped[-1][1]]),
+                              res)[0][0] == 0
+    assert SiteGrid(base, res=res).x_edges_ok
+    assert not SiteGrid(wrapped, res=res).x_edges_ok
+    for rows in (base, wrapped):
+        for k in (1, 3):
+            _assert_grid_matches_brute(rows, px, py, k, res)
+    # the wrapped site (column 0, distance 1.0) beats the one in the
+    # point's own last-column cell (distance 1.2): trusting the lon
+    # edges here would stop after ring 0 on the wrong site
+    yc = 90.0 / (1 << res)  # center of the first row north of 0°
+    rows = [(1, 177.8, yc), (2, float(np.nextafter(180.0, -np.inf)), yc),
+            (3, -100.0, -70.0)]
+    pi, si, rk, d = _assert_grid_matches_brute(rows, [179.0], [yc], 1, res)
+    assert si.tolist() == [2]
+
+
+@pytest.mark.parametrize("res", [3, 6])
+def test_sitegrid_empty_cells_and_k_beyond_sites(res):
+    """Five sites leave most cells empty; k above |sites| returns every
+    site once per point, ranked."""
+    rows = [(5, -150.0, 70.0), (3, 120.0, -60.0), (9, 0.1, 0.1),
+            (1, 60.0, 30.0), (7, -60.0, -30.0)]
+    rng = np.random.default_rng(9)
+    px, py = rng.uniform(-180, 180, 200), rng.uniform(-90, 90, 200)
+    for k in (1, 4, 5, 9):
+        pi, si, rk, d = _assert_grid_matches_brute(rows, px, py, k, res)
+        assert len(si) == 200 * min(k, 5)
+    assert len(SiteGrid([], res=res).query_batch(px, py, 3)[0]) == 0
+
+
+def test_sitegrid_nan_coordinates_never_rank():
+    """A NaN point gets no neighbors and a NaN site is never one; the
+    other points' answers are unchanged."""
+    rows = [(1, 10.0, 10.0), (2, np.nan, 11.0), (3, 12.0, 12.0),
+            (4, -50.0, -20.0)]
+    px, py = np.array([10.5, np.nan, -49.0]), np.array([10.5, 5.0, -21.0])
+    pi, si, rk, d = SiteGrid(rows, res=6).query_batch(px, py, 3)
+    assert pi.tolist() == [0, 0, 0, 2, 2, 2]
+    assert si.tolist() == [1, 3, 4, 4, 1, 3]
+    finite = [r for r in rows if r[0] != 2]
+    _assert_grid_matches_brute(finite, px[[0, 2]], py[[0, 2]], 3, 6)
+
+
+@pytest.mark.parametrize("res", [3, 6])
+def test_sitegrid_workload_points_match_bruteforce(res):
+    rows = [(r[0], r[2], r[3]) for r in synth._site_rows(2000)]
+    _, lat, lon = synth.doc_coords(np.arange(40_000, 43_000))
+    _assert_grid_matches_brute(rows, lon, lat, 3, res)
+
+
+def test_knn_cells_plan_is_arrow_native(spark):
+    sites = synth.sites(spark, 20)
+    pts = spark.createDataFrame([("u", 1.0, 2.0)],
+                                "url string, lat double, lon double")
+    df = knn.knn_join_cells(pts, sites, k=2, point_cols=["url"])
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "MapInArrow" in plan and "MapInPandas" not in plan
+    assert [r["url"] for r in df.collect()] == ["u", "u"]

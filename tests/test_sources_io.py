@@ -57,6 +57,18 @@ def test_asc_roundtrip_int_and_center_header(tmp_path):
     np.testing.assert_array_equal(back2, [[1, 2], [3, 4]])
 
 
+def test_asc_int_grid_beyond_int32(tmp_path):
+    p = str(tmp_path / "big.asc")
+    with open(p, "w") as f:
+        f.write("ncols 3\nnrows 1\nxllcorner 0\nyllcorner 0\n"
+                "cellsize 1\n3000000000 -7 -3000000000\n")
+    back, _, _ = aaigrid.read_asc(p)
+    assert back.dtype == np.int64
+    assert back.tolist() == [[3_000_000_000, -7, -3_000_000_000]]
+    aaigrid.write_asc(p, np.array([[1, -2]], np.int32))
+    assert aaigrid.read_asc(p)[0].dtype == np.int32
+
+
 def test_asc_rejects_non_square_cells(tmp_path):
     with pytest.raises(ValueError, match="square"):
         aaigrid.write_asc(str(tmp_path / "x.asc"), np.zeros((2, 2)),
@@ -66,6 +78,15 @@ def test_asc_rejects_non_square_cells(tmp_path):
 # ---------------------------------------------------------------------------
 # write_raster extension map
 # ---------------------------------------------------------------------------
+
+
+def test_tiles_from_array_empty(spark):
+    from spapy_spark.sources.synth import RASTER_SCHEMA
+
+    for a in (np.zeros((0, 5)), np.zeros((2, 0, 0), np.float32)):
+        df = io.tiles_from_array(spark, a, tile=4)
+        assert df.count() == 0
+        assert df.schema == spark.createDataFrame([], RASTER_SCHEMA).schema
 
 
 def test_write_raster_ext_map(tmp_path):
@@ -313,9 +334,14 @@ def test_gpb_header_variants():
             + st.pack("<4d", 1, 1, 2, 2) + w)
     assert geopackage.gpb_to_wkb(blob) == w
     assert geopackage.gpb_to_wkb(None) is None
-    # empty-geometry flag
-    blob_e = b"GP" + bytes([0, 0x21]) + st.pack("<i", 0) + w
+    # empty-geometry flag (bit 4)
+    blob_e = b"GP" + bytes([0, 0x11]) + st.pack("<i", 0) + w
     assert geopackage.gpb_to_wkb(blob_e) is None
+    # extended-type flag (bit 5) is not the empty flag: refuse, don't
+    # read the geometry as empty
+    blob_x = b"GP" + bytes([0, 0x21]) + st.pack("<i", 4326) + w
+    with pytest.raises(NotImplementedError, match="Extended"):
+        geopackage.gpb_to_wkb(blob_x)
     with pytest.raises(ValueError, match="magic"):
         geopackage.gpb_to_wkb(b"XX" + blob[2:])
 
@@ -399,6 +425,62 @@ def test_gpkg_rtree_bbox_pushdown(spark, tmp_path):
     assert got_plain == exp
     # no bbox → everything, index or not
     assert geopackage.read_geopackage(spark, p_idx).count() == 200
+
+
+def test_gpkg_rtree_bbox_refines_float32_hits(spark, tmp_path):
+    """The R*Tree stores float32 boxes rounded outward: a feature whose
+    exact max x ends just left of the window is an index hit, and must
+    be refined away as it is without the index."""
+    edge = 10.0000001  # window min x: not a float32
+    near = 10.00000005  # feature max x: below edge, rounds up past it
+    assert float(np.float32(near)) < edge < float(np.nextafter(
+        np.float32(near), np.float32(np.inf)))
+    pdf = pd.DataFrame({
+        "name": ["left", "inside", "far"],
+        "geometry": [wkb.dumps(_poly(near - 1.0, 0.0)),
+                     wkb.dumps(_poly(10.5, 0.5)),
+                     wkb.dumps(_poly(50.0, 50.0))],
+    })
+    box = (edge, 0.0, 20.0, 20.0)
+    got = {}
+    for idx in (True, False):
+        p = str(tmp_path / f"edge_{idx}.gpkg")
+        geopackage.write_geopackage(pdf, p, spatial_index=idx)
+        got[idx] = sorted(r["name"] for r in geopackage.read_geopackage(
+            spark, p, partitions=2, bbox=box).collect())
+    con = sqlite3.connect(str(tmp_path / "edge_True.gpkg"))
+    try:  # the premise: the index does return the left feature
+        assert con.execute(
+            "SELECT count(*) FROM rtree_features_geom"
+            " WHERE maxx >= ? AND minx <= ?", (edge, box[2])).fetchone()[0] == 2
+    finally:
+        con.close()
+    assert got[True] == got[False] == ["inside"]
+
+
+def test_gpkg_rtree_follows_geometry_column_name(spark, tmp_path):
+    """The index table is named after the registered geometry column,
+    not a fixed ``geom``: a file whose column is ``shape`` still reads
+    its bbox through ``rtree_<table>_shape``."""
+    pdf = _mk_pdf(20)
+    p = str(tmp_path / "shape.gpkg")
+    geopackage.write_geopackage(pdf, p, spatial_index=True)
+    con = sqlite3.connect(p)
+    try:
+        con.execute('ALTER TABLE features RENAME COLUMN geom TO shape')
+        con.execute("UPDATE gpkg_geometry_columns SET column_name='shape'")
+        con.execute("ALTER TABLE rtree_features_geom"
+                    " RENAME TO rtree_features_shape")
+        # drop f3's index entry: only an index read can miss it
+        fid3 = con.execute(
+            "SELECT fid FROM features WHERE name='f3'").fetchone()[0]
+        con.execute("DELETE FROM rtree_features_shape WHERE id=?", (fid3,))
+        con.commit()
+    finally:
+        con.close()
+    got = {r["name"] for r in geopackage.read_geopackage(
+        spark, p, bbox=(2.5, -1.0, 4.5, 0.5)).collect()}
+    assert got == {"f2", "f4"}
 
 
 def test_read_any_dispatches_warc(spark, tmp_path):
