@@ -7,10 +7,10 @@ compare against a reimplemented nested loop) but execute as a proper
 distributed join:
 
 - **broadcast path** (`pip_join_broadcast`): the polygon layer is small
-  (zones).  It is decoded once per executor into a :class:`ZoneIndex`
-  (cell-bucketed, the STRtree role) and probed from ``mapInPandas`` —
-  no shuffle of the document side at all.  This is the plan the north
-  rule wants at 10^12 docs × O(10^5) zones.
+  (zones).  It is decoded once per Python worker into a
+  :class:`ZoneIndex` (cell-bucketed, the STRtree role) and probed from
+  ``mapInArrow`` — no shuffle of the document side at all.  This is the
+  plan the north rule wants at 10^12 docs × O(10^5) zones.
 - **cell-join path** (`pip_join_cells`): both sides large.  Zones
   explode to their covering cells, points encode their cell, Catalyst
   hash-joins on the integer cell id, then candidates are refined with
@@ -25,6 +25,8 @@ true pair exactly once — no dedup pass needed.  Refinement uses
 
 from __future__ import annotations
 
+import hashlib
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
@@ -35,21 +37,23 @@ from ..geometry import kernels, wkb
 
 _PREDICATES = ("covers", "contains")
 
-# Per-worker-process cache of built ZoneIndex objects.  Python workers
-# are reused across tasks (spark.python.worker.reuse), so the index
-# build — the dominant per-task cost at high parallelism — happens once
-# per executor worker instead of once per task.  Bounded LRU-ish.
+# Per-worker-process cache of built ZoneIndex objects, keyed by the
+# content of the zone rows (see _broadcast_zones).  Python workers are
+# reused across tasks (spark.python.worker.reuse), so the index build —
+# the dominant per-task cost at high parallelism — happens once per
+# worker per zone set, across tasks AND operator calls (streaming
+# micro-batches reuse it).  Bounded LRU.
 _INDEX_CACHE: dict[str, "ZoneIndex"] = {}
 _INDEX_CACHE_MAX = 4
 
 
 def _cached_index(token: str, build) -> "ZoneIndex":
-    idx = _INDEX_CACHE.get(token)
+    idx = _INDEX_CACHE.pop(token, None)
     if idx is None:
         idx = build()
         if len(_INDEX_CACHE) >= _INDEX_CACHE_MAX:
             _INDEX_CACHE.pop(next(iter(_INDEX_CACHE)))
-        _INDEX_CACHE[token] = idx
+    _INDEX_CACHE[token] = idx
     return idx
 
 
@@ -63,15 +67,16 @@ class ZoneIndex:
 
     def __init__(self, rows, res: int | None = None, max_cells_per_zone: int = 256):
         """``rows``: iterable of (zone_id, wkb_bytes)."""
-        self.zone_ids: list[int] = []
+        zone_ids: list[int] = []
         self.parts: list[list[list[np.ndarray]]] = []  # zone → polygon parts → rings
         self.bboxes: list[tuple] = []
         for zid, buf in rows:
             g = wkb.loads(bytes(buf))
             parts = list(wkb.polygons_of(g))
-            self.zone_ids.append(int(zid))
+            zone_ids.append(int(zid))
             self.parts.append(parts)
             self.bboxes.append(kernels.geom_bounds(g))
+        self.zone_ids = np.array(zone_ids, dtype=np.int64)
         if res is None:
             res = self._auto_res()
         self.res = res
@@ -133,7 +138,13 @@ class ZoneIndex:
         return res
 
     def query(self, px: np.ndarray, py: np.ndarray, predicate: str = "covers"):
-        """Return (point_idx, zone_id) int64 arrays of all matches.
+        """Return (point_idx, zone_id) int64 arrays of all matches."""
+        pi, zp = self.query_pos(px, py, predicate)
+        return pi, self.zone_ids[zp]
+
+    def query_pos(self, px: np.ndarray, py: np.ndarray, predicate: str = "covers"):
+        """Return (point_idx, zone_pos) int64 arrays of all matches, where
+        ``zone_pos`` indexes ``self.zone_ids``.
 
         Zone-grouped probe: per level, sort points by cell once, locate
         each bucket entry's point span with two ``searchsorted`` calls,
@@ -147,7 +158,6 @@ class ZoneIndex:
             return np.empty(0, np.int64), np.empty(0, np.int64)
         out_p: list[np.ndarray] = []
         out_z: list[np.ndarray] = []
-        zone_ids = np.array(self.zone_ids, dtype=np.int64)
         for lvl, bcell, bzone, bfull in self.levels:
             pcell = cells.latlon_to_cell(py, px, lvl)
             order = np.argsort(pcell, kind="stable")
@@ -161,7 +171,7 @@ class ZoneIndex:
             # full-interior cells: every point in the span is a hit
             if bf.any():
                 spans = [order[l:h] for l, h in zip(lo[bf], hi[bf])]
-                zrep = np.repeat(zone_ids[bz[bf]], hi[bf] - lo[bf])
+                zrep = np.repeat(bz[bf], hi[bf] - lo[bf])
                 out_p.append(np.concatenate(spans))
                 out_z.append(zrep)
             # boundary cells: group spans by zone, one refine per zone
@@ -184,7 +194,7 @@ class ZoneIndex:
                     hit |= self._refine(cx, cy, rings, predicate)
                 if hit.any():
                     out_p.append(cand[hit])
-                    out_z.append(np.full(int(hit.sum()), zone_ids[zi], np.int64))
+                    out_z.append(np.full(int(hit.sum()), zi, np.int64))
         if not out_p:
             return np.empty(0, np.int64), np.empty(0, np.int64)
         return np.concatenate(out_p), np.concatenate(out_z)
@@ -221,6 +231,48 @@ def _point_schema(df: DataFrame, point_cols: list[str]) -> StructType:
     return StructType(fields + [StructField("zone_id", LongType(), False)])
 
 
+def _broadcast_zones(
+    zones: DataFrame, zone_id: str, geometry: str, res: int | None
+):
+    """Driver side of the broadcast plans: collect the zone rows and
+    broadcast them.  Returns ``(token, index)``: ``token`` is a sha256
+    over ``res`` and every ``(zone_id, wkb)`` row, and ``index()`` is
+    the worker-side loader of the cached :class:`ZoneIndex`.
+
+    Keying the cache on content, not on the call, lets repeat calls over
+    the same zones reuse every worker's index; any changed vertex, id or
+    ``res`` yields a new token and a fresh build.  On a cache hit the
+    broadcast value is never unpickled.
+    """
+    zrows = [(int(r[zone_id]), bytes(r[geometry])) for r in
+             zones.select(zone_id, geometry).collect()]
+    h = hashlib.sha256(f"res={res!r};".encode())
+    for zid, buf in zrows:
+        h.update(f"{zid}:{len(buf)}:".encode())
+        h.update(buf)
+    token = h.hexdigest()
+    bc = zones.sparkSession.sparkContext.broadcast((zrows, res))
+
+    def index() -> ZoneIndex:
+        return _cached_index(token, lambda: ZoneIndex(*bc.value))
+
+    return token, index
+
+
+def _probe_batches(batches, idx: ZoneIndex, x: str, y: str, predicate: str):
+    """The broadcast probe: per Arrow batch, ``(batch, point_idx,
+    zone_pos)`` of every match (``zone_pos`` indexes ``idx.zone_ids``)."""
+    for batch in batches:
+        px = batch.column(x).to_numpy(zero_copy_only=False)
+        py = batch.column(y).to_numpy(zero_copy_only=False)
+        pi, zp = idx.query_pos(
+            np.ascontiguousarray(px, np.float64),
+            np.ascontiguousarray(py, np.float64),
+            predicate,
+        )
+        yield batch, pi, zp
+
+
 def pip_join_broadcast(
     points: DataFrame,
     zones: DataFrame,
@@ -240,13 +292,7 @@ def pip_join_broadcast(
     """
     if point_cols is None:
         point_cols = [c for c in points.columns if c not in (x, y)]
-    import uuid
-
-    spark = points.sparkSession
-    zrows = [(r[zone_id], bytes(r[geometry])) for r in
-             zones.select(zone_id, geometry).collect()]
-    bc = spark.sparkContext.broadcast((zrows, res))
-    token = uuid.uuid4().hex  # cache key: one index per operator call
+    _, index = _broadcast_zones(zones, zone_id, geometry, res)
     schema = _point_schema(points, point_cols)
     src = points.select(*point_cols, x, y).where(
         F.col(x).isNotNull() & F.col(y).isNotNull()
@@ -257,18 +303,10 @@ def pip_join_broadcast(
         # the hit gather is a C++ take(), no per-row Python objects.
         import pyarrow as pa
 
-        rows, res_ = bc.value
-        idx = _cached_index(token, lambda: ZoneIndex(rows, res=res_))
-        for batch in batches:
-            px = batch.column(x).to_numpy(zero_copy_only=False)
-            py = batch.column(y).to_numpy(zero_copy_only=False)
-            pi, zi = idx.query(
-                np.ascontiguousarray(px, np.float64),
-                np.ascontiguousarray(py, np.float64),
-                predicate,
-            )
+        idx = index()
+        for batch, pi, zp in _probe_batches(batches, idx, x, y, predicate):
             cols = [batch.column(c).take(pa.array(pi)) for c in point_cols]
-            cols.append(pa.array(zi, type=pa.int64()))
+            cols.append(pa.array(idx.zone_ids[zp], type=pa.int64()))
             yield pa.RecordBatch.from_arrays(cols, point_cols + ["zone_id"])
 
     return src.mapInArrow(probe, schema=schema)
@@ -284,43 +322,29 @@ def pip_count_by_zone(
     predicate: str = "covers",
     res: int | None = None,
 ) -> DataFrame:
-    """Broadcast PIP with map-side combine: per-zone counts computed
-    inside the probe (np.bincount per batch), so only ~|zones| rows per
-    task cross the Python→JVM boundary and the shuffle.  This is the
-    tile-assignment-count plan for the north rule's throughput metric —
-    identical match semantics to :func:`pip_join_broadcast`, minus the
-    materialized pair stream nobody aggregates twice.
+    """Broadcast PIP with map-side combine: the :func:`pip_join_broadcast`
+    probe plus a per-task ``np.bincount`` over zone positions, so only
+    ~|zones| rows per task cross the Python→JVM boundary and the
+    shuffle.  This is the tile-assignment-count plan for the north
+    rule's throughput metric — identical match semantics, minus the
+    materialized pair stream nobody aggregates twice.  Counting over
+    positions (not id values) keeps negative and huge zone ids exact.
     """
-    import uuid
-
     import pyarrow as pa
 
-    spark = points.sparkSession
-    zrows = [(r[zone_id], bytes(r[geometry])) for r in
-             zones.select(zone_id, geometry).collect()]
-    bc = spark.sparkContext.broadcast((zrows, res))
-    token = uuid.uuid4().hex
+    _, index = _broadcast_zones(zones, zone_id, geometry, res)
     src = points.select(x, y).where(
         F.col(x).isNotNull() & F.col(y).isNotNull()
     )
 
     def probe(batches):
-        rows, res_ = bc.value
-        idx = _cached_index(token, lambda: ZoneIndex(rows, res=res_))
-        zid_arr = np.array(idx.zone_ids, dtype=np.int64)
-        zmax = int(zid_arr.max()) + 1 if len(zid_arr) else 1
-        acc = np.zeros(zmax, dtype=np.int64)
-        for batch in batches:
-            px = np.ascontiguousarray(
-                batch.column(x).to_numpy(zero_copy_only=False), np.float64)
-            py = np.ascontiguousarray(
-                batch.column(y).to_numpy(zero_copy_only=False), np.float64)
-            _, zi = idx.query(px, py, predicate)
-            if len(zi):
-                acc += np.bincount(zi, minlength=zmax)
+        idx = index()
+        acc = np.zeros(len(idx.zone_ids), dtype=np.int64)
+        for _, _, zp in _probe_batches(batches, idx, x, y, predicate):
+            acc += np.bincount(zp, minlength=len(acc))
         nz = np.nonzero(acc)[0]
         yield pa.RecordBatch.from_arrays(
-            [pa.array(nz, type=pa.int64()),
+            [pa.array(idx.zone_ids[nz], type=pa.int64()),
              pa.array(acc[nz], type=pa.int64())],
             ["zone_id", "n_partial"],
         )

@@ -32,7 +32,9 @@ def main():
         "The whole geocode stage is Catalyst codegen: the `lang='en'` "
         "filter is PUSHED to the parquet scan (`PushedFilters`), "
         "ReadSchema is pruned to the referenced columns, and there is "
-        "**no Python node**.",
+        "**no Python node**.  The coordinate regex runs once per row: the "
+        "single `regexp_extract` feeds a one-element `Generate explode`, "
+        "and the `lat IS NOT NULL` filter stays above it, on the match.",
     )
     pts = geo.withColumnRenamed("doc_id", "point_id")
     hits = pip.pip_join_broadcast(pts, synth.zones(spark),
