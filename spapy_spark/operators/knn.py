@@ -172,6 +172,20 @@ def knn_join_broadcast(
     return src.mapInPandas(probe, schema=schema)
 
 
+def _cell_ij(lon_c, lat_c, n: int):
+    """Catalyst ``(ix, iy)`` of the lon/lat point's cell on the n×n
+    grid, clamped into the grid (the cell id is ``ix·n + iy``)."""
+    ix = F.least(
+        F.greatest(F.floor((lon_c + 180.0) / 360.0 * n), F.lit(0)),
+        F.lit(n - 1),
+    ).cast("long")
+    iy = F.least(
+        F.greatest(F.floor((lat_c + 90.0) / 180.0 * n), F.lit(0)),
+        F.lit(n - 1),
+    ).cast("long")
+    return ix, iy
+
+
 def knn_join_grid(
     points: DataFrame,
     sites: DataFrame,
@@ -222,24 +236,13 @@ def knn_join_grid(
     covering = ring_eff >= n - 1
     bound = ring_eff * min(cell_w, cell_h)
 
-    def cell_ij(lon_c, lat_c):
-        ix = F.least(
-            F.greatest(F.floor((lon_c + 180.0) / 360.0 * n), F.lit(0)),
-            F.lit(n - 1),
-        ).cast("long")
-        iy = F.least(
-            F.greatest(F.floor((lat_c + 90.0) / 180.0 * n), F.lit(0)),
-            F.lit(n - 1),
-        ).cast("long")
-        return ix, iy
-
     # site side: quantize ONCE, then explode compact Δ sequences —
     # keeps the Catalyst expression tree O(1) in ``ring``.  Lat rows
     # outside the grid are dropped; lon wraps via pmod.  When the ring
     # spans the whole lon axis the Δx range collapses to [0, n) so the
     # wrap cannot register a site in the same cell twice (the r3
     # point-exploded form had a latent duplicate-candidate bug here).
-    s_ix, s_iy = cell_ij(F.col(sx), F.col(sy))
+    s_ix, s_iy = _cell_ij(F.col(sx), F.col(sy), n)
     dx_lo, dx_hi = (0, n - 1) if 2 * ring_eff + 1 >= n else (-ring_eff, ring_eff)
     s = (
         sites.select(
@@ -265,7 +268,7 @@ def knn_join_grid(
             ).alias("__cell"),
         )
     )
-    p_ix, p_iy = cell_ij(F.col(x), F.col(y))
+    p_ix, p_iy = _cell_ij(F.col(x), F.col(y), n)
     p = points.select(
         F.col(point_id), F.col(x).alias("__px"), F.col(y).alias("__py"),
         (p_ix * n + p_iy).alias("__cell"),
@@ -345,23 +348,12 @@ def within_distance(
     rx = int(math.ceil(d / cell_w))
     ry = int(math.ceil(d / cell_h))
 
-    def cell_ij(lon_c, lat_c):
-        ix = F.least(
-            F.greatest(F.floor((lon_c + 180.0) / 360.0 * n), F.lit(0)),
-            F.lit(n - 1),
-        ).cast("long")
-        iy = F.least(
-            F.greatest(F.floor((lat_c + 90.0) / 180.0 * n), F.lit(0)),
-            F.lit(n - 1),
-        ).cast("long")
-        return ix, iy
-
-    s_ix, s_iy = cell_ij(F.col(sx), F.col(sy))
+    s_ix, s_iy = _cell_ij(F.col(sx), F.col(sy), n)
     s = sites.select(
         F.col(site_id).alias("__sid"), F.col(sx).alias("__sx"),
         F.col(sy).alias("__sy"), (s_ix * n + s_iy).alias("__cell"),
     )
-    p_ix, p_iy = cell_ij(F.col(x), F.col(y))
+    p_ix, p_iy = _cell_ij(F.col(x), F.col(y), n)
     offs = [(dy, dx) for dy in range(-ry, ry + 1) for dx in range(-rx, rx + 1)]
     cells_arr = F.array(*[
         F.when(
@@ -430,7 +422,7 @@ def knn_join_grid_exact(
         F.col(sy).alias("__sy"),
     )
     pairs = cells_df.crossJoin(s0)
-    # cell rect from the id (__cell = ix·n + iy, cell_ij encoding)
+    # cell rect from the id (__cell = ix·n + iy, _cell_ij encoding)
     x0 = (F.floor(F.col("__cell") / n) * cell_w - 180.0)
     y0 = (F.pmod(F.col("__cell"), F.lit(n)) * cell_h - 90.0)
     ldx = F.greatest(x0 - F.col("__sx"), F.col("__sx") - (x0 + cell_w), F.lit(0.0))
@@ -456,18 +448,7 @@ def knn_join_grid_exact(
         .select("__cell", "__sid", "__sx", "__sy")
     )
 
-    def cell_ij(lon_c, lat_c):
-        ix = F.least(
-            F.greatest(F.floor((lon_c + 180.0) / 360.0 * n), F.lit(0)),
-            F.lit(n - 1),
-        ).cast("long")
-        iy = F.least(
-            F.greatest(F.floor((lat_c + 90.0) / 180.0 * n), F.lit(0)),
-            F.lit(n - 1),
-        ).cast("long")
-        return ix, iy
-
-    p_ix, p_iy = cell_ij(F.col(x), F.col(y))
+    p_ix, p_iy = _cell_ij(F.col(x), F.col(y), n)
     p = points.select(
         F.col(point_id), F.col(x).alias("__px"), F.col(y).alias("__py"),
         (p_ix * n + p_iy).alias("__cell"),

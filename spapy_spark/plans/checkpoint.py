@@ -7,15 +7,21 @@ checkpoints (eager in-memory library); this is new engine surface.
 Model
 -----
 A pipeline is an ordered list of :class:`Stage`\\ s.  Each stage's
-output DataFrame is materialized to ``<base>/<stage>/data`` parquet
-with a manifest JSON recording:
+output DataFrame is written as-is to ``<base>/<stage>/data`` parquet
+(executors write nothing but Spark's committed output) with a
+manifest JSON recording:
 
 - ``input_fingerprint`` — sha256 over the parent manifests' outputs
-  (chained, so any upstream change invalidates the suffix);
-- per-partition lineage rows (``partition_id, rows_out, wall_ms``)
-  captured inside the write pass by a pass-through ``mapInPandas``
-  wrapper (TaskContext partition id) and persisted to
-  ``<base>/<stage>/metrics`` parquet;
+  (chained, so any upstream change invalidates the suffix).  A root
+  stage hashes ``(path, size, mtime)`` of every file its DataFrame
+  reads, so a rewritten source reruns it;
+- ``lineage`` — one row per result partition of the write
+  (``partition_id, rows_out, wall_ms``), rebuilt on the driver from
+  what Spark already keeps: ``rows_out`` from the parquet footers of
+  the committed ``part-NNNNN-*`` files, ``wall_ms`` from the duration
+  of the partition's successful task in the write's result stage
+  (Spark's status store, found by a per-write job tag — the job group
+  belongs to the caller and is never touched);
 - ``complete`` flag written last (atomic rename), so a killed run
   leaves an incomplete stage that reruns.
 
@@ -32,12 +38,15 @@ from __future__ import annotations
 import hashlib
 import json
 import os
-import shutil
 import time
+import uuid
 from dataclasses import dataclass, field
 from typing import Callable
+from urllib.parse import unquote, urlparse
 
 import pandas as pd
+import pyarrow.parquet as pq
+from pyspark import SparkContext
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 
@@ -78,11 +87,20 @@ def _fingerprint(parents: list[dict]) -> str:
     return h.hexdigest()
 
 
-def _content_fingerprint(df: DataFrame, col: str | None) -> str:
+def _source_fingerprint(df: DataFrame) -> str:
+    """sha256 over ``(path, size, mtime)`` of every file ``df`` reads.
+    A source with no files (a local relation) hashes like a stage with
+    no parents."""
+    h = hashlib.sha256()
+    for uri in sorted(df.inputFiles()):
+        st = os.stat(unquote(urlparse(uri).path))
+        h.update(f"{uri}\0{st.st_size}\0{st.st_mtime_ns}\n".encode())
+    return h.hexdigest()
+
+
+def _content_fingerprint(df: DataFrame, col: str) -> str:
     """Order-insensitive fingerprint: xor-free sum of per-row sha256
-    prefixes over ``col`` (or the row count alone when col is None)."""
-    if col is None:
-        return f"rows={df.count()}"
+    prefixes over ``col``."""
     s = df.select(
         F.sum(
             F.conv(F.substring(F.sha2(F.col(col).cast("string"), 256), 1, 15),
@@ -93,60 +111,58 @@ def _content_fingerprint(df: DataFrame, col: str | None) -> str:
     return f"sum={s['s']},n={s['n']}"
 
 
+def _write_lineage(sc: SparkContext, tag: str, ddir: str) -> dict[str, list[int]]:
+    """Per-partition lineage of the write run under job tag ``tag``: one
+    row per partition of its result stage (the highest stage id of the
+    tagged jobs), ``wall_ms`` from that partition's successful task and
+    ``rows_out`` from the footers of its committed files in ``ddir``
+    (0 when it wrote none)."""
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()  # the status store trails the bus
+    tracker = jsc.statusTracker()
+    stage = max(s for j in tracker.getJobIdsForTag(tag)
+                for s in tracker.getJobInfo(j).get().stageIds())
+    wall: dict[int, int] = {}
+    # a retried result stage reruns only the partitions still missing
+    for att in range(tracker.getStageInfo(stage).get().currentAttemptId() + 1):
+        tasks = jsc.statusStore().taskList(stage, att, 2**31 - 1)
+        for i in range(tasks.size()):
+            t = tasks.apply(i)
+            if t.status() == "SUCCESS":
+                wall.setdefault(t.partitionId(), t.duration().get())
+    rows = dict.fromkeys(wall, 0)
+    for f in os.listdir(ddir):
+        if f.startswith("part-"):
+            n = pq.read_metadata(os.path.join(ddir, f)).num_rows
+            rows[int(f.split("-")[1])] += n
+    pids = sorted(wall)
+    return {"partition_id": pids, "rows_out": [rows[p] for p in pids],
+            "wall_ms": [wall[p] for p in pids]}
+
+
 class CheckpointRunner:
     def __init__(self, spark: SparkSession, base_dir: str):
         self.spark = spark
         self.base = base_dir
         os.makedirs(base_dir, exist_ok=True)
 
-    # -- lineage capture -------------------------------------------------
-    def _with_metrics(self, df: DataFrame, metrics_dir: str) -> DataFrame:
-        """Pass-through wrapper that records (partition_id, rows_out,
-        wall_ms) from inside each task."""
-        os.makedirs(metrics_dir, exist_ok=True)
-        schema = df.schema
-
-        def wrap(batches):
-            from pyspark import TaskContext
-
-            t0 = time.time()
-            rows = 0
-            for pdf in batches:
-                rows += len(pdf)
-                yield pdf
-            ctx = TaskContext.get()
-            pid = ctx.partitionId() if ctx is not None else -1
-            # retried/speculative tasks write distinct attempt files;
-            # lineage() keeps only the highest attempt per partition
-            att = ctx.taskAttemptId() if ctx is not None else 0
-            rec = pd.DataFrame(
-                {
-                    "partition_id": [pid],
-                    "attempt_id": [int(att)],
-                    "rows_out": [rows],
-                    "wall_ms": [int((time.time() - t0) * 1000)],
-                }
-            )
-            rec.to_parquet(
-                os.path.join(metrics_dir, f"part-{pid}-{att}.parquet"),
-                index=False,
-            )
-
-        return df.mapInPandas(wrap, schema=schema)
-
     # -- main entry ------------------------------------------------------
     def run(self, stages: list[Stage], verbose: bool = False) -> dict[str, DataFrame]:
         """Execute (or resume) the pipeline; returns name → DataFrame of
         every stage's materialized output."""
+        sc = self.spark.sparkContext
         outputs: dict[str, DataFrame] = {}
         manifests: dict[str, dict] = {}
         self.skipped: set[str] = set()  # stages resumed from checkpoint
         for st in stages:
             sdir = os.path.join(self.base, st.name)
             ddir = os.path.join(sdir, "data")
-            mdir = os.path.join(sdir, "metrics")
-            parent_ms = [manifests[p] for p in st.parents]
-            fp = _fingerprint(parent_ms)
+            df = None
+            if st.parents:
+                fp = _fingerprint([manifests[p] for p in st.parents])
+            else:  # a root stage is as fresh as the files it reads
+                df = st.fn(self.spark)
+                fp = _source_fingerprint(df)
             existing = _read_manifest(self.base, st.name)
             if (
                 existing is not None
@@ -160,22 +176,27 @@ class CheckpointRunner:
                     print(f"[checkpoint] skip {st.name} (complete)")
                 continue
             os.makedirs(sdir, exist_ok=True)
-            # rerunning a stage overwrites data but appends metrics —
-            # clear stale lineage so a rerun never mixes two runs' rows
-            shutil.rmtree(mdir, ignore_errors=True)
             t0 = time.time()
-            df = st.fn(self.spark, *[outputs[p] for p in st.parents])
-            wrapped = self._with_metrics(df, mdir)
-            wrapped.write.mode("overwrite").parquet(ddir)
+            if df is None:
+                df = st.fn(self.spark, *[outputs[p] for p in st.parents])
+            tag = f"spapy-checkpoint-{uuid.uuid4().hex}"
+            sc.addJobTag(tag)
+            try:
+                df.write.mode("overwrite").parquet(ddir)
+            finally:
+                sc.removeJobTag(tag)
+            lineage = _write_lineage(sc, tag, ddir)
             out = self.spark.read.parquet(ddir)
             outputs[st.name] = out
             m = {
                 "stage": st.name,
                 "parents": st.parents,
                 "input_fingerprint": fp,
-                "output_fingerprint": _content_fingerprint(
-                    out, st.invariant_col
+                "output_fingerprint": (
+                    f"rows={sum(lineage['rows_out'])}" if st.invariant_col is None
+                    else _content_fingerprint(out, st.invariant_col)
                 ),
+                "lineage": lineage,
                 "wall_s": round(time.time() - t0, 3),
                 "complete": True,
             }
@@ -186,24 +207,14 @@ class CheckpointRunner:
         return outputs
 
     def lineage(self, stage: str) -> pd.DataFrame:
-        """Per-partition lineage rows recorded during the stage's run.
-
-        Task retries/speculation leave multiple attempt files per
-        partition; the LATEST ATTEMPT OBSERVED per partition is
-        reported.  Note Spark's output commit is first-committer-wins,
-        so under speculation the highest attempt id may describe a
-        non-committed attempt — for deterministic stages rows_out is
-        identical across attempts and wall_ms is informational."""
-        import glob
-
-        files = glob.glob(os.path.join(self.base, stage, "metrics", "*.parquet"))
-        df = pd.concat([pd.read_parquet(f) for f in files], ignore_index=True)
-        df = (
-            df.sort_values("attempt_id")
-            .groupby("partition_id", as_index=False)
-            .last()
-        )
-        return df.drop(columns=["attempt_id"])
+        """Per-partition lineage (``partition_id, rows_out, wall_ms``) of
+        the run that wrote the stage's checkpoint, read from its manifest:
+        one row per result partition of the write.  ``rows_out`` counts
+        the committed output only (footers of the part files, 0 for a
+        partition that wrote none), so a failed or speculative attempt
+        never shows; ``wall_ms`` is the partition's successful task
+        duration."""
+        return pd.DataFrame(self.manifest(stage)["lineage"])
 
     def manifest(self, stage: str) -> dict | None:
         return _read_manifest(self.base, stage)
