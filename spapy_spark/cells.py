@@ -17,8 +17,10 @@ algebra the join planner needs (point→cell, polygon→cover set, k-ring
 neighborhoods, parent/child truncation) with exact integer arithmetic —
 no floating-point platform drift in the join keys (SURVEY.md §7.3).
 
-Everything here is a pure function of numpy arrays so it can run inside
-Arrow-batched pandas UDFs (no per-row Python in the hot path).
+Everything here is a pure function of numpy arrays (driver side, and
+inside Arrow-batched Python stages such as the ZoneIndex probe), except
+:func:`cell_col` and :func:`parent_col`: their Catalyst twins, so cell
+keys of a DataFrame are computed in the JVM without a Python stage.
 
 Reference parity note: the reference has *no* spatial index at all — it
 nested-loops every feature pair (/root/reference/SpaVectors.py:964-983).
@@ -81,7 +83,9 @@ def latlon_to_ij(lat, lon, res: int):
     """Quantize lat/lon arrays to integer grid coords at ``res``.
 
     Longitude wraps modulo 360 into [-180, 180); latitude clamps to the
-    valid band (poles land in the top/bottom row).
+    valid band (poles land in the top/bottom row; +inf and huge values
+    too — ``fy`` is clamped before the int cast, whose result on
+    out-of-range doubles is platform-defined).  NaN lands in row/column 0.
     """
     if not 0 <= res <= MAX_RES:
         raise ValueError(f"res must be in [0, {MAX_RES}], got {res}")
@@ -89,7 +93,7 @@ def latlon_to_ij(lat, lon, res: int):
     lon = np.asarray(lon, dtype=np.float64)
     n = np.int64(1) << np.int64(res)
     fx = (np.mod(lon + 180.0, 360.0)) / 360.0  # [0, 1)
-    fy = (lat + 90.0) / 180.0
+    fy = np.clip((lat + 90.0) / 180.0, 0.0, 1.0)
     ix = np.clip(np.floor(fx * n).astype(np.int64), 0, int(n) - 1)
     iy = np.clip(np.floor(fy * n).astype(np.int64), 0, int(n) - 1)
     return ix, iy
@@ -106,6 +110,53 @@ def latlon_to_cell(lat, lon, res: int) -> np.ndarray:
     """Vectorized point→cell encode. Returns int64 array."""
     ix, iy = latlon_to_ij(lat, lon, res)
     return ij_to_cell(ix, iy, res)
+
+
+def cell_col(lat, lon, res: int):
+    """Catalyst twin of :func:`latlon_to_cell`: the res-``res`` cell id
+    of Columns ``lat``/``lon`` as a LongType Column, bit-identical to the
+    numpy encoder for every double (NaN, ±inf, wrapped lon, clamped lat).
+
+    Quantize as :func:`latlon_to_ij` does — Java's double ``%`` is C
+    ``fmod``, and adding 360 to a negative remainder is ``np.mod``'s sign
+    fix (``pmod`` differs: it maps lon one ulp below -180 to column 0,
+    numpy to column n-1).  ``FLOOR`` saturates where numpy's clamped
+    ``fy`` does.  The interleave is per bit, so the expression is linear
+    in ``res``: the magic-mask spread reads its input twice per step, and
+    as nested Columns that copies the quantize expression 2^5 times.
+    """
+    from pyspark.sql import functions as F
+
+    if not 0 <= res <= MAX_RES:
+        raise ValueError(f"res must be in [0, {MAX_RES}], got {res}")
+    n = 1 << res
+    m = (lon + 180.0) % 360.0
+    fx = (m + F.when(m < 0.0, 360.0).otherwise(0.0)) / 360.0
+    fy = (lat + 90.0) / 180.0
+
+    def quantize(f):
+        return F.least(F.greatest(F.floor(f * float(n)), F.lit(0)), F.lit(n - 1))
+
+    ix, iy = quantize(fx), quantize(fy)
+    out = F.lit(res << _RES_SHIFT)
+    for b in range(res):
+        out = out.bitwiseOR(F.shiftleft(ix.bitwiseAND(1 << b), b)).bitwiseOR(
+            F.shiftleft(iy.bitwiseAND(1 << b), b + 1))
+    return out
+
+
+def parent_col(cell, res: int, parent_res: int):
+    """Catalyst twin of :func:`cell_to_parent` for a Column of res-``res``
+    cells: one shift and one mask, so a point's cells at several coarser
+    levels reuse one :func:`cell_col`."""
+    from pyspark.sql import functions as F
+
+    if not 0 <= parent_res <= res:
+        raise ValueError("parent_res must be <= res")
+    if parent_res == res:
+        return cell
+    return F.shiftright(cell.bitwiseAND(int(_MORTON_MASK)), 2 * (res - parent_res)
+                        ).bitwiseOR(F.lit(parent_res << _RES_SHIFT))
 
 
 def cell_res(cell) -> np.ndarray:
@@ -271,6 +322,8 @@ def polygon_cover(
 __all__ = [
     "MAX_RES",
     "latlon_to_cell",
+    "cell_col",
+    "parent_col",
     "latlon_to_ij",
     "ij_to_cell",
     "cell_res",

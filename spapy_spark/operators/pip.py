@@ -11,16 +11,22 @@ distributed join:
   :class:`ZoneIndex` (cell-bucketed, the STRtree role) and probed from
   ``mapInArrow`` — no shuffle of the document side at all.  This is the
   plan the north rule wants at 10^12 docs × O(10^5) zones.
-- **cell-join path** (`pip_join_cells`): both sides large.  Zones
-  explode to their covering cells, points encode their cell, Catalyst
-  hash-joins on the integer cell id, then candidates are refined with
-  the vectorized ray cast.  Optional salting spreads hot cells
-  (Zipf-city skew) across ``salt`` buckets.
+- **cell-join path** (`pip_join_cells`): the point side is large and
+  shuffled.  The zones' covering cells come from the same ZoneIndex as
+  a local relation of integers ``(cell, zone_pos, full, zone_id)``,
+  points get their cell ids from the Catalyst encoder
+  (``cells.cell_col``), Catalyst hash-joins on the integer cell id, and
+  one ``mapInArrow`` pass refines the candidates by zone position
+  against the worker's cached ZoneIndex.  No polygon enters the join.
+  Optional salting spreads hot cells (Zipf-city skew) across ``salt``
+  buckets.
 
 Exactness: coverings are supersets (no false negatives) and a point has
 exactly one cell at a given res, so cell-join candidates contain each
-true pair exactly once — no dedup pass needed.  Refinement uses
-``covers`` (boundary-inclusive) by default; ``contains`` mirrors GEOS.
+true pair exactly once — no dedup pass needed.  Both plans decide each
+candidate with :meth:`ZoneIndex.match`: a point in a full-interior cell
+passes, the rest take the exact test — ``covers`` (boundary-inclusive)
+by default; ``contains`` mirrors GEOS.
 """
 
 from __future__ import annotations
@@ -36,6 +42,27 @@ from .. import cells
 from ..geometry import kernels, wkb
 
 _PREDICATES = ("covers", "contains")
+
+# A full covering cell is inside its zone even when grown by twice this
+# many degrees, and a point passes as a full-cell hit only within this
+# distance of its own cell: far more than the 1e-12 boundary eps and the
+# ~1e-13 quantization error of the encoder.
+_FULL_MARGIN = 1e-9
+
+
+def _near_own_cell(px, py, res: int) -> np.ndarray:
+    """True where a point lies within ``_FULL_MARGIN`` of the square of
+    the res-``res`` cell it encodes to.  False for NaN and for points the
+    encoder wraps or clamps into a cell (lon outside [-180, 180), |lat|
+    above 90), which must take the exact refine."""
+    ix, iy = cells.latlon_to_ij(py, px, res)
+    w, h = 360.0 / (1 << res), 180.0 / (1 << res)
+    x0 = -180.0 + ix * w
+    y0 = -90.0 + iy * h
+    m = _FULL_MARGIN
+    return ((px >= x0 - m) & (px <= x0 + w + m)
+            & (py >= y0 - m) & (py <= y0 + h + m))
+
 
 # Per-worker-process cache of built ZoneIndex objects, keyed by the
 # content of the zone rows (see _broadcast_zones).  Python workers are
@@ -80,16 +107,20 @@ class ZoneIndex:
         if res is None:
             res = self._auto_res()
         self.res = res
+        # covering res of each zone (one per zone, see cells.zone_cover);
+        # -1 for a zone with no covering cell
+        self.zone_res = np.full(len(self.parts), -1, dtype=np.int64)
         # flat (cell, zone, full) bucket table per level, sorted by cell —
         # probe is one np.searchsorted per level, no dict lookups.
-        # ``full`` marks cells whose square is entirely inside the zone
-        # (all 4 corners covered, holes excluded): their candidate points
-        # skip the exact refine altogether.
+        # ``full`` marks cells whose square, grown by 2·_FULL_MARGIN, is
+        # entirely inside the zone (holes excluded): their candidate
+        # points skip the exact refine (see ``match``).
         by_level: dict[int, list[tuple[int, int, bool]]] = {}
         for i, parts in enumerate(self.parts):
             zcells, eff = cells.zone_cover(parts, res, max_cells=max_cells_per_zone)
             if len(zcells) == 0:
                 continue
+            self.zone_res[i] = eff
             full = self._full_cells(zcells, parts)
             lev = by_level.setdefault(int(eff), [])
             for c, fl in zip(zcells.tolist(), full.tolist()):
@@ -105,12 +136,18 @@ class ZoneIndex:
         self.res_levels = [l[0] for l in self.levels]
 
     def _full_cells(self, zcells: np.ndarray, parts) -> np.ndarray:
-        """Per covering cell: is the whole cell square inside the zone?
+        """Per covering cell: is the cell square, grown by 2·_FULL_MARGIN
+        on every side, inside the zone?
 
         Exact for arbitrary simple rings (corner-in + no-edge-crossing);
-        holes void fullness conservatively on bbox overlap.
+        holes void fullness conservatively on bbox overlap.  The margin
+        keeps every point near its cell (:func:`_near_own_cell`) farther
+        than the 1e-12 boundary eps from each ring, so ``covers`` and
+        ``contains`` both hold for it.
         """
         lo_x, lo_y, hi_x, hi_y = cells.cell_bounds(zcells)
+        g = 2 * _FULL_MARGIN
+        lo_x, lo_y, hi_x, hi_y = lo_x - g, lo_y - g, hi_x + g, hi_y + g
         full = np.zeros(len(zcells), dtype=bool)
         for rings in parts:
             inside = kernels.rects_fully_inside_ring(
@@ -146,10 +183,9 @@ class ZoneIndex:
         """Return (point_idx, zone_pos) int64 arrays of all matches, where
         ``zone_pos`` indexes ``self.zone_ids``.
 
-        Zone-grouped probe: per level, sort points by cell once, locate
-        each bucket entry's point span with two ``searchsorted`` calls,
-        then refine per *zone* with one vectorized kernel call.  Cells
-        flagged full-interior skip the refine entirely.
+        Per level, sort points by cell once, locate each bucket entry's
+        point span with two ``searchsorted`` calls, then test the
+        candidates with :meth:`match`.
         """
         if predicate not in _PREDICATES:
             raise ValueError(f"predicate must be one of {_PREDICATES}")
@@ -167,37 +203,47 @@ class ZoneIndex:
             nz = hi > lo
             if not nz.any():
                 continue
-            lo, hi, bz, bf = lo[nz], hi[nz], bzone[nz], bfull[nz]
-            # full-interior cells: every point in the span is a hit
-            if bf.any():
-                spans = [order[l:h] for l, h in zip(lo[bf], hi[bf])]
-                zrep = np.repeat(bz[bf], hi[bf] - lo[bf])
-                out_p.append(np.concatenate(spans))
-                out_z.append(zrep)
-            # boundary cells: group spans by zone, one refine per zone
-            eb = ~bf
-            if not eb.any():
-                continue
-            lo_e, hi_e, bz_e = lo[eb], hi[eb], bz[eb]
-            zorder = np.argsort(bz_e, kind="stable")
-            bz_s = bz_e[zorder]
-            zuniq, zstart = np.unique(bz_s, return_index=True)
-            zbound = np.append(zstart, len(bz_s))
-            for zi_pos, zi in enumerate(zuniq.tolist()):
-                ent = zorder[zbound[zi_pos] : zbound[zi_pos + 1]]
-                cand = np.concatenate(
-                    [order[l:h] for l, h in zip(lo_e[ent], hi_e[ent])]
-                )
-                cx, cy = px[cand], py[cand]
-                hit = np.zeros(len(cand), dtype=bool)
-                for rings in self.parts[zi]:
-                    hit |= self._refine(cx, cy, rings, predicate)
-                if hit.any():
-                    out_p.append(cand[hit])
-                    out_z.append(np.full(int(hit.sum()), zi, np.int64))
+            lo, hi = lo[nz], hi[nz]
+            cand = np.concatenate([order[l:h] for l, h in zip(lo, hi)])
+            cz = np.repeat(bzone[nz], hi - lo)
+            hit = self.match(px[cand], py[cand], cz, np.repeat(bfull[nz], hi - lo),
+                             predicate)
+            out_p.append(cand[hit])
+            out_z.append(cz[hit])
         if not out_p:
             return np.empty(0, np.int64), np.empty(0, np.int64)
         return np.concatenate(out_p), np.concatenate(out_z)
+
+    def match(self, px, py, zone_pos, full, predicate: str = "covers"):
+        """Exact ``predicate`` per candidate: is point ``i`` in zone
+        ``zone_pos[i]``?  ``full[i]`` flags a candidate found through a
+        full covering cell of that zone: it passes without a refine when
+        the point lies in that cell.  The other candidates are refined
+        with one kernel call per distinct zone.  Shared by the broadcast
+        probe and the cell join's refine.
+        """
+        hit = np.zeros(len(px), dtype=bool)
+        f = np.nonzero(full)[0]
+        if len(f):
+            lv = self.zone_res[zone_pos[f]]
+            for r in np.unique(lv).tolist():
+                m = f[lv == r]
+                hit[m] = _near_own_cell(px[m], py[m], r)
+        todo = np.nonzero(~hit)[0]
+        if not len(todo):
+            return hit
+        zs = zone_pos[todo]
+        zorder = np.argsort(zs, kind="stable")
+        zuniq, zstart = np.unique(zs[zorder], return_index=True)
+        zbound = np.append(zstart, len(zs))
+        for k, zi in enumerate(zuniq.tolist()):
+            sel = todo[zorder[zbound[k]:zbound[k + 1]]]
+            cx, cy = px[sel], py[sel]
+            h = np.zeros(len(sel), dtype=bool)
+            for rings in self.parts[zi]:
+                h |= self._refine(cx, cy, rings, predicate)
+            hit[sel] = h
+        return hit
 
     @staticmethod
     def _refine(cx, cy, rings, predicate: str) -> np.ndarray:
@@ -232,26 +278,28 @@ def _point_schema(df: DataFrame, point_cols: list[str]) -> StructType:
 
 
 def _broadcast_zones(
-    zones: DataFrame, zone_id: str, geometry: str, res: int | None
+    zones: DataFrame, zone_id: str, geometry: str, res: int | None,
+    max_cells: int = 256,
 ):
-    """Driver side of the broadcast plans: collect the zone rows and
+    """Driver side of the index-backed plans: collect the zone rows and
     broadcast them.  Returns ``(token, index)``: ``token`` is a sha256
-    over ``res`` and every ``(zone_id, wkb)`` row, and ``index()`` is
-    the worker-side loader of the cached :class:`ZoneIndex`.
+    over the build parameters (``res``, ``max_cells``) and every
+    ``(zone_id, wkb)`` row, and ``index()`` loads the cached
+    :class:`ZoneIndex` (on a worker, or on the driver).
 
     Keying the cache on content, not on the call, lets repeat calls over
     the same zones reuse every worker's index; any changed vertex, id or
-    ``res`` yields a new token and a fresh build.  On a cache hit the
-    broadcast value is never unpickled.
+    build parameter yields a new token and a fresh build.  On a cache
+    hit the broadcast value is never unpickled.
     """
     zrows = [(int(r[zone_id]), bytes(r[geometry])) for r in
              zones.select(zone_id, geometry).collect()]
-    h = hashlib.sha256(f"res={res!r};".encode())
+    h = hashlib.sha256(f"res={res!r};max_cells={max_cells!r};".encode())
     for zid, buf in zrows:
         h.update(f"{zid}:{len(buf)}:".encode())
         h.update(buf)
     token = h.hexdigest()
-    bc = zones.sparkSession.sparkContext.broadcast((zrows, res))
+    bc = zones.sparkSession.sparkContext.broadcast((zrows, res, max_cells))
 
     def index() -> ZoneIndex:
         return _cached_index(token, lambda: ZoneIndex(*bc.value))
@@ -388,13 +436,16 @@ def auto_salt(
 # Distributed cell-join path (both sides large)
 # ---------------------------------------------------------------------------
 
+# per-zone covering cap of the cell join (and zone_cell_covering's default)
+_COVER_MAX_CELLS = 4096
+
 
 def zone_cell_covering(
     zones: DataFrame,
     res: int,
     zone_id: str = "zone_id",
     geometry: str = "geometry",
-    max_cells: int = 4096,
+    max_cells: int = _COVER_MAX_CELLS,
 ) -> DataFrame:
     """Explode each zone to its covering cells: (cell, zone_id, geometry).
 
@@ -508,35 +559,53 @@ def pip_join_cells(
     predicate: str = "covers",
     salt: int = 1,
 ) -> DataFrame:
-    """Cell-prefix hash join + exact ray-cast refine (both sides large).
+    """Cell-prefix hash join + exact refine (both sides large).
 
-    ``salt`` > 1 replicates each zone-cell row ``salt`` ways and spreads
+    Only integers reach the join and the Python refine.  The driver
+    builds the zones' :class:`ZoneIndex` (covering at ``res``, coarsened
+    per zone to at most 4096 cells — the cells of
+    :func:`zone_cell_covering`) and ships its buckets as a local relation
+    ``(cell, zone_pos, full, zone_id)``.  Points get their cell at each
+    covering res from the Catalyst encoder :func:`cells.cell_col` and
+    join on ``cell``.  One ``mapInArrow`` pass then keeps the pairs that
+    :meth:`ZoneIndex.match` accepts: full-cell pairs without a refine,
+    the rest refined against ``index.parts[zone_pos]`` of the broadcast,
+    content-keyed worker index.  The polygons never enter the shuffle.
+
+    ``salt`` > 1 replicates each covering row ``salt`` ways and spreads
     points across the replicas on a deterministic hash — the hot-cell
     (Zipf city) mitigation of the north rule.  Results are invariant to
     ``salt`` (tested).
     """
+    if predicate not in _PREDICATES:
+        raise ValueError(f"predicate must be one of {_PREDICATES}")
     if point_cols is None:
         point_cols = [c for c in points.columns if c not in (x, y)]
-    # cache: the covering feeds both the level-collect and the join —
-    # without it the polyfill UDF runs twice end-to-end
-    zc = zone_cell_covering(zones, res, zone_id, geometry).cache()
-    # distinct covering resolutions actually present (giant zones coarsen);
-    # tiny collect on the small aggregated set — drives the prefix walk
-    levels = sorted(
-        r["r"]
-        for r in zc.select(
-            F.shiftright(F.col("cell"), 56).alias("r")
-        ).distinct().collect()
+    spark = points.sparkSession
+    _, index = _broadcast_zones(zones, zone_id, geometry, res, _COVER_MAX_CELLS)
+    idx = index()
+    schema = _point_schema(points, point_cols)
+    if not idx.levels:
+        return spark.createDataFrame([], schema)
+    zpos = np.concatenate([lv[2] for lv in idx.levels])
+    zc = spark.createDataFrame(
+        pd.DataFrame({
+            "cell": np.concatenate([lv[1] for lv in idx.levels]),
+            "zone_pos": zpos,
+            "full": np.concatenate([lv[3] for lv in idx.levels]),
+            "zone_id": idx.zone_ids[zpos],
+        }),
+        "cell long, zone_pos long, full boolean, zone_id long",
     )
+    # a point has exactly one cell per covering res, and each zone covers
+    # at one res, so every candidate pair is produced once.  Coarser
+    # levels are prefixes of the finest cell, which is encoded once.
+    top = idx.res_levels[-1]
     pc = points.where(F.col(x).isNotNull() & F.col(y).isNotNull()).select(
-        *point_cols, x, y
-    )
-    # each point emits its ancestor cell at every zone res level — the
-    # cell-prefix join (a point has exactly one ancestor per level, so
-    # candidate pairs stay unique)
-    pc = pc.withColumn(
-        "cell", F.explode(_ancestor_cells_udf(levels)(F.col(y), F.col(x)))
-    )
+        *point_cols, x, y, cells.cell_col(F.col(y), F.col(x), top).alias("cell"))
+    if len(idx.res_levels) > 1:
+        pc = pc.withColumn("cell", F.explode(F.array(*[
+            cells.parent_col(F.col("cell"), top, r) for r in idx.res_levels])))
     if salt > 1:
         zc = zc.withColumn(
             "__s", F.explode(F.array([F.lit(i) for i in range(salt)]))
@@ -544,83 +613,33 @@ def pip_join_cells(
         pc = pc.withColumn(
             "__s", F.pmod(F.xxhash64(*[F.col(c) for c in point_cols]), F.lit(salt))
         ).withColumn("__s", F.col("__s").cast("int"))
-        joined = pc.join(zc, ["cell", "__s"], "inner").drop("__s")
+        joined = pc.join(zc, ["cell", "__s"], "inner")
     else:
         joined = pc.join(zc, "cell", "inner")
-
-    schema = _point_schema(points, point_cols)
-    refine = (
-        kernels.points_covered_by
-        if predicate == "covers"
-        else kernels.points_contained
-    )
+    joined = joined.select(*point_cols, x, y, "zone_pos", "full", "zone_id")
 
     def exact(batches):
-        # mapInArrow: payload columns stay in Arrow buffers; zone WKB
-        # decodes once per distinct geometry per worker (cache)
         import pyarrow as pa
 
-        cache: dict[bytes, list] = {}
+        def col(batch, name, dtype):
+            return np.ascontiguousarray(
+                batch.column(name).to_numpy(zero_copy_only=False), dtype)
+
+        widx = index()
         for batch in batches:
             if batch.num_rows == 0:
                 continue
-            px = np.ascontiguousarray(
-                batch.column(x).to_numpy(zero_copy_only=False), np.float64)
-            py = np.ascontiguousarray(
-                batch.column(y).to_numpy(zero_copy_only=False), np.float64)
-            genc = pa.compute.dictionary_encode(batch.column(geometry))
-            codes = genc.indices.to_numpy(zero_copy_only=False)
-            hit = np.zeros(batch.num_rows, dtype=bool)
-            for gi, buf in enumerate(genc.dictionary):
-                key = buf.as_py()
-                parts = cache.get(key)
-                if parts is None:
-                    parts = list(wkb.polygons_of(wkb.loads(key)))
-                    if len(cache) > 4096:
-                        cache.clear()
-                    cache[key] = parts
-                m = codes == gi
-                sub = np.zeros(int(m.sum()), dtype=bool)
-                for rings in parts:
-                    sub |= refine(px[m], py[m], rings)
-                hit[m] = sub
-            idx = pa.array(np.nonzero(hit)[0])
-            cols = [batch.column(c).take(idx) for c in point_cols]
-            cols.append(batch.column(zone_id).take(idx).cast(pa.int64()))
+            hit = widx.match(col(batch, x, np.float64), col(batch, y, np.float64),
+                             col(batch, "zone_pos", np.int64),
+                             col(batch, "full", bool), predicate)
+            take = pa.array(np.nonzero(hit)[0])
+            cols = [batch.column(c).take(take) for c in point_cols + ["zone_id"]]
             yield pa.RecordBatch.from_arrays(cols, point_cols + ["zone_id"])
 
     return joined.mapInArrow(exact, schema=schema)
 
 
-def _cell_encode_udf(res: int):
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf(LongType())
-    def enc(lat: pd.Series, lon: pd.Series) -> pd.Series:
-        return pd.Series(
-            cells.latlon_to_cell(lat.to_numpy(np.float64), lon.to_numpy(np.float64), res)
-        )
-
-    return enc
-
-
-def _ancestor_cells_udf(levels: list[int]):
-    """UDF: per point, its cell id at each res in ``levels``."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import ArrayType
-
-    @pandas_udf(ArrayType(LongType()))
-    def enc(lat: pd.Series, lon: pd.Series) -> pd.Series:
-        la = lat.to_numpy(np.float64)
-        lo = lon.to_numpy(np.float64)
-        cols = [cells.latlon_to_cell(la, lo, r) for r in levels]
-        stacked = np.column_stack(cols) if cols else np.empty((len(la), 0), np.int64)
-        return pd.Series(list(stacked))
-
-    return enc
-
-
 def cell_encode(df: DataFrame, res: int, y: str = "lat", x: str = "lon",
                 out: str = "cell") -> DataFrame:
-    """Attach the res-``res`` cell id column (Arrow-batched UDF)."""
-    return df.withColumn(out, _cell_encode_udf(res)(F.col(y), F.col(x)))
+    """Attach the res-``res`` cell id column (Catalyst, :func:`cells.cell_col`)."""
+    return df.withColumn(out, cells.cell_col(F.col(y), F.col(x), res))

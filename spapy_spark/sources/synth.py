@@ -254,7 +254,9 @@ def _pop_est(zone_id: int) -> float:
 
 
 def zones(spark, n_zones: int = 200):
-    return spark.createDataFrame(_zone_rows(n_zones), schema=ZONES_SCHEMA)
+    # built from the pandas twin through Arrow: a local relation, so a
+    # collect is a LocalTableScan, not a Python RDD job
+    return spark.createDataFrame(zones_pdf(n_zones), schema=ZONES_SCHEMA)
 
 
 def zones_pdf(n_zones: int = 200) -> pd.DataFrame:
@@ -295,7 +297,8 @@ def _site_rows(n: int = 2000) -> list[tuple]:
 
 
 def sites(spark, n: int = 2000):
-    return spark.createDataFrame(_site_rows(n), schema=SITES_SCHEMA)
+    # local relation via Arrow, as in zones()
+    return spark.createDataFrame(sites_pdf(n), schema=SITES_SCHEMA)
 
 
 def sites_pdf(n: int = 2000) -> pd.DataFrame:

@@ -110,6 +110,8 @@ def test_token_follows_zone_content_and_res(spark, points, grid):
     assert pip._broadcast_zones(zdf, "zone_id", "geometry", None)[0] == tok
     assert pip._broadcast_zones(moved, "zone_id", "geometry", None)[0] != tok
     assert pip._broadcast_zones(zdf, "zone_id", "geometry", 7)[0] != tok
+    # every build parameter is in the token (the cell join's 4096 cap)
+    assert pip._broadcast_zones(zdf, "zone_id", "geometry", None, 4096)[0] != tok
     assert brute_counts(moved, grid) != brute_counts(zdf, grid)
     # each call after a warm cache must see its own zones
     for z, res in ((zdf, None), (moved, None), (zdf, None), (zdf, 7), (moved, 7)):

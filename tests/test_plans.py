@@ -112,6 +112,72 @@ def test_cell_join_shuffles_on_cell(spark):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
 
+def _children(node) -> list:
+    ch = node.children()
+    return [ch.apply(i) for i in range(ch.size())]
+
+
+def _nodes(node) -> list:
+    out = [node]
+    for c in _children(node):
+        out += _nodes(c)
+    return out
+
+
+def _python_nodes(nodes) -> list:
+    return [n for n in nodes if any(
+        k in n.nodeName() for k in ("Python", "MapIn", "ArrowEval", "FlatMap"))]
+
+
+def test_cell_join_ships_only_integers(spark, tmp_path):
+    """No polygon (BinaryType) column enters either join input or the
+    refine's Python input; nothing is cached; the refine is the plan's
+    only Python node."""
+    from spapy_spark.operators import pip
+    from spapy_spark.sources import synth
+
+    path = str(tmp_path / "pts")
+    spark.range(1000).select(
+        F.col("id").alias("point_id"),
+        (F.col("id") % 90 - 45.0).cast("double").alias("lat"),
+        (F.col("id") % 180 - 90.0).cast("double").alias("lon"),
+    ).write.parquet(path)
+    pts = spark.read.parquet(path)
+    for salt in (1, 4):
+        out = pip.pip_join_cells(pts, synth.zones(spark), res=6, salt=salt,
+                                 point_cols=["point_id"])
+        qe = out._jdf.queryExecution()
+        nodes = _nodes(qe.sparkPlan())
+        joins = [n for n in nodes if "Join" in n.nodeName()]
+        assert len(joins) == 1
+        for side in _children(joins[0]):
+            assert "binary" not in side.schema().json()
+        py = _python_nodes(nodes)
+        assert len(py) == 1 and "MapInArrow" in py[0].nodeName()
+        assert "binary" not in _children(py[0])[0].schema().json()
+        assert "InMemoryTableScan" not in _plan(out)
+
+
+def test_synth_fixtures_are_local_relations(spark):
+    """synth.zones / synth.sites scan a local relation (no Python RDD
+    job per collect) and hold the rows and schema of their _pdf twins."""
+    from spapy_spark.sources import synth
+
+    def norm(row):
+        return tuple(bytes(v) if isinstance(v, (bytes, bytearray)) else v
+                     for v in row)
+
+    for df, pdf, ddl in (
+        (synth.zones(spark), synth.zones_pdf(), synth.ZONES_SCHEMA),
+        (synth.sites(spark), synth.sites_pdf(), synth.SITES_SCHEMA),
+    ):
+        plan = _plan(df)
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan
+        assert df.schema == spark.createDataFrame([], ddl).schema
+        assert [norm(r) for r in df.collect()] == \
+            [norm(r) for r in pdf.itertuples(index=False, name=None)]
+
+
 def test_partitioned_layout_prunes(spark, tmp_path):
     """Iceberg-style layout: spatial + temporal partition pruning must
     reach the scan as PartitionFilters (directories skipped, not rows

@@ -19,9 +19,9 @@ def main():
     spark.sparkContext.setLogLevel("ERROR")
     sections = []
 
-    def cap(title, df, note):
+    def cap(title, df, note, limit=2600):
         plan = df._jdf.queryExecution().executedPlan().toString()
-        sections.append(f"## {title}\n\n{note}\n\n```\n{plan[:2600]}\n```\n")
+        sections.append(f"## {title}\n\n{note}\n\n```\n{plan[:limit]}\n```\n")
 
     docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
     geo = geocode.geocode_coords(docs.where(F.col("lang") == "en")).where(
@@ -51,10 +51,15 @@ def main():
                             point_cols=["point_id"], salt=4)
     cap(
         "Cell-prefix hash join, salted (both sides large)", cj,
-        "The big-big path: zones explode to covering cells, points emit "
-        "ancestor cells per zone res level, Catalyst hash-partitions "
-        "BOTH sides on `(cell, __s)` — the salt spreads Zipf-hot city "
-        "cells; AQE skew-join remains as backstop.",
+        "The big-big path, on integers only: the covering is a "
+        "`LocalTableScan` of `(cell, zone_pos, full, zone_id)` rows from "
+        "the driver's ZoneIndex (no geometry), the point cell is a "
+        "per-bit Morton expression (`cells.cell_col`, no Python UDF), "
+        "Catalyst hash-partitions BOTH sides on `(cell, __s)` — the salt "
+        "spreads Zipf-hot city cells; AQE skew-join remains as backstop "
+        "— and the one Python node is the `MapInArrow` refine by zone "
+        "position.",
+        limit=6000,  # the res-7 encoder expression alone is ~2 KB
     )
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
     agg = hits.groupBy("zone_id").agg(F.count(F.lit(1)).alias("n"))
