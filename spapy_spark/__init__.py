@@ -6,7 +6,7 @@ DataFrame plans:
 
 - ``cells``      — from-scratch Z-order hierarchical cell index (the H3/S2
                    role): vectorized numpy point→cell encoding, polygon
-                   covering, k-rings, parents.  Integer cell ids are the
+                   covering, parents.  Integer cell ids are the
                    join/partition keys everywhere.
 - ``geometry``   — pure-numpy WKB codec and geometry kernels (ray-cast
                    point-in-polygon, shoelace area, convex hull,

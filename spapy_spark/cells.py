@@ -13,8 +13,8 @@ lat/lon grid tile:
 
 Why not real H3/S2: neither library is available in this environment and
 the engine must be from-scratch; a Z-order quadtree gives the same
-algebra the join planner needs (point→cell, polygon→cover set, k-ring
-neighborhoods, parent/child truncation) with exact integer arithmetic —
+algebra the join planner needs (point→cell, polygon→cover set,
+parent/child truncation) with exact integer arithmetic —
 no floating-point platform drift in the join keys (SURVEY.md §7.3).
 
 Everything here is a pure function of numpy arrays (driver side, and
@@ -198,35 +198,8 @@ def cell_to_parent(cell, parent_res: int) -> np.ndarray:
 
 
 # ---------------------------------------------------------------------------
-# Neighborhoods & coverings
+# Coverings
 # ---------------------------------------------------------------------------
-
-
-def k_ring(cell: int, k: int) -> np.ndarray:
-    """All cells within Chebyshev distance ``k`` of ``cell`` (incl. itself).
-
-    Longitude wraps; latitude rows outside the grid are dropped.
-    """
-    res = int(cell_res(np.array([cell]))[0])
-    n = 1 << res
-    ix, iy = cell_to_ij(np.array([cell]))
-    ix, iy = int(ix[0]), int(iy[0])
-    dxs = np.arange(-k, k + 1, dtype=np.int64)
-    dys = np.arange(-k, k + 1, dtype=np.int64)
-    gx, gy = np.meshgrid(dxs, dys, indexing="ij")
-    nx = np.mod(ix + gx.ravel(), n)
-    ny = iy + gy.ravel()
-    ok = (ny >= 0) & (ny < n)
-    return ij_to_cell(nx[ok], ny[ok], res)
-
-
-def ring_shell(cell: int, k: int) -> np.ndarray:
-    """Cells at exactly Chebyshev distance ``k`` (the hollow ring)."""
-    if k == 0:
-        return np.array([cell], dtype=np.int64)
-    inner = set(k_ring(cell, k - 1).tolist())
-    outer = k_ring(cell, k)
-    return np.array([c for c in outer.tolist() if c not in inner], dtype=np.int64)
 
 
 def cover_bbox(lon_min, lat_min, lon_max, lat_max, res: int) -> np.ndarray:
@@ -285,14 +258,12 @@ def zone_cover(parts, res: int, max_cells: int = 4096) -> tuple[np.ndarray, int]
     _, eff = cover_bbox_adaptive(lon_min, lat_min, lon_max, lat_max, res, max_cells)
     out: list[np.ndarray] = []
     for p in parts:
-        out.append(polygon_cover(p, eff, max_cells=max_cells, _fixed_res=True))
+        out.append(polygon_cover(p, eff))
     cells_ = np.unique(np.concatenate(out))
     return cells_, eff
 
 
-def polygon_cover(
-    rings, res: int, max_cells: int = 4096, _fixed_res: bool = False
-) -> np.ndarray:
+def polygon_cover(rings, res: int) -> np.ndarray:
     """Cells at ``res`` that intersect the polygon (exterior ring +
     optional hole rings, each an (N,2) array of (lon, lat)).
 
@@ -306,12 +277,7 @@ def polygon_cover(
     ext = np.asarray(rings[0], dtype=np.float64)
     lon_min, lat_min = ext.min(axis=0)
     lon_max, lat_max = ext.max(axis=0)
-    if _fixed_res:
-        cells = cover_bbox(lon_min, lat_min, lon_max, lat_max, res)
-    else:
-        cells, eff = cover_bbox_adaptive(
-            lon_min, lat_min, lon_max, lat_max, res, max_cells
-        )
+    cells = cover_bbox(lon_min, lat_min, lon_max, lat_max, res)
     if len(cells) <= 4:  # tiny covering — keep it all
         return cells
     clo, cla, chi, cha = cell_bounds(cells)
@@ -330,8 +296,6 @@ __all__ = [
     "cell_to_ij",
     "cell_bounds",
     "cell_to_parent",
-    "k_ring",
-    "ring_shell",
     "cover_bbox",
     "cover_bbox_adaptive",
     "polygon_cover",

@@ -263,7 +263,7 @@ def q_knn_sites(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k=3 nearest synthetic sites per derived point (broadcast kNN)."""
     pts = derived_points(spark, sf_dir)
     sites = synth.sites(spark, _KNN_SITES_N)
-    out = knn.knn_join_broadcast(
+    out = knn.knn_join_cells(
         pts, sites, k=_KNN_K, x="lon", y="lat", point_cols=["point_id"]
     )
     return out.select("point_id", "site_id", "rank", "dist").orderBy(

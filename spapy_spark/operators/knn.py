@@ -5,30 +5,38 @@ resampling, /root/reference/SpaRasters.py:1390); this operator is new
 engine surface mandated by BASELINE.json's north_star ("STRtree-per-
 partition kNN").
 
-Physical strategies, picked by the size of the feature side:
+Two physical plans, picked by the size of the feature (site) side —
+broadcast when it is small, a partitioned join when it is not:
 
-- ``knn_join_broadcast`` — the feature layer (sites) is small: ship it
-  to every executor and resolve each point batch with one vectorized
-  distance matrix + ``argpartition`` top-k.  No shuffle of the point
-  side; this is the 10^12-doc plan when |sites| is O(10^4..10^5).
-- ``knn_join_cells`` — the same broadcast, probed through a
-  :class:`SiteGrid`: sites are bucketed by Z-order cell (cells.py);
-  each point scans its own cell's span of sites and expands Chebyshev
-  rings of cells until no unexplored site can beat its k-th best — the
-  distance from the point to the edge of its explored block, less a
-  float-quantization margin.  Each (point, cell) span keeps its own
-  top-k by ``k`` rounds of ``np.minimum.reduceat`` (linear, no sort);
-  only those winners are folded into the point's running top-k.  The
+- ``knn_join_cells`` (broadcast) — the site table ships to every
+  executor and is loaded there as a :class:`SiteGrid`, cached per
+  worker by the content of the site rows.  Sites are bucketed by
+  Z-order cell (cells.py); each point scans its own cell's span of
+  sites and expands Chebyshev rings of cells until no unexplored site
+  can beat its k-th best — the distance from the point to the edge of
+  its explored block, less a float-quantization margin.  Each
+  (point, cell) span keeps its own top-k by ``k`` rounds of
+  ``np.minimum.reduceat`` (linear, no sort); only those winners are
+  folded into the point's running top-k.  ``metric="haversine"`` ranks
+  the same site arrays by great-circle meters through the brute-force
+  ``_topk_block``, which is also the test oracle of the grid.  The
   probe runs in ``mapInArrow``, so payload columns never become Python
-  objects.
-- ``knn_join_grid`` / ``_grid_exact`` / ``_grid_total`` — pure
-  Catalyst cell joins for a point stream with no broadcast at all.
+  objects.  No shuffle of the point side: the 10^12-doc plan when
+  |sites| is O(10^4..10^5).
+- ``knn_join_grid_exact`` (distributed) — pure Catalyst, no Python and
+  no collect: every grid cell keeps only the sites not dominated by k
+  others for every point in it, and the point stream joins its single
+  cell's list after one shuffle.
+
+``within_distance`` is the range (theta) join on the same grid.
 
 Tie-break is deterministic everywhere: order by (distance, site_id) —
 the DuckDB oracle mirrors it with ``ORDER BY dist, site_id``.
 """
 
 from __future__ import annotations
+
+import hashlib
 
 import numpy as np
 from pyspark.sql import DataFrame, functions as F
@@ -40,6 +48,7 @@ from pyspark.sql.types import (
 )
 
 from .. import cells
+from .pip import _cached_index
 
 
 def _out_schema(points: DataFrame, point_cols: list[str]) -> StructType:
@@ -126,50 +135,9 @@ def _topk_block(
     return rows, best_s.ravel(), ranks, dist
 
 
-def knn_join_broadcast(
-    points: DataFrame,
-    sites: DataFrame,
-    k: int = 1,
-    x: str = "lon",
-    y: str = "lat",
-    point_cols: list[str] | None = None,
-    site_id: str = "site_id",
-    sx: str = "x",
-    sy: str = "y",
-    metric: str = "planar",
-) -> DataFrame:
-    """Broadcast kNN: each point gets its ``k`` nearest sites.
-
-    Output: ``point_cols + [site_id, rank, dist]`` (rank 1 = nearest;
-    planar euclidean distance in degrees, matching the SQL oracle).
-    """
-    if point_cols is None:
-        point_cols = [c for c in points.columns if c not in (x, y)]
-    rows = sites.select(site_id, sx, sy).collect()
-    arr_id = np.array([r[0] for r in rows], dtype=np.int64)
-    arr_x = np.array([r[1] for r in rows], dtype=np.float64)
-    arr_y = np.array([r[2] for r in rows], dtype=np.float64)
-    bc = points.sparkSession.sparkContext.broadcast((arr_id, arr_x, arr_y))
-    schema = _out_schema(points, point_cols)
-    src = points.select(*point_cols, x, y).where(
-        F.col(x).isNotNull() & F.col(y).isNotNull()
-    )
-
-    def probe(batches):
-        sid, sxa, sya = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            px = pdf[x].to_numpy(np.float64)
-            py = pdf[y].to_numpy(np.float64)
-            rows_, out_sid, ranks, dist = _topk_block(px, py, sxa, sya, sid, k, metric)
-            out = pdf.iloc[rows_][point_cols].reset_index(drop=True)
-            out["site_id"] = out_sid
-            out["rank"] = ranks
-            out["dist"] = dist
-            yield out
-
-    return src.mapInPandas(probe, schema=schema)
+# ---------------------------------------------------------------------------
+# Distributed path: pure-Catalyst cell joins
+# ---------------------------------------------------------------------------
 
 
 def _cell_ij(lon_c, lat_c, n: int):
@@ -184,137 +152,6 @@ def _cell_ij(lon_c, lat_c, n: int):
         F.lit(n - 1),
     ).cast("long")
     return ix, iy
-
-
-def knn_join_grid(
-    points: DataFrame,
-    sites: DataFrame,
-    k: int = 1,
-    res: int = 6,
-    ring: int = 1,
-    x: str = "lon",
-    y: str = "lat",
-    point_id: str = "point_id",
-    site_id: str = "site_id",
-    sx: str = "x",
-    sy: str = "y",
-    _flags: bool = False,
-) -> DataFrame:
-    """Fully distributed kNN — NO broadcast of the point side, NO
-    Python: the point stream can be arbitrarily large.
-
-    Plan (pure Catalyst, ONE shuffle of the point stream): the
-    neighborhood explosion happens on the SITE side — each site
-    registers in every cell of its Chebyshev ``ring`` neighborhood
-    ((2·ring+1)² rows per site); points keep their single res-``res``
-    cell and are hash-partitioned by it once.  The cell equi-join then
-    pairs a point with exactly the sites within ``ring`` cells
-    (Chebyshev symmetry), and BOTH the per-point top-k window and the
-    optional done-flag window run partitioned by ``(__cell, point_id)``
-    — the point's cell is functionally a prefix of its id's partition,
-    so Catalyst proves the existing hash distribution satisfies the
-    window and inserts no further Exchange.  The r3 plan exploded the
-    POINT side (2·ring+1)²× before the join; for a 10⁹-row point stream
-    at ring 2 that is a 25× shuffle amplification — moving the
-    explosion to the (static, usually far smaller) site side makes the
-    shuffled volume |points| + (2·ring+1)²·|sites| instead.
-
-    Output adds ``certain``: true iff the k-th distance is below
-    ``ring × min(cell_w, cell_h)`` — the geometric guarantee that no
-    site outside the searched neighborhood can beat it.  Callers
-    escalate ``ring`` (or fall back to the broadcast path) for the
-    usually-tiny uncertain remainder.  With ``_flags`` the per-point
-    ``__nk`` (rows found) and ``__allc`` (all-certain) columns are
-    folded into the same exchange-free window pass — the escalation
-    wrapper's bookkeeping costs zero extra shuffles.
-    """
-    from pyspark.sql import Window
-
-    n = 1 << res
-    cell_w, cell_h = 360.0 / n, 180.0 / n
-    ring_eff = min(ring, n - 1)
-    covering = ring_eff >= n - 1
-    bound = ring_eff * min(cell_w, cell_h)
-
-    # site side: quantize ONCE, then explode compact Δ sequences —
-    # keeps the Catalyst expression tree O(1) in ``ring``.  Lat rows
-    # outside the grid are dropped; lon wraps via pmod.  When the ring
-    # spans the whole lon axis the Δx range collapses to [0, n) so the
-    # wrap cannot register a site in the same cell twice (the r3
-    # point-exploded form had a latent duplicate-candidate bug here).
-    s_ix, s_iy = _cell_ij(F.col(sx), F.col(sy), n)
-    dx_lo, dx_hi = (0, n - 1) if 2 * ring_eff + 1 >= n else (-ring_eff, ring_eff)
-    s = (
-        sites.select(
-            F.col(site_id).alias("__sid"), F.col(sx).alias("__sx"),
-            F.col(sy).alias("__sy"),
-            s_ix.alias("__six"), s_iy.alias("__siy"),
-        )
-        .select(
-            "*", F.explode(F.sequence(F.lit(-ring_eff), F.lit(ring_eff))).alias("__dy")
-        )
-        .where(
-            ((F.col("__siy") + F.col("__dy")) >= 0)
-            & ((F.col("__siy") + F.col("__dy")) < n)
-        )
-        .select(
-            "*", F.explode(F.sequence(F.lit(dx_lo), F.lit(dx_hi))).alias("__dx")
-        )
-        .select(
-            F.col("__sid"), F.col("__sx"), F.col("__sy"),
-            (
-                F.pmod(F.col("__six") + F.col("__dx"), F.lit(n)) * n
-                + (F.col("__siy") + F.col("__dy"))
-            ).alias("__cell"),
-        )
-    )
-    p_ix, p_iy = _cell_ij(F.col(x), F.col(y), n)
-    p = points.select(
-        F.col(point_id), F.col(x).alias("__px"), F.col(y).alias("__py"),
-        (p_ix * n + p_iy).alias("__cell"),
-    ).where(F.col("__cell").isNotNull())
-    # the one shuffle: hash the point stream by its cell.  The join
-    # (broadcast or shuffled — Catalyst's pick; the site side is the
-    # small one either way) preserves this distribution, so both
-    # windows below run in place.
-    p = p.repartition(F.col("__cell"))
-    j = p.join(s, "__cell")
-    # explicit multiplication (not pow): bit-identical to the SQL
-    # oracle's (dx*dx + dy*dy) on every engine
-    dx = F.col("__px") - F.col("__sx")
-    dy = F.col("__py") - F.col("__sy")
-    d2 = dx * dx + dy * dy
-    # per-point top-k via a window over (d2, site_id): sort-based, so
-    # it SPILLS gracefully — the previous collect_list/array_sort
-    # ObjectHashAggregate held every point's candidate array on heap
-    # and OOM'd 32-thread local JVMs at moderate scale
-    w = Window.partitionBy("__cell", point_id).orderBy(
-        F.col("__d2").asc(), F.col("__sid").asc()
-    )
-    cand = j.select("__cell", point_id, F.col("__sid"), d2.alias("__d2"))
-    certain_c = (
-        F.lit(True) if covering
-        else (F.sqrt(F.col("__d2")) < F.lit(bound))
-    )
-    top = (
-        cand.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= k)
-        .select(
-            "__cell",
-            F.col(point_id),
-            F.col("__sid").alias("site_id"),
-            F.col("rank"),
-            F.sqrt(F.col("__d2")).alias("dist"),
-            certain_c.alias("certain"),
-        )
-    )
-    if _flags:
-        wp = Window.partitionBy("__cell", point_id)
-        top = (
-            top.withColumn("__nk", F.count(F.lit(1)).over(wp))
-            .withColumn("__allc", F.min(F.col("certain").cast("int")).over(wp))
-        )
-    return top.drop("__cell")
 
 
 def within_distance(
@@ -389,12 +226,12 @@ def knn_join_grid_exact(
     sx: str = "x",
     sy: str = "y",
 ) -> DataFrame:
-    """Single-pass TOTAL grid kNN — exact answer, one shuffle of the
-    point stream, no escalation loop, no Python.
+    """Distributed exact kNN — one shuffle of the point stream, no
+    Python, no collect.
 
-    The ring-escalation wrapper exists because a fixed neighborhood
-    cannot promise the k-th neighbor is inside it.  But the promise is
-    computable wholly on the SITE side: for every grid cell, rank all
+    A fixed cell neighborhood cannot promise that a point's k-th
+    neighbor lies inside it.  Per-cell domination pruning makes that
+    promise wholly on the SITE side: for every grid cell, rank all
     sites by their max distance to the cell rectangle (``ud2``) and
     keep exactly the sites whose min distance (``ld2``) does not exceed
     the k-th smallest ``ud2`` — any dropped site is strictly dominated
@@ -404,11 +241,8 @@ def knn_join_grid_exact(
     takes the top-k — the hash distribution from the one point shuffle
     satisfies both the join and the window, so no second Exchange.
 
-    Site-side cost is O(4^res · |sites|) rows through two tiny window
-    passes — the right plan whenever the site table is the small one
-    (the broadcast regime, but with zero Python and no collect).  For
-    a site side too large for that product, use
-    :func:`knn_join_grid_total` (ring escalation) instead.
+    Site-side cost is O(4^res · |sites|) rows through two window
+    passes; the point stream can be arbitrarily large.
     """
     from pyspark.sql import Window
 
@@ -474,111 +308,8 @@ def knn_join_grid_exact(
     )
 
 
-# checkpointed per-pass outputs from prior knn_join_grid_total calls —
-# released on the next call (they must outlive their own call: the
-# returned union is lazy) or explicitly via release_persisted()
-_PERSISTED: list = []
-
-
-def release_persisted() -> None:
-    """Free checkpoint blocks from earlier knn_join_grid_total calls."""
-    while _PERSISTED:
-        try:
-            _PERSISTED.pop().unpersist(blocking=False)
-        except Exception:
-            pass
-
-
-def knn_join_grid_total(
-    points: DataFrame,
-    sites: DataFrame,
-    k: int = 1,
-    res: int = 4,
-    start_ring: int = 1,
-    x: str = "lon",
-    y: str = "lat",
-    point_id: str = "point_id",
-    site_id: str = "site_id",
-    sx: str = "x",
-    sy: str = "y",
-) -> DataFrame:
-    """Total-answer wrapper over :func:`knn_join_grid`: escalates the
-    search ``ring`` (doubling) for the points whose top-k is not yet
-    provably final; the last pass resolves the residue with a direct
-    site cross-join top-k (exactly what a grid pass at covering ring
-    degenerates to, minus the explode machinery).  The uncertain
-    remainder shrinks geometrically, so the extra passes touch a
-    vanishing fraction of the data — the fully-distributed kNN plan
-    with a completeness guarantee (VERDICT r1 item 4).
-
-    The whole schedule is LAZY — ring escalation is a static doubling
-    sequence, so no driver-side count/checkpoint actions are needed
-    between passes (the r3 form paid a ``localCheckpoint`` disk write
-    plus a ``limit(1).count()`` job per pass — the 20× regression on
-    knn_sites_grid).  Each pass output is ``persist()``-ed so the
-    done-rows/done-ids double use reads cache, and everything
-    materializes inside the caller's single action.
-
-    Output: (point_id, site_id, rank, dist) — same shape/tie-break as
-    ``knn_join_broadcast``, no ``certain`` column (always total).
-    """
-    from pyspark.sql import Window
-
-    release_persisted()
-    n = 1 << res
-    out_cols = [point_id, "site_id", "rank", "dist"]
-    results = []
-    remaining = points.select(point_id, x, y)
-    ring = start_ring
-    while 2 * ring + 1 < n:
-        out = knn_join_grid(
-            remaining, sites, k=k, res=res, ring=ring, x=x, y=y,
-            point_id=point_id, site_id=site_id, sx=sx, sy=sy,
-            _flags=True,
-        ).persist()
-        _PERSISTED.append(out)
-        done_f = (F.col("__nk") == k) & (F.col("__allc") == 1)
-        results.append(out.where(done_f).select(*out_cols))
-        done_ids = out.where(done_f).select(point_id).distinct()
-        # points with no candidate rows at this ring stay in remaining
-        # via the anti-join on the ORIGINAL remaining (they never
-        # appear in out at all)
-        remaining = remaining.join(done_ids, point_id, "anti")
-        ring *= 2
-    # final pass: the residue meets every site.  A covering grid pass
-    # IS this cross join (every (point, site) cell pair matches) —
-    # doing it directly also fixes the r3 covering-ring lat gap
-    # (2·ring+1 ≥ n does not reach iy = n-1 from iy = 0).
-    s2 = sites.select(
-        F.col(site_id).alias("__sid"), F.col(sx).alias("__sx"),
-        F.col(sy).alias("__sy"),
-    )
-    jx = remaining.crossJoin(s2)
-    ddx = F.col(x) - F.col("__sx")
-    ddy = F.col(y) - F.col("__sy")
-    d2 = (ddx * ddx + ddy * ddy).alias("__d2")
-    w = Window.partitionBy(point_id).orderBy(
-        F.col("__d2").asc(), F.col("__sid").asc()
-    )
-    results.append(
-        jx.select(point_id, F.col("__sid"), d2)
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= k)
-        .select(
-            point_id,
-            F.col("__sid").alias("site_id"),
-            "rank",
-            F.sqrt(F.col("__d2")).alias("dist"),
-        )
-    )
-    acc = results[0]
-    for r in results[1:]:
-        acc = acc.unionByName(r)
-    return acc
-
-
 # ---------------------------------------------------------------------------
-# Distributed path: cell-bucketed ring expansion (both sides large)
+# Broadcast path: SiteGrid ring expansion
 # ---------------------------------------------------------------------------
 
 
@@ -785,17 +516,32 @@ def knn_join_cells(
     site_id: str = "site_id",
     sx: str = "x",
     sy: str = "y",
+    metric: str = "planar",
 ) -> DataFrame:
-    """Ring-expansion kNN with a per-task cell-bucketed site grid.
+    """Broadcast kNN: each point gets its ``k`` nearest sites.
 
-    Still ships the site table via broadcast (the grid builds in ~1 ms
-    per task); for a truly unbroadcastable site side the same SiteGrid
-    logic runs per cell-group after a cell equi-join — wire that
-    variant when a use case needs it.
+    Output: ``point_cols + [site_id, rank, dist]`` (rank 1 = nearest,
+    ties by site_id).  ``metric="planar"`` is euclidean distance in
+    degrees, matching the SQL oracle, through the ring-expansion
+    :class:`SiteGrid`; ``metric="haversine"`` is great-circle meters
+    (``kernels.haversine_m``) by the chunked brute force
+    ``_topk_block`` over the same site arrays.  Points with a null
+    coordinate are dropped.
     """
+    if metric not in ("planar", "haversine"):
+        raise ValueError(f"metric must be 'planar' or 'haversine', not {metric!r}")
     if point_cols is None:
         point_cols = [c for c in points.columns if c not in (x, y)]
     rows = [(r[0], r[1], r[2]) for r in sites.select(site_id, sx, sy).collect()]
+    # key of the per-worker index cache (the pip._broadcast_zones
+    # scheme): a sha256 over res and every (site_id, x, y).  Repeat calls
+    # over the same sites reuse each worker's grid, any changed row or
+    # res builds a fresh one, and a cache hit never unpickles the
+    # broadcast value.
+    h = hashlib.sha256(f"sitegrid;res={res!r};n={len(rows)};".encode())
+    h.update(np.array([r[0] for r in rows], dtype=np.int64).tobytes())
+    h.update(np.array([r[1:] for r in rows], dtype=np.float64).tobytes())
+    token = h.hexdigest()
     bc = points.sparkSession.sparkContext.broadcast((rows, res))
     schema = _out_schema(points, point_cols)
     src = points.select(*point_cols, x, y).where(
@@ -807,11 +553,15 @@ def knn_join_cells(
         # the neighbor gather is a C++ take(), no per-row Python objects
         import pyarrow as pa
 
-        grid = SiteGrid(bc.value[0], res=bc.value[1])
+        g = _cached_index(token, lambda: SiteGrid(*bc.value))
         for batch in batches:
             px = batch.column(x).to_numpy(zero_copy_only=False)
             py = batch.column(y).to_numpy(zero_copy_only=False)
-            pidx, sids, ranks, dists = grid.query_batch(px, py, k)
+            if metric == "planar":
+                pidx, sids, ranks, dists = g.query_batch(px, py, k)
+            else:
+                pidx, sids, ranks, dists = _topk_block(
+                    px, py, g.sx, g.sy, g.sid, k, metric)
             if len(pidx) == 0:
                 continue
             at = pa.array(pidx)

@@ -64,17 +64,18 @@ def _near_own_cell(px, py, res: int) -> np.ndarray:
             & (py >= y0 - m) & (py <= y0 + h + m))
 
 
-# Per-worker-process cache of built ZoneIndex objects, keyed by the
-# content of the zone rows (see _broadcast_zones).  Python workers are
-# reused across tasks (spark.python.worker.reuse), so the index build —
-# the dominant per-task cost at high parallelism — happens once per
-# worker per zone set, across tasks AND operator calls (streaming
-# micro-batches reuse it).  Bounded LRU.
-_INDEX_CACHE: dict[str, "ZoneIndex"] = {}
+# Per-worker-process cache of broadcast-built indexes (ZoneIndex here,
+# knn's SiteGrid), keyed by the content of the broadcast rows (see
+# _broadcast_zones).  Python workers are reused across tasks
+# (spark.python.worker.reuse), so the index build — the dominant
+# per-task cost at high parallelism — happens once per worker per row
+# set, across tasks AND operator calls (streaming micro-batches reuse
+# it).  Bounded LRU.
+_INDEX_CACHE: dict[str, object] = {}
 _INDEX_CACHE_MAX = 4
 
 
-def _cached_index(token: str, build) -> "ZoneIndex":
+def _cached_index(token: str, build):
     idx = _INDEX_CACHE.pop(token, None)
     if idx is None:
         idx = build()

@@ -45,24 +45,6 @@ def test_lon_wrap():
     assert c1[0] == c2[0]
 
 
-def test_k_ring_counts_and_membership():
-    c = int(cells.latlon_to_cell(np.array([40.0]), np.array([-100.0]), 10)[0])
-    r1 = cells.k_ring(c, 1)
-    assert len(r1) == 9
-    assert c in set(r1.tolist())
-    shell = cells.ring_shell(c, 1)
-    assert len(shell) == 8
-    assert c not in set(shell.tolist())
-    # shell ∪ ring(0) == ring(1)
-    assert set(shell.tolist()) | {c} == set(r1.tolist())
-
-
-def test_k_ring_clamps_at_pole():
-    top = int(cells.latlon_to_cell(np.array([89.9]), np.array([0.0]), 5)[0])
-    r = cells.k_ring(top, 1)
-    assert len(r) == 6  # top row: 3 lon × 2 lat (no row above)
-
-
 def test_cover_bbox_exact_tiles():
     # a bbox spanning exactly 2×2 cells at res 3 (cell size 45°×22.5°)
     got = cells.cover_bbox(-45.0, 0.0, 44.0, 44.0, 3)

@@ -1,5 +1,7 @@
-"""Ring-expansion kNN must agree exactly with the brute-force
-broadcast path (same tie-break) on clustered + uniform points."""
+"""Both kNN plans — the broadcast SiteGrid probe (``knn_join_cells``)
+and the distributed grid join (``knn_join_grid_exact``) — must agree
+exactly with the numpy brute force ``_topk_block`` (same tie-break,
+bit-equal dist) on clustered + uniform points."""
 
 import numpy as np
 import pytest
@@ -30,19 +32,107 @@ def test_sitegrid_batch_matches_bruteforce():
         np.testing.assert_allclose(md, np.sqrt(d2[order]), rtol=1e-12)
 
 
+def _site_arrays(sites):
+    rows = sites.select("site_id", "x", "y").collect()
+    return (np.array([r[0] for r in rows], np.int64),
+            np.array([r[1] for r in rows], np.float64),
+            np.array([r[2] for r in rows], np.float64))
+
+
+def _brute(sites, pid, px, py, k, metric="planar"):
+    """{(point_id, rank): (site_id, dist)} from the numpy brute force."""
+    sid, sx, sy = _site_arrays(sites)
+    rows, s, rk, d = knn._topk_block(np.asarray(px, np.float64),
+                                     np.asarray(py, np.float64),
+                                     sx, sy, sid, k, metric)
+    return {(int(pid[r]), int(q)): (int(i), float(v))
+            for r, i, q, v in zip(rows, s, rk, d)}
+
+
+def _got(rows):
+    return {(r["point_id"], r["rank"]): (r["site_id"], r["dist"])
+            for r in rows}
+
+
 def test_knn_cells_matches_broadcast(spark):
     sites = synth.sites(spark, 300)
-    ids = np.arange(1000)
+    ids = np.arange(500)
     _, lat, lon = synth.doc_coords(ids)
     pts = spark.createDataFrame(
-        [(int(i), float(lat[i]), float(lon[i])) for i in ids[:500]],
+        [(int(i), float(lat[i]), float(lon[i])) for i in ids],
         "point_id long, lat double, lon double",
     )
-    a = knn.knn_join_broadcast(pts, sites, k=2, point_cols=["point_id"])
-    b = knn.knn_join_cells(pts, sites, k=2, res=5, point_cols=["point_id"])
-    ra = sorted((r["point_id"], r["rank"], r["site_id"]) for r in a.collect())
-    rb = sorted((r["point_id"], r["rank"], r["site_id"]) for r in b.collect())
-    assert ra == rb and len(ra) == 1000  # 500 points × k=2
+    for metric in ("planar", "haversine"):
+        rows = knn.knn_join_cells(pts, sites, k=2, res=5,
+                                  point_cols=["point_id"],
+                                  metric=metric).collect()
+        assert len(rows) == 1000  # 500 points × k=2
+        assert _got(rows) == _brute(sites, ids, lon, lat, 2, metric), metric
+
+
+def test_knn_cells_rejects_unknown_metric(spark):
+    sites = synth.sites(spark, 5)
+    pts = spark.createDataFrame([(1, 10.0, 20.0)],
+                                "point_id long, lat double, lon double")
+    with pytest.raises(ValueError, match="metric"):
+        knn.knn_join_cells(pts, sites, metric="planer")
+
+
+def _sitegrid_report(spark, site_ids, n_tasks=32):
+    """{pid: (len(_INDEX_CACHE), cached SiteGrids over ``site_ids``)}
+    from the Python workers; ``n_tasks`` cycles through the idle-worker
+    pool (the probe pattern of test_pip_broadcast_index)."""
+    ids = sorted(int(s) for s in site_ids)
+
+    def report(batches):
+        import os
+
+        import pyarrow as pa
+
+        from spapy_spark.operators import knn as worker_knn
+        from spapy_spark.operators import pip as worker_pip
+
+        for _ in batches:
+            pass
+        cache = worker_pip._INDEX_CACHE
+        same = sum(isinstance(g, worker_knn.SiteGrid)
+                   and sorted(g.sid.tolist()) == ids for g in cache.values())
+        yield pa.RecordBatch.from_arrays(
+            [pa.array([os.getpid()]), pa.array([len(cache)]), pa.array([same])],
+            ["pid", "n", "same"])
+
+    rows = spark.range(n_tasks, numPartitions=n_tasks).mapInArrow(
+        report, "pid long, n long, same long").collect()
+    return {r["pid"]: (r["n"], r["same"]) for r in rows}
+
+
+def test_repeat_calls_load_one_sitegrid_per_worker(spark):
+    """The broadcast SiteGrid goes through the content-keyed worker
+    cache: two calls over the same sites leave one grid per worker."""
+    from spapy_spark.operators import pip
+
+    # ids no other test uses, so only this test's calls can cache them
+    rng = np.random.default_rng(3)
+    ids = np.arange(903_001, 903_041)
+    sites = spark.createDataFrame(
+        [(int(i), float(x), float(y)) for i, x, y in
+         zip(ids, rng.uniform(-170, 170, 40), rng.uniform(-80, 80, 40))],
+        "site_id long, x double, y double",
+    )
+    pid = np.arange(400)
+    px, py = rng.uniform(-180, 180, 400), rng.uniform(-90, 90, 400)
+    pts = spark.createDataFrame(
+        [(int(i), float(y), float(x)) for i, x, y in zip(pid, px, py)],
+        "point_id long, lat double, lon double",
+    ).repartition(8)
+    want = _brute(sites, pid, px, py, 2)
+    for _ in range(2):
+        rows = knn.knn_join_cells(pts, sites, k=2,
+                                  point_cols=["point_id"]).collect()
+        assert len(rows) == 800 and _got(rows) == want
+    rep = _sitegrid_report(spark, ids)
+    assert max(same for _, same in rep.values()) == 1, rep
+    assert all(n <= pip._INDEX_CACHE_MAX for n, _ in rep.values()), rep
 
 
 def test_knn_haversine_metric(spark):
@@ -56,10 +146,10 @@ def test_knn_haversine_metric(spark):
     )
     pts = spark.createDataFrame([(0, 80.0, 0.0)],
                                 "point_id long, lat double, lon double")
-    planar = knn.knn_join_broadcast(pts, sites, k=1,
-                                    point_cols=["point_id"]).collect()
-    hav = knn.knn_join_broadcast(pts, sites, k=1, point_cols=["point_id"],
-                                 metric="haversine").collect()
+    planar = knn.knn_join_cells(pts, sites, k=1,
+                                point_cols=["point_id"]).collect()
+    hav = knn.knn_join_cells(pts, sites, k=1, point_cols=["point_id"],
+                             metric="haversine").collect()
     # planar degrees: site2 at dist 0.9 beats site1 at dist 1.0
     assert planar[0]["site_id"] == 2
     # geodesic: 1° lon at 80°N ≈ 19 km, 0.9° lat ≈ 100 km → site1 wins
@@ -67,31 +157,6 @@ def test_knn_haversine_metric(spark):
     d = float(haversine_m(np.array([80.0]), np.array([0.0]),
                           np.array([80.0]), np.array([1.0]))[0])
     assert hav[0]["dist"] == pytest.approx(d, rel=1e-12)
-
-
-def test_knn_grid_no_broadcast(spark):
-    """Pure-Catalyst distributed kNN: certain rows must agree exactly
-    with the brute-force path; the plan must contain no Python node."""
-    sites = synth.sites(spark, 400)
-    ids = np.arange(2000)
-    _, lat, lon = synth.doc_coords(ids)
-    pts = spark.createDataFrame(
-        [(int(i), float(lat[i]), float(lon[i])) for i in ids[:600]],
-        "point_id long, lat double, lon double",
-    )
-    grid = knn.knn_join_grid(pts, sites, k=2, res=4, ring=1)
-    plan = grid._jdf.queryExecution().executedPlan().toString()
-    assert "Python" not in plan  # fully JVM-side
-    rows = grid.collect()
-    brute = knn.knn_join_broadcast(pts, sites, k=2,
-                                   point_cols=["point_id"]).collect()
-    want = {(r["point_id"], r["rank"]): r["site_id"] for r in brute}
-    n_certain = 0
-    for r in rows:
-        if r["certain"]:
-            n_certain += 1
-            assert want[(r["point_id"], r["rank"])] == r["site_id"]
-    assert n_certain > len(rows) * 0.5  # most points resolve in ring 1
 
 
 def test_topk_block_chunked_matches_dense():
@@ -113,28 +178,6 @@ def test_topk_block_chunked_matches_dense():
         knn_mod._TOPK_BLOCK_BYTES = save
     for a, b in zip(ch, dn):
         np.testing.assert_array_equal(a, b)
-
-
-def test_knn_grid_total_matches_broadcast(spark):
-    """Ring-escalation wrapper returns the TOTAL answer — every point,
-    k rows, identical to brute force (no certain caveat left)."""
-    sites = synth.sites(spark, 64)
-    ids = np.arange(500)
-    _, lat, lon = synth.doc_coords(ids)
-    pts = spark.createDataFrame(
-        [(int(i), float(lat[i]), float(lon[i])) for i in ids],
-        "point_id long, lat double, lon double",
-    )
-    total = knn.knn_join_grid_total(pts, sites, k=3, res=4).collect()
-    brute = knn.knn_join_broadcast(pts, sites, k=3,
-                                   point_cols=["point_id"]).collect()
-    assert len(total) == len(brute) == 500 * 3
-    want = {(r["point_id"], r["rank"]): (r["site_id"], r["dist"])
-            for r in brute}
-    for r in total:
-        ws, wd = want[(r["point_id"], r["rank"])]
-        assert r["site_id"] == ws
-        assert r["dist"] == wd
 
 
 def test_within_distance_matches_bruteforce(spark):
@@ -165,7 +208,8 @@ def test_within_distance_matches_bruteforce(spark):
 def test_knn_grid_exact_matches_broadcast(spark):
     """Single-pass exact grid kNN (per-cell domination pruning) is
     bit-identical to brute force for every point — including clustered
-    sites, k > cell occupancy, and points in empty cells."""
+    sites, k > cell occupancy, and points in empty cells — and its
+    executed plan has no Python node."""
     sites = synth.sites(spark, 64)
     ids = np.arange(800)
     _, lat, lon = synth.doc_coords(ids)
@@ -173,16 +217,14 @@ def test_knn_grid_exact_matches_broadcast(spark):
         [(int(i), float(lat[i]), float(lon[i])) for i in ids],
         "point_id long, lat double, lon double",
     )
+    want = _brute(sites, ids, lon, lat, 3)
+    assert len(want) == 800 * 3
     for res in (2, 4, 6):
-        ex = knn.knn_join_grid_exact(pts, sites, k=3, res=res).collect()
-        brute = knn.knn_join_broadcast(pts, sites, k=3,
-                                       point_cols=["point_id"]).collect()
-        assert len(ex) == len(brute) == 800 * 3
-        want = {(r["point_id"], r["rank"]): (r["site_id"], r["dist"])
-                for r in brute}
-        for r in ex:
-            ws, wd = want[(r["point_id"], r["rank"])]
-            assert r["site_id"] == ws and r["dist"] == wd
+        ex = knn.knn_join_grid_exact(pts, sites, k=3, res=res)
+        plan = ex._jdf.queryExecution().executedPlan().toString()
+        assert "Python" not in plan  # fully JVM-side
+        rows = ex.collect()
+        assert len(rows) == 800 * 3 and _got(rows) == want
 
 
 def test_knn_grid_exact_k_exceeds_sites(spark):
@@ -340,11 +382,12 @@ def test_sitegrid_workload_points_match_bruteforce(res):
     _assert_grid_matches_brute(rows, lon, lat, 3, res)
 
 
-def test_knn_cells_plan_is_arrow_native(spark):
+@pytest.mark.parametrize("metric", ["planar", "haversine"])
+def test_knn_cells_plan_is_arrow_native(spark, metric):
     sites = synth.sites(spark, 20)
     pts = spark.createDataFrame([("u", 1.0, 2.0)],
                                 "url string, lat double, lon double")
-    df = knn.knn_join_cells(pts, sites, k=2, point_cols=["url"])
+    df = knn.knn_join_cells(pts, sites, k=2, point_cols=["url"], metric=metric)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "MapInArrow" in plan and "MapInPandas" not in plan
     assert [r["url"] for r in df.collect()] == ["u", "u"]

@@ -77,7 +77,9 @@ def _cache_report(spark, zone_ids, n_tasks=32):
         for _ in batches:
             pass
         cache = worker_pip._INDEX_CACHE
-        same = sum(list(idx.zone_ids) == ids for idx in cache.values())
+        # the cache also holds knn's SiteGrids
+        same = sum(isinstance(idx, worker_pip.ZoneIndex)
+                   and list(idx.zone_ids) == ids for idx in cache.values())
         yield pa.RecordBatch.from_arrays(
             [pa.array([os.getpid()]), pa.array([len(cache)]), pa.array([same])],
             ["pid", "n", "same"])

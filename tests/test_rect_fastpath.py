@@ -115,10 +115,7 @@ def test_overlay_fast_path_area_matches_slow(spark):
 def test_persisted_coverings_released(spark):
     # ADVICE r2: coverings persisted by _candidates must not accumulate
     # across queries in a long-lived session
-    from spapy_spark.operators import knn as knn_ops
-
     overlay.release_persisted()
-    knn_ops.release_persisted()
     base = spark.sparkContext._jsc.sc().getPersistentRDDs().size()
     rng = np.random.default_rng(2)
     left = spark.createDataFrame(

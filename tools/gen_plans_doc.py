@@ -91,20 +91,26 @@ def main():
         "hash join on the integer cell + exact distance filter — no "
         "Python node, no broadcast; the shuffle key is the cell.",
     )
-    kg = knn.knn_join_grid(
-        pts.limit(10000), synth.sites(spark, 64), k=3, res=3, ring=2
+    # broadcast joins off, as for a point stream too large to broadcast
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    kg = knn.knn_join_grid_exact(
+        pts.limit(10000), synth.sites(spark, 64), k=3, res=5
     )
     cap(
         "Distributed grid kNN (no broadcast, no Python)", kg,
-        "Both sides quantize once; the Δ-sequence explode keeps the "
-        "expression tree O(1) in the ring; per-point top-k is a "
-        "sort-based window `row_number over (d2, site_id)` (spills "
-        "gracefully — the earlier collect_list/array_sort "
-        "ObjectHashAggregate held every candidate array on heap). "
-        "`knn_join_grid_total` escalates the ring for the (shrinking) "
-        "uncertain remainder, done-flags fused into the same window "
-        "shuffle.",
+        "Per-cell domination pruning on the site side: every grid cell "
+        "crosses every site once, ranks the sites by their max distance "
+        "to the cell rectangle, and keeps only those whose min distance "
+        "does not exceed the k-th smallest max distance — a dropped site "
+        "is beaten by k others for every point in the cell.  The point "
+        "stream is hash-partitioned once on its cell and joins that "
+        "cell's pruned list; the per-point top-k is a sort-based window "
+        "`row_number over (d2, site_id)` in the same distribution, so "
+        "there is no second point-side Exchange.  Shown with broadcast "
+        "joins off, as for a point stream too large to broadcast.",
+        limit=6000,
     )
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
     from spapy_spark.operators import overlay  # noqa: E402
     from spapy_spark.geometry import wkb as _wkb  # noqa: E402
     import numpy as np  # noqa: E402
