@@ -92,7 +92,9 @@ def _topk_block(
     (dist, site_id).  metric='planar' ranks by squared euclidean in
     degree space (dist output = sqrt); metric='haversine' ranks by
     great-circle meters (kernels.haversine_m) — the geodesic-correct
-    variant for geographic coordinates.
+    variant for geographic coordinates.  As in :class:`SiteGrid`, a NaN
+    distance never ranks: a point with a NaN coordinate gets no rows,
+    and a NaN site is never a neighbor.
 
     The site axis is processed in chunks with a running per-point
     top-k fold, so memory is O(n·chunk), not O(n·S) — the 10^5-site
@@ -129,10 +131,14 @@ def _topk_block(
         order = np.lexsort((alls, alld), axis=1)[:, :kk]
         best_d = np.take_along_axis(alld, order, axis=1)
         best_s = np.take_along_axis(alls, order, axis=1)
-    rows = np.repeat(np.arange(n), kk)
-    ranks = np.tile(np.arange(1, kk + 1, dtype=np.int64), n)
-    dist = best_d.ravel() if metric == "haversine" else np.sqrt(best_d.ravel())
-    return rows, best_s.ravel(), ranks, dist
+    # a NaN distance never ranks, so a slot can keep its +inf sentinel
+    keep = (best_d < np.inf).ravel()
+    rows = np.repeat(np.arange(n), kk)[keep]
+    ranks = np.tile(np.arange(1, kk + 1, dtype=np.int64), n)[keep]
+    dist = best_d.ravel()[keep]
+    if metric != "haversine":
+        dist = np.sqrt(dist)
+    return rows, best_s.ravel()[keep], ranks, dist
 
 
 # ---------------------------------------------------------------------------

@@ -375,6 +375,24 @@ def test_sitegrid_nan_coordinates_never_rank():
     _assert_grid_matches_brute(finite, px[[0, 2]], py[[0, 2]], 3, 6)
 
 
+@pytest.mark.parametrize("metric", ["planar", "haversine"])
+def test_topk_block_nan_never_ranks(metric):
+    """The brute force drops NaN distances as SiteGrid does: no row for
+    a NaN point, no NaN site as a neighbor, no sentinel site id."""
+    rows = [(1, 10.0, 10.0), (2, np.nan, 11.0), (3, 12.0, 12.0),
+            (4, -50.0, -20.0)]
+    sid = np.array([r[0] for r in rows], np.int64)
+    sx = np.array([r[1] for r in rows])
+    sy = np.array([r[2] for r in rows])
+    px, py = np.array([10.5, np.nan, -49.0]), np.array([10.5, 5.0, -21.0])
+    pi, si, rk, d = knn._topk_block(px, py, sx, sy, sid, 4, metric)
+    assert pi.tolist() == [0, 0, 0, 2, 2, 2]
+    assert si.tolist() == [1, 3, 4, 4, 1, 3]
+    assert rk.tolist() == [1, 2, 3, 1, 2, 3] and np.isfinite(d).all()
+    if metric == "planar":
+        _assert_grid_matches_brute(rows, px, py, 4, 6)
+
+
 @pytest.mark.parametrize("res", [3, 6])
 def test_sitegrid_workload_points_match_bruteforce(res):
     rows = [(r[0], r[2], r[3]) for r in synth._site_rows(2000)]
