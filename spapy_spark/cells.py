@@ -14,8 +14,8 @@ lat/lon grid tile:
 Why not real H3/S2: neither library is available in this environment and
 the engine must be from-scratch; a Z-order quadtree gives the same
 algebra the join planner needs (point→cell, polygon→cover set,
-parent/child truncation) with exact integer arithmetic —
-no floating-point platform drift in the join keys (SURVEY.md §7.3).
+parent/child truncation) with exact integer arithmetic — no
+floating-point platform drift in the join keys (SURVEY.md §7.3).
 
 Everything here is a pure function of numpy arrays (driver side, and
 inside Arrow-batched Python stages such as the ZoneIndex probe), except
