@@ -22,6 +22,11 @@ inside Arrow-batched Python stages such as the ZoneIndex probe), except
 :func:`cell_col` and :func:`parent_col`: their Catalyst twins, so cell
 keys of a DataFrame are computed in the JVM without a Python stage.
 
+Every zone covering comes from one function, :func:`cover_zones`, which
+covers a whole batch of zones in one pass: the ZoneIndex behind both
+PIP plans builds from it once, and ``pip.zone_cell_covering`` (the
+overlay/relate candidate join) calls it once per Arrow batch.
+
 Reference parity note: the reference has *no* spatial index at all — it
 nested-loops every feature pair (/root/reference/SpaVectors.py:964-983).
 This module is the scale substitute demanded by the north rule.
@@ -207,13 +212,7 @@ def cover_bbox(lon_min, lat_min, lon_max, lat_max, res: int) -> np.ndarray:
     antimeridian wrap — callers split wrapped boxes first)."""
     n = 1 << res
     ix0, iy0 = latlon_to_ij(np.float64(lat_min), np.float64(lon_min), res)
-    # upper edge is half-open: nudge so exact-boundary maxima don't spill
-    eps = 1e-12
-    ix1, iy1 = latlon_to_ij(
-        np.float64(min(lat_max, 90.0) - eps * 0.0),
-        np.float64(lon_max),
-        res,
-    )
+    ix1, iy1 = latlon_to_ij(np.float64(min(lat_max, 90.0)), np.float64(lon_max), res)
     ix0, iy0, ix1, iy1 = int(ix0), int(iy0), int(ix1), int(iy1)
     ix1 = min(max(ix1, ix0), n - 1)
     iy1 = min(max(iy1, iy0), n - 1)
@@ -223,66 +222,108 @@ def cover_bbox(lon_min, lat_min, lon_max, lat_max, res: int) -> np.ndarray:
     return ij_to_cell(gx.ravel(), gy.ravel(), res)
 
 
-def cover_bbox_adaptive(
-    lon_min, lat_min, lon_max, lat_max, res: int, max_cells: int = 4096
-) -> tuple[np.ndarray, int]:
-    """Like :func:`cover_bbox` but coarsens ``res`` until the covering has
-    at most ``max_cells`` cells. Returns (cells, effective_res)."""
-    r = res
-    while r > 0:
-        n = 1 << r
-        w = (lon_max - lon_min) / (360.0 / n) + 2
-        h = (lat_max - lat_min) / (180.0 / n) + 2
-        if w * h <= max_cells:
-            break
-        r -= 1
-    return cover_bbox(lon_min, lat_min, lon_max, lat_max, r), r
+def cover_zones(xy, ring_start, ring_zone, n_zones: int, res: int,
+                max_cells: int = 4096):
+    """Covering cells of a batch of (Multi)Polygon zones, in one pass.
 
+    Ring ``i`` is ``xy[ring_start[i]:ring_start[i + 1]]`` (closed
+    (lon, lat) rows), the exterior of one polygon part of zone
+    ``ring_zone[i]``; a zone may have several rings or none.  Holes are
+    never passed, so the covering stays a superset and the candidate
+    join has no false negatives (SURVEY §5.5).
 
-def zone_cover(parts, res: int, max_cells: int = 4096) -> tuple[np.ndarray, int]:
-    """Covering cells for a whole (Multi)Polygon at ONE effective res.
+    Each zone covers at ONE res — the finest ≤ ``res`` whose combined
+    bbox estimate ``(w + 2)·(h + 2)`` fits ``max_cells``, else 0 — so
+    a point's ancestor cell at that res is unique and each (point, zone)
+    candidate pair appears at most once in a prefix join.  Each ring
+    gets its bbox cells at that res; a ring with more than 4 keeps those
+    whose square meets it (:func:`kernels.rects_intersect_ring`), unless
+    the ring is exactly its bbox, which every bbox cell meets.
 
-    The effective res is picked from the combined bbox so the covering
-    stays under ``max_cells`` — giant zones coarsen, small zones keep
-    ``res``.  A single res per zone guarantees each (point, zone)
-    candidate pair appears at most once in a prefix join (the point's
-    ancestor cell at that res is unique).
-
-    ``parts``: list of polygons, each a list of rings.
-    Returns (cells int64 array, effective_res).
-    """
-    exts = [np.asarray(p[0], dtype=np.float64) for p in parts]
-    allv = np.vstack(exts)
-    lon_min, lat_min = allv.min(axis=0)
-    lon_max, lat_max = allv.max(axis=0)
-    _, eff = cover_bbox_adaptive(lon_min, lat_min, lon_max, lat_max, res, max_cells)
-    out: list[np.ndarray] = []
-    for p in parts:
-        out.append(polygon_cover(p, eff))
-    cells_ = np.unique(np.concatenate(out))
-    return cells_, eff
-
-
-def polygon_cover(rings, res: int) -> np.ndarray:
-    """Cells at ``res`` that intersect the polygon (exterior ring +
-    optional hole rings, each an (N,2) array of (lon, lat)).
-
-    Conservative covering: bbox cells filtered to those whose square
-    actually intersects the exterior ring (corner-in-poly, vertex-in-rect
-    or edge crossing).  Holes are NOT subtracted — covering must stay a
-    superset so the candidate join has no false negatives (SURVEY §5.5).
+    Returns ``(cells, zone, eff)``: the distinct (cell, zone) pairs,
+    grouped by zone in ascending order, and each zone's res (-1 for a
+    zone with no cell).
     """
     from .geometry import kernels  # local import: avoid cycle at module load
 
-    ext = np.asarray(rings[0], dtype=np.float64)
-    lon_min, lat_min = ext.min(axis=0)
-    lon_max, lat_max = ext.max(axis=0)
-    cells = cover_bbox(lon_min, lat_min, lon_max, lat_max, res)
-    if len(cells) <= 4:  # tiny covering — keep it all
-        return cells
-    clo, cla, chi, cha = cell_bounds(cells)
-    keep = kernels.rects_intersect_ring(clo, cla, chi, cha, ext)
-    return cells[keep]
+    xy = np.asarray(xy, dtype=np.float64)
+    start = np.asarray(ring_start, dtype=np.int64)
+    nonempty = start[1:] > start[:-1]
+    lo, hi = start[:-1][nonempty], start[1:][nonempty]
+    rz = np.asarray(ring_zone, dtype=np.int64)[nonempty]
+    eff = np.full(n_zones, -1, dtype=np.int64)
+    if not len(lo):
+        return np.empty(0, np.int64), np.empty(0, np.int64), eff
+    # ring bboxes (empty rings are zero-length: the nonempty starts still
+    # delimit the segments), then zone bboxes
+    x, y = xy[: hi[-1], 0], xy[: hi[-1], 1]
+    rx0, rx1 = np.minimum.reduceat(x, lo), np.maximum.reduceat(x, lo)
+    ry0, ry1 = np.minimum.reduceat(y, lo), np.maximum.reduceat(y, lo)
+    zx0, zy0 = np.full(n_zones, np.inf), np.full(n_zones, np.inf)
+    zx1, zy1 = -zx0, -zy0
+    for at, zb, rb in ((np.minimum.at, zx0, rx0), (np.minimum.at, zy0, ry0),
+                       (np.maximum.at, zx1, rx1), (np.maximum.at, zy1, ry1)):
+        at(zb, rz, rb)
+    z = np.unique(rz)
+    dlon, dlat = zx1[z] - zx0[z], zy1[z] - zy0[z]
+    ez = np.zeros(len(z), dtype=np.int64)
+    for r in range(res, 0, -1):
+        n = 1 << r
+        ez[(ez == 0) & ((dlon / (360.0 / n) + 2) * (dlat / (180.0 / n) + 2)
+                        <= max_cells)] = r
+    eff[z] = ez
+    # each ring's bbox cells at its zone's res, x-major, by repeat/arange
+    lev = eff[rz]
+    ix0, iy0, ix1, iy1 = (np.empty_like(lo) for _ in range(4))
+    for r in np.unique(lev).tolist():
+        m = lev == r
+        ix0[m], iy0[m] = latlon_to_ij(ry0[m], rx0[m], r)
+        ix1[m], iy1[m] = latlon_to_ij(ry1[m], rx1[m], r)
+    h = np.maximum(iy1, iy0) - iy0 + 1
+    cnt = (np.maximum(ix1, ix0) - ix0 + 1) * h
+    first = np.cumsum(cnt) - cnt
+    ring = np.repeat(np.arange(len(lo)), cnt)
+    k = np.arange(int(cnt.sum()), dtype=np.int64) - first[ring]
+    out = ij_to_cell(ix0[ring] + k // h[ring], iy0[ring] + k % h[ring], lev[ring])
+    oz = rz[ring]
+    big = np.nonzero(cnt > 4)[0]
+    trim = big[~_bbox_rings(xy, lo[big], hi[big])]
+    if len(trim):
+        keep = np.ones(len(out), dtype=bool)
+        clo, cla, chi, cha = cell_bounds(out)
+        for i in trim.tolist():
+            s = slice(first[i], first[i] + cnt[i])
+            keep[s] = kernels.rects_intersect_ring(
+                clo[s], cla[s], chi[s], cha[s], xy[lo[i]:hi[i]])
+        out, oz = out[keep], oz[keep]
+    if (np.bincount(rz, minlength=n_zones) > 1).any():
+        # the rings of one multi-part zone can share a cell
+        o = np.lexsort((out, oz))
+        out, oz = out[o], oz[o]
+        new = np.ones(len(out), dtype=bool)
+        new[1:] = (out[1:] != out[:-1]) | (oz[1:] != oz[:-1])
+        out, oz = out[new], oz[new]
+    else:
+        o = np.argsort(oz, kind="stable")
+        out, oz = out[o], oz[o]
+    covered = np.zeros(n_zones, dtype=bool)
+    covered[oz] = True
+    eff[~covered] = -1  # every bbox cell trimmed away
+    return out, oz, eff
+
+
+def _bbox_rings(xy, lo, hi) -> np.ndarray:
+    """True per ring ``xy[lo:hi]`` that is exactly its bbox: 5 vertices,
+    closed, axis-parallel edges (one coordinate changes per edge), and
+    both pairs of opposite vertices differing in both coordinates."""
+    out = np.zeros(len(lo), dtype=bool)
+    five = np.nonzero(hi - lo == 5)[0]
+    v = xy[lo[five, None] + np.arange(5)]
+    d = np.diff(v, axis=1)
+    out[five] = ((v[:, 0] == v[:, 4]).all(axis=1)
+                 & ((d[..., 0] == 0) != (d[..., 1] == 0)).all(axis=1)
+                 & (v[:, 0] != v[:, 2]).all(axis=1) & (v[:, 1] != v[:, 3]).all(axis=1))
+    return out
 
 
 __all__ = [
@@ -297,7 +338,5 @@ __all__ = [
     "cell_bounds",
     "cell_to_parent",
     "cover_bbox",
-    "cover_bbox_adaptive",
-    "polygon_cover",
-    "zone_cover",
+    "cover_zones",
 ]

@@ -15,7 +15,9 @@ as :func:`promote_multi` (/root/reference/SpaVectors.py:308-309,659-663).
 
 WKB is always emitted little-endian (byte order 1); both byte orders are
 accepted on read.  Coordinate payloads are decoded with
-``np.frombuffer`` — one numpy call per ring, no per-coordinate Python.
+``np.frombuffer`` — one numpy call per ring, no per-coordinate Python;
+:func:`decode_convex_rings` decodes a whole batch of small convex
+single-ring Polygons (tiles, boxes) at once.
 """
 
 from __future__ import annotations
@@ -134,6 +136,60 @@ def loads(buf: bytes) -> dict:
     return g
 
 
+def decode_convex_rings(
+    bufs, max_pts: int = 16
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Batch-decode single-ring Polygon WKBs whose ring is convex with
+    ≤ ``max_pts`` vertices.
+
+    Returns ``(ok, pts, cnt)``: ``pts`` is (n, max_pts, 2) float64 with
+    the OPEN ring (closing vertex dropped, original orientation) padded
+    with zeros; ``cnt[i]`` the vertex count.  One frombuffer per
+    distinct byte length — no per-row wkb.loads."""
+    n = len(bufs)
+    ok = np.zeros(n, dtype=bool)
+    pts = np.zeros((n, max_pts, 2), dtype=np.float64)
+    cnt = np.zeros(n, dtype=np.int64)
+    if n == 0:
+        return ok, pts, cnt
+    vals = bufs.to_numpy() if hasattr(bufs, "to_numpy") else np.asarray(
+        bufs, dtype=object
+    )
+    lens = np.fromiter(map(len, vals), dtype=np.int64, count=n)
+    for L in np.unique(lens):
+        if (L - 13) % 16 != 0:
+            continue
+        v = (L - 13) // 16  # closed-ring point count
+        if v < 4 or v - 1 > max_pts:
+            continue
+        idx = np.nonzero(lens == L)[0]
+        raw = np.frombuffer(b"".join(vals[idx]), dtype=np.uint8).reshape(-1, int(L))
+        hdr = np.frombuffer(
+            bytes([1, 3, 0, 0, 0, 1, 0, 0, 0]) + int(v).to_bytes(4, "little"),
+            dtype=np.uint8,
+        )
+        good = (raw[:, :13] == hdr).all(axis=1)
+        coords = (
+            np.ascontiguousarray(raw[:, 13:]).view("<f8").reshape(-1, int(v), 2)
+        )
+        closed = (coords[:, 0] == coords[:, -1]).all(axis=1)
+        r = coords[:, :-1]  # open
+        nxt = np.roll(r, -1, axis=1)
+        nx2 = np.roll(r, -2, axis=1)
+        cross = (nxt[:, :, 0] - r[:, :, 0]) * (nx2[:, :, 1] - nxt[:, :, 1]) - (
+            nxt[:, :, 1] - r[:, :, 1]
+        ) * (nx2[:, :, 0] - nxt[:, :, 0])
+        convex = (cross >= 0).all(axis=1) | (cross <= 0).all(axis=1)
+        # non-degenerate: some strictly nonzero turn
+        nz = (cross != 0).any(axis=1)
+        good &= closed & convex & nz
+        sel = idx[good]
+        ok[sel] = True
+        pts[sel, : int(v) - 1] = r[good]
+        cnt[sel] = int(v) - 1
+    return ok, pts, cnt
+
+
 # ---------------------------------------------------------------------------
 # Convenience constructors / reference semantics
 # ---------------------------------------------------------------------------
@@ -213,4 +269,5 @@ __all__ = [
     "box",
     "promote_multi",
     "polygons_of",
+    "decode_convex_rings",
 ]

@@ -14,9 +14,10 @@ whole-batch first:
 1. axis-aligned rect × rect — closed-form min/max interval overlap,
    vectorized over the whole Arrow batch (``decode_aa_rects`` +
    ``encode_mp_boxes``);
-2. convex rings ≤16 verts — whole-batch Sutherland–Hodgman
-   (``clip_convex_batch``), proven bit-identical to the per-pair
-   kernel (tests/test_rect_fastpath.py pattern);
+2. convex rings ≤16 verts — decoded (``wkb.decode_convex_rings``) and
+   clipped (Sutherland–Hodgman, ``clip_convex_batch``) whole-batch,
+   proven bit-identical to the per-pair kernel
+   (tests/test_rect_fastpath.py pattern);
 3. anything else (concave, holed, multi-part) — general
    Greiner–Hormann composition per pair (geometry/clip2.boolean_op),
    behind a whole-batch bbox pre-reject that skips provably-empty
@@ -451,62 +452,6 @@ def encode_mp_boxes(b: np.ndarray) -> list[bytes]:
     return [r.tobytes() for r in out]
 
 
-def decode_convex_rings(
-    bufs, max_pts: int = 16
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Batch-decode single-ring Polygon WKBs whose ring is convex with
-    ≤ ``max_pts`` vertices.
-
-    Returns ``(ok, pts, cnt)``: ``pts`` is (n, max_pts, 2) float64 with
-    the OPEN ring (closing vertex dropped, original orientation) padded
-    with zeros; ``cnt[i]`` the vertex count.  One frombuffer per
-    distinct byte length — no per-row wkb.loads."""
-    n = len(bufs)
-    ok = np.zeros(n, dtype=bool)
-    pts = np.zeros((n, max_pts, 2), dtype=np.float64)
-    cnt = np.zeros(n, dtype=np.int64)
-    if n == 0:
-        return ok, pts, cnt
-    vals = bufs.to_numpy() if hasattr(bufs, "to_numpy") else np.asarray(
-        bufs, dtype=object
-    )
-    lens = np.fromiter((len(b) for b in vals), dtype=np.int64, count=n)
-    for L in np.unique(lens):
-        if (L - 13) % 16 != 0:
-            continue
-        v = (L - 13) // 16  # closed-ring point count
-        if v < 4 or v - 1 > max_pts:
-            continue
-        idx = np.nonzero(lens == L)[0]
-        raw = np.frombuffer(
-            b"".join(bytes(vals[i]) for i in idx), dtype=np.uint8
-        ).reshape(-1, int(L))
-        hdr = np.frombuffer(
-            bytes([1, 3, 0, 0, 0, 1, 0, 0, 0]) + int(v).to_bytes(4, "little"),
-            dtype=np.uint8,
-        )
-        good = (raw[:, :13] == hdr).all(axis=1)
-        coords = (
-            np.ascontiguousarray(raw[:, 13:]).view("<f8").reshape(-1, int(v), 2)
-        )
-        closed = (coords[:, 0] == coords[:, -1]).all(axis=1)
-        r = coords[:, :-1]  # open
-        nxt = np.roll(r, -1, axis=1)
-        nx2 = np.roll(r, -2, axis=1)
-        cross = (nxt[:, :, 0] - r[:, :, 0]) * (nx2[:, :, 1] - nxt[:, :, 1]) - (
-            nxt[:, :, 1] - r[:, :, 1]
-        ) * (nx2[:, :, 0] - nxt[:, :, 0])
-        convex = (cross >= 0).all(axis=1) | (cross <= 0).all(axis=1)
-        # non-degenerate: some strictly nonzero turn
-        nz = (cross != 0).any(axis=1)
-        good &= closed & convex & nz
-        sel = idx[good]
-        ok[sel] = True
-        pts[sel, : int(v) - 1] = r[good]
-        cnt[sel] = int(v) - 1
-    return ok, pts, cnt
-
-
 def _shoelace_open(r: np.ndarray, cnt: np.ndarray) -> np.ndarray:
     """Signed area ×2 of padded OPEN rings (n, M, 2) with counts."""
     n, M, _ = r.shape
@@ -893,8 +838,8 @@ def overlay_join(
                 # — bit-identical outputs to the per-pair kernel
                 rest = ~fast & ~both
                 if rest.any():
-                    cok_l, cp_l, cc_l = decode_convex_rings(pdf["__lg"])
-                    cok_r, cp_r, cc_r = decode_convex_rings(pdf["__rg"])
+                    cok_l, cp_l, cc_l = wkb.decode_convex_rings(pdf["__lg"])
+                    cok_r, cp_r, cc_r = wkb.decode_convex_rings(pdf["__rg"])
                     conv = rest & cok_l & cok_r
                     if conv.any():
                         vld, oc, ocnt = clip_convex_batch(

@@ -88,52 +88,47 @@ def _cached_index(token: str, build):
 class ZoneIndex:
     """Cell-bucketed polygon index (the per-executor STRtree substitute).
 
-    Buckets every zone's covering cells at an auto-picked resolution;
-    probe = encode points → group by cell → refine only zones bucketed
-    in that cell.  Pure numpy, picklable for Spark broadcast.
+    Buckets every zone's covering cells (one :func:`cells.cover_zones`
+    call over all zones) at an auto-picked resolution; probe = encode
+    points → group by cell → refine only zones bucketed in that cell.
+    An empty zone gets no bucket.  Pure numpy, picklable for Spark
+    broadcast.
     """
 
     def __init__(self, rows, res: int | None = None, max_cells_per_zone: int = 256):
         """``rows``: iterable of (zone_id, wkb_bytes)."""
         zone_ids: list[int] = []
-        self.parts: list[list[list[np.ndarray]]] = []  # zone → polygon parts → rings
-        self.bboxes: list[tuple] = []
+        # zone → polygon parts → rings; parts without vertices dropped
+        self.parts: list[list[list[np.ndarray]]] = []
         for zid, buf in rows:
-            g = wkb.loads(bytes(buf))
-            parts = list(wkb.polygons_of(g))
             zone_ids.append(int(zid))
-            self.parts.append(parts)
-            self.bboxes.append(kernels.geom_bounds(g))
+            self.parts.append([p for p in wkb.polygons_of(wkb.loads(bytes(buf)))
+                               if len(p) and len(p[0])])
         self.zone_ids = np.array(zone_ids, dtype=np.int64)
         if res is None:
             res = self._auto_res()
         self.res = res
-        # covering res of each zone (one per zone, see cells.zone_cover);
-        # -1 for a zone with no covering cell
-        self.zone_res = np.full(len(self.parts), -1, dtype=np.int64)
-        # flat (cell, zone, full) bucket table per level, sorted by cell —
-        # probe is one np.searchsorted per level, no dict lookups.
+        # covering res of each zone (one per zone, see cells.cover_zones);
+        # -1 for an empty zone
+        zc, zz, self.zone_res = cells.cover_zones(
+            *_exteriors(enumerate(self.parts)), len(self.parts), res,
+            max_cells_per_zone)
         # ``full`` marks cells whose square, grown by 2·_FULL_MARGIN, is
         # entirely inside the zone (holes excluded): their candidate
         # points skip the exact refine (see ``match``).
-        by_level: dict[int, list[tuple[int, int, bool]]] = {}
-        for i, parts in enumerate(self.parts):
-            zcells, eff = cells.zone_cover(parts, res, max_cells=max_cells_per_zone)
-            if len(zcells) == 0:
-                continue
-            self.zone_res[i] = eff
-            full = self._full_cells(zcells, parts)
-            lev = by_level.setdefault(int(eff), [])
-            for c, fl in zip(zcells.tolist(), full.tolist()):
-                lev.append((c, i, fl))
+        full = np.zeros(len(zc), dtype=bool)
+        span = np.searchsorted(zz, np.arange(len(self.parts) + 1))
+        for i in np.nonzero(np.diff(span))[0].tolist():
+            s = slice(span[i], span[i + 1])
+            full[s] = self._full_cells(zc[s], self.parts[i])
+        # flat (cell, zone, full) bucket table per level, sorted by cell —
+        # probe is one np.searchsorted per level, no dict lookups.
+        lev = self.zone_res[zz]
         self.levels: list[tuple[int, np.ndarray, np.ndarray, np.ndarray]] = []
-        for lev in sorted(by_level):
-            ent = by_level[lev]
-            bc = np.array([e[0] for e in ent], dtype=np.int64)
-            bz = np.array([e[1] for e in ent], dtype=np.int64)
-            bf = np.array([e[2] for e in ent], dtype=bool)
-            o = np.argsort(bc, kind="stable")
-            self.levels.append((lev, bc[o], bz[o], bf[o]))
+        for r in np.unique(lev).tolist():
+            m = lev == r
+            o = np.argsort(zc[m], kind="stable")
+            self.levels.append((r, zc[m][o], zz[m][o], full[m][o]))
         self.res_levels = [l[0] for l in self.levels]
 
     def _full_cells(self, zcells: np.ndarray, parts) -> np.ndarray:
@@ -165,12 +160,12 @@ class ZoneIndex:
         return full
 
     def _auto_res(self) -> int:
-        if not self.bboxes:
+        ext = [np.vstack([r for p in parts for r in p]) for parts in self.parts
+               if parts]
+        if not ext:
             return 8
-        ext = np.array(
-            [max(b[2] - b[0], b[3] - b[1], 1e-9) for b in self.bboxes]
-        )
-        med = float(np.median(ext))
+        med = float(np.median(
+            [max(*(v.max(axis=0) - v.min(axis=0)), 1e-9) for v in ext]))
         # cell size ≈ median zone extent → a zone covers O(4..9) cells
         res = int(np.clip(np.floor(np.log2(360.0 / med)), 3, 16))
         return res
@@ -450,7 +445,9 @@ def zone_cell_covering(
 ) -> DataFrame:
     """Explode each zone to its covering cells: (cell, zone_id, geometry).
 
-    Runs distributed (mapInPandas) — the polygon side may be huge.
+    Runs distributed (mapInPandas) — the polygon side may be huge — with
+    one :func:`cells.cover_zones` call per Arrow batch: the cells of a
+    :class:`ZoneIndex` at the same ``res`` and ``max_cells``.
     """
     schema = StructType(
         [StructField("cell", LongType(), False)]
@@ -458,94 +455,42 @@ def zone_cell_covering(
     )
 
     def cover(batches):
-        from .overlay import decode_aa_rects
-
         for pdf in batches:
-            zvals = pdf[zone_id].to_numpy()
             gvals = pdf[geometry].to_numpy()
-            frames = []
-            # whole-batch fast path: axis-aligned rectangles cover
-            # exactly their bbox cells (every bbox cell intersects the
-            # rect), so the per-feature zone_cover loop reduces to
-            # vectorized quantize + repeat/arange cell generation —
-            # cell-for-cell identical to zone_cover's output.
-            rok, rects = decode_aa_rects(gvals)
-            slow_idx = np.nonzero(~rok)[0]
-            if rok.any():
-                r = rects[rok]
-                ridx = np.nonzero(rok)[0]
-                c_cells, c_rid = _rect_cover_batch(r, res, max_cells)
-                frames.append(pd.DataFrame({
-                    "cell": c_cells,
-                    zone_id: zvals[ridx[c_rid]],
-                    geometry: gvals[ridx[c_rid]],
-                }))
-            if len(slow_idx):
-                cs, zs, gs = [], [], []
-                for i in slow_idx:
-                    g = wkb.loads(bytes(gvals[i]))
-                    zcells, _eff = cells.zone_cover(
-                        list(wkb.polygons_of(g)), res, max_cells=max_cells
-                    )
-                    cs.extend(zcells.tolist())
-                    zs.extend([zvals[i]] * len(zcells))
-                    gs.extend([gvals[i]] * len(zcells))
-                frames.append(pd.DataFrame({
-                    "cell": np.array(cs, np.int64), zone_id: zs,
-                    geometry: gs,
-                }))
-            if frames:
-                yield pd.concat(frames, ignore_index=True)
+            c, z, _ = cells.cover_zones(*_wkb_exteriors(gvals), len(gvals), res,
+                                        max_cells)
+            yield pd.DataFrame({"cell": c, zone_id: pdf[zone_id].to_numpy()[z],
+                                geometry: gvals[z]})
 
     return zones.select(zone_id, geometry).mapInPandas(cover, schema=schema)
 
 
-def _rect_cover_batch(
-    r: np.ndarray, res: int, max_cells: int
-) -> tuple[np.ndarray, np.ndarray]:
-    """Covering cells for (n, 4) [minx,miny,maxx,maxy] rectangles.
+def _exteriors(zones):
+    """``(xy, ring_start, ring_zone)`` of :func:`cells.cover_zones` for
+    ``(zone index, polygon parts)`` pairs: each part's exterior ring."""
+    ext = [(i, np.asarray(p[0], dtype=np.float64).reshape(-1, 2))
+           for i, parts in zones for p in parts if len(p)]
+    xy = np.concatenate([r for _, r in ext]) if ext else np.empty((0, 2))
+    start = np.cumsum([0] + [len(r) for _, r in ext], dtype=np.int64)
+    return xy, start, np.array([i for i, _ in ext], dtype=np.int64)
 
-    Replicates cells.zone_cover bit-for-bit on rectangle inputs: the
-    same adaptive effective res (coarsen until the bbox estimate fits
-    ``max_cells``), the same quantize/clamp math, the same cell ids —
-    just with the per-feature Python loop replaced by one repeat/arange
-    pass.  Returns (cells, rect_index) aligned arrays.
-    """
-    n_r = len(r)
-    # adaptive effective res, vectorized over rects (mirrors
-    # cells.cover_bbox_adaptive's loop)
-    eff = np.zeros(n_r, dtype=np.int64)
-    dlon = r[:, 2] - r[:, 0]
-    dlat = r[:, 3] - r[:, 1]
-    for rr in range(res, 0, -1):
-        ncand = 1 << rr
-        w = dlon / (360.0 / ncand) + 2
-        h = dlat / (180.0 / ncand) + 2
-        eff = np.where((eff == 0) & (w * h <= max_cells), rr, eff)
-    # quantize both corners at each rect's eff (grouped by eff so the
-    # scalar-res encode path is reused verbatim)
-    out_cells, out_rid = [], []
-    for rr in np.unique(eff):
-        m = np.nonzero(eff == rr)[0]
-        rs = int(rr)
-        nn = 1 << rs
-        ix0, iy0 = cells.latlon_to_ij(r[m, 1], r[m, 0], rs)
-        ix1, iy1 = cells.latlon_to_ij(r[m, 3], r[m, 2], rs)
-        ix1 = np.minimum(np.maximum(ix1, ix0), nn - 1)
-        iy1 = np.minimum(np.maximum(iy1, iy0), nn - 1)
-        w = ix1 - ix0 + 1
-        h = iy1 - iy0 + 1
-        cnt = w * h
-        rid = np.repeat(np.arange(len(m)), cnt)
-        offs = np.repeat(np.concatenate([[0], np.cumsum(cnt)])[:-1], cnt)
-        k = np.arange(int(cnt.sum()), dtype=np.int64) - offs
-        ix = ix0[rid] + k // h[rid]
-        iy = iy0[rid] + k % h[rid]
-        out_cells.append(cells.ij_to_cell(ix, iy, rs))
-        out_rid.append(m[rid])
-    if not out_cells:
-        return np.empty(0, np.int64), np.empty(0, np.int64)
-    return np.concatenate(out_cells), np.concatenate(out_rid)
+
+def _wkb_exteriors(bufs):
+    """:func:`_exteriors` of a batch of WKB zones: small convex rings
+    (boxes, tiles) decode whole-batch, only the rest by ``wkb.loads``."""
+    ok, pts, cnt = wkb.decode_convex_rings(bufs)
+    fast = np.nonzero(ok)[0]
+    # each decoded ring is open: append its first vertex to close it
+    n = cnt[fast] + 1
+    row = np.repeat(np.arange(len(fast)), n)
+    k = np.arange(int(n.sum()), dtype=np.int64) - np.repeat(np.cumsum(n) - n, n)
+    k[k == n[row] - 1] = 0
+    xy, start, zone = _exteriors(
+        (i, list(wkb.polygons_of(wkb.loads(bufs[i]))))
+        for i in np.nonzero(~ok)[0].tolist())
+    return (np.concatenate([pts[fast[row], k], xy]),
+            np.concatenate([np.cumsum(n) - n, start + int(n.sum())]),
+            np.concatenate([fast, zone]))
 
 
 def pip_join_cells(

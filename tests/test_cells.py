@@ -53,9 +53,23 @@ def test_cover_bbox_exact_tiles():
     assert lo.min() == -45.0 and ha.max() == 45.0
 
 
+def _cover(zones, res, max_cells=4096):
+    """cells.cover_zones over zones given as lists of polygon parts (each
+    a list of rings; only the exterior is passed)."""
+    rings = [np.asarray(p[0], np.float64) for z in zones for p in z]
+    zone = [i for i, z in enumerate(zones) for _ in z]
+    start = np.concatenate([[0], np.cumsum([len(r) for r in rings])]).astype(np.int64)
+    xy = np.concatenate(rings) if rings else np.empty((0, 2))
+    return cells.cover_zones(xy, start, zone, len(zones), res, max_cells)
+
+
+def _box(x0, y0, x1, y1):
+    return np.array([[x0, y0], [x1, y0], [x1, y1], [x0, y1], [x0, y0]], np.float64)
+
+
 def test_cover_bbox_adaptive_coarsens():
-    c, eff = cells.cover_bbox_adaptive(-180, -90, 179.9, 89.9, 20, max_cells=64)
-    assert eff < 20
+    c, _, eff = _cover([[[_box(-180, -90, 179.9, 89.9)]]], 20, max_cells=64)
+    assert eff[0] < 20
     assert len(c) <= 64
 
 
@@ -63,7 +77,8 @@ def test_polygon_cover_triangle_superset_and_pruned():
     # triangle in the NE quadrant; covering must contain the cells of
     # interior points and prune most of the bbox corners
     tri = np.array([[10.0, 10.0], [30.0, 10.0], [10.0, 30.0], [10.0, 10.0]])
-    cover = cells.polygon_cover([tri], 8)
+    cover, _, eff = _cover([[[tri]]], 8)
+    assert eff.tolist() == [8]
     cover_set = set(cover.tolist())
     rng = np.random.default_rng(7)
     # rejection-sample interior points
@@ -75,6 +90,71 @@ def test_polygon_cover_triangle_superset_and_pruned():
     # corner far outside the triangle must be pruned
     far = int(cells.latlon_to_cell(np.array([29.0]), np.array([29.0]), 8)[0])
     assert far not in cover_set
+
+
+def _mixed_zones():
+    th = np.linspace(0, 2 * np.pi, 13)[:-1]
+    star = np.column_stack([20 + np.where(np.arange(12) % 2, 2.0, 6.0) * np.cos(th),
+                            -10 + np.where(np.arange(12) % 2, 2.0, 6.0) * np.sin(th)])
+    star = np.vstack([star, star[:1]])
+    hole = _box(41.0, 1.0, 43.0, 3.0)[::-1]
+    return [
+        [[_box(0.5, 0.5, 3.7, 2.2)]],                       # rect
+        [[star]],                                          # concave
+        [[_box(40.0, 0.0, 44.0, 4.0), hole]],              # holed
+        [[_box(-60.0, 10.0, -58.0, 12.0)],                 # multi-part
+         [np.array([[-50.0, 10.0], [-45.0, 10.0], [-50.0, 16.0], [-50.0, 10.0]])]],
+        [[_box(-179.0, -89.0, 179.0, 89.0)]],              # coarsened by the cap
+        [[_box(100.0, 30.0, 100.0001, 30.0001)]],          # sub-cell
+        [],                                                # empty
+        [[_box(0.5, 0.5, 3.7, 2.2)]],                      # same rect again
+    ]
+
+
+@pytest.mark.parametrize("res,max_cells", [(6, 4096), (8, 256), (10, 64)])
+def test_cover_zones_batch_equals_each_zone_alone(res, max_cells):
+    zones = _mixed_zones()
+    c, z, eff = _cover(zones, res, max_cells)
+    assert (np.diff(z) >= 0).all()
+    assert eff[6] == -1 and not (z == 6).any()
+    assert eff[4] < res and eff[5] == res
+    for i, zone in enumerate(zones):
+        ci, zi, ei = _cover([zone], res, max_cells)
+        assert (zi == 0).all() and ei.tolist() == [eff[i]]
+        np.testing.assert_array_equal(np.sort(c[z == i]), np.sort(ci))
+        assert len(np.unique(ci)) == len(ci)
+        if len(ci):
+            assert (cells.cell_res(ci) == ei[0]).all()
+
+
+@pytest.mark.parametrize("res", [3, 7, 11])
+def test_cover_zones_rect_is_all_its_bbox_cells(res):
+    """An axis-aligned rectangle covers exactly its bbox cells at its
+    res — also when its edges sit on cell edges — and every one of them
+    meets the ring, so skipping the trim for it changes nothing."""
+    from spapy_spark.geometry import kernels
+
+    rng = np.random.default_rng(res)
+    w, h = 360.0 / (1 << res), 180.0 / (1 << res)
+    rects = [(-45.0, 0.0, 44.0, 44.0), (-180.0, -90.0, -180.0 + 3 * w, -90.0 + 2 * h)]
+    for _ in range(30):
+        x0, y0 = rng.uniform(-170, 150), rng.uniform(-80, 60)
+        rects.append((x0, y0, x0 + rng.uniform(0, 20), y0 + rng.uniform(0, 20)))
+        ix, iy = rng.integers(0, (1 << res) - 4, 2)
+        rects.append((-180.0 + ix * w, -90.0 + iy * h,
+                      -180.0 + (ix + rng.integers(1, 4)) * w,
+                      -90.0 + (iy + rng.integers(1, 4)) * h))
+    c, z, eff = _cover([[[_box(*r)]] for r in rects], res, 4096)
+    for i, r in enumerate(rects):
+        want = np.sort(cells.cover_bbox(*r, int(eff[i])))
+        np.testing.assert_array_equal(np.sort(c[z == i]), want)
+        lo, la, hi, ha = cells.cell_bounds(want)
+        assert kernels.rects_intersect_ring(lo, la, hi, ha, _box(*r)).all()
+
+
+def test_cover_zones_empty_batch():
+    c, z, eff = _cover([[], []], 8)
+    assert len(c) == 0 and len(z) == 0 and eff.tolist() == [-1, -1]
 
 
 def test_cell_ids_are_positive_and_distinct_across_res():

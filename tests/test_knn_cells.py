@@ -409,3 +409,44 @@ def test_knn_cells_plan_is_arrow_native(spark, metric):
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "MapInArrow" in plan and "MapInPandas" not in plan
     assert [r["url"] for r in df.collect()] == ["u", "u"]
+
+
+def test_knn_grid_exact_one_point_shuffle(spark, tmp_path):
+    """With broadcast joins off (a point stream too large to broadcast)
+    the point stream is shuffled exactly once, on its cell: the
+    ``(__cell, point_id)`` top-k window reuses that distribution."""
+    path = str(tmp_path / "pts")
+    _, lat, lon = synth.doc_coords(np.arange(2000))
+    spark.createDataFrame(
+        [(int(i), float(lat[i]), float(lon[i])) for i in range(2000)],
+        "point_id long, lat double, lon double",
+    ).write.parquet(path)
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        ex = knn.knn_join_grid_exact(spark.read.parquet(path),
+                                     synth.sites(spark, 64), k=3, res=5)
+        plan = ex._jdf.queryExecution().executedPlan()
+        if plan.nodeName() == "AdaptiveSparkPlan":
+            plan = plan.initialPlan()
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+
+    def kids(node):
+        ch = node.children()
+        return [ch.apply(i) for i in range(ch.size())]
+
+    def subtree(node):
+        return [node] + [m for c in kids(node) for m in subtree(c)]
+
+    # root → the point/site join is a chain of one-child nodes; the
+    # join's left child is the point stream
+    above, node = [], plan
+    while "Join" not in node.nodeName():
+        above.append(node)
+        (node,) = kids(node)
+    points = subtree(kids(node)[0])
+    assert any("Scan parquet" in n.toString() for n in points)
+    ex_nodes = [n for n in above + points if "Exchange" in n.nodeName()]
+    assert len(ex_nodes) == 1
+    assert ex_nodes[0].toString().startswith("Exchange hashpartitioning(__cell")

@@ -175,3 +175,32 @@ def test_index_covering_equals_zone_cell_covering(spark, res):
                 assert hit.all(), (c, z)
             n_full += 1
     assert n_full > 0
+
+
+def test_empty_zones_match_nothing(spark, grid):
+    """``POLYGON EMPTY`` and ``MULTIPOLYGON EMPTY`` zones (what
+    GeoPackage's empty flag decodes to) among real ones get no covering,
+    match no point and leave the auto res alone: every plan returns the
+    rows it returns without them."""
+    px, py, pts = grid
+    geoms = _geoms()
+    empty = [{"type": "Polygon", "coordinates": []},
+             {"type": "MultiPolygon", "coordinates": []}]
+    ids_e = IDS[:2] + [41] + IDS[2:4] + [42] + IDS[4:]
+    geoms_e = geoms[:2] + empty[:1] + geoms[2:4] + empty[1:] + geoms[4:]
+    zdf, zdf_e = _zone_df(spark, IDS, geoms), _zone_df(spark, ids_e, geoms_e)
+    idx = pip.ZoneIndex([(z, wkb.dumps(g)) for z, g in zip(ids_e, geoms_e)])
+    assert idx.zone_res[[2, 5]].tolist() == [-1, -1]
+    assert idx.res == pip.ZoneIndex([(z, wkb.dumps(g)) for z, g in zip(IDS, geoms)]).res
+    for predicate in ("covers", "contains"):
+        want = brute_pairs(IDS, geoms, px, py, predicate)
+        assert pairs(pip.pip_join_broadcast(pts, zdf_e, point_cols=["point_id"],
+                                            predicate=predicate)) == want
+        assert pairs(pip.pip_join_cells(pts, zdf_e, res=8, point_cols=["point_id"],
+                                        predicate=predicate)) == want
+
+    def cover(df):
+        return sorted((r["cell"], r["zone_id"], bytes(r["geometry"]))
+                      for r in pip.zone_cell_covering(df, 8).collect())
+
+    assert cover(zdf_e) == cover(zdf)

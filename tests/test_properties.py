@@ -54,7 +54,7 @@ def test_cover_superset_no_false_negatives(cx, cy, r, seed):
     if len(hull) < 4:
         return
     res = 8
-    cover = set(cells.polygon_cover([hull], res).tolist())
+    cover = set(cells.cover_zones(hull, [0, len(hull)], [0], 1, res)[0].tolist())
     # sample interior points via rejection
     pts = rng.uniform([hull[:, 0].min(), hull[:, 1].min()],
                       [hull[:, 0].max(), hull[:, 1].max()], (64, 2))

@@ -158,7 +158,7 @@ def test_decode_convex_rings_accepts_and_rejects():
     concave = np.array([[0, 0], [4, 0], [4, 4], [2, 1], [0, 4], [0, 0]],
                        dtype=np.float64)
     bufs.append(wkb.dumps({"type": "Polygon", "coordinates": [concave]}))
-    ok, pts, cnt = overlay.decode_convex_rings(np.array(bufs, dtype=object))
+    ok, pts, cnt = wkb.decode_convex_rings(np.array(bufs, dtype=object))
     assert ok[:30].all() and not ok[30]
     for i, r in enumerate(rings):
         np.testing.assert_array_equal(pts[i, :cnt[i]], r[:-1])

@@ -128,8 +128,10 @@ def main():
     cap(
         "Overlay candidate generation (one shuffle for dedup + spread)",
         cand,
-        "Both layers explode to covering cells (whole-batch rectangle "
-        "fast path — no per-feature Python); the pair dedup's "
+        "Both layers explode to covering cells (one batched "
+        "`cells.cover_zones` call per Arrow batch; rectangles and small "
+        "convex rings decode whole-batch, no per-feature Python); the "
+        "pair dedup's "
         "`repartition(4·cores, pair-key)` satisfies the aggregate's "
         "required distribution, so Catalyst inserts NO second "
         "exchange and the width is pinned for the Python refine (AQE "
