@@ -109,7 +109,7 @@ class ZoneIndex:
             res = self._auto_res()
         self.res = res
         # covering res of each zone (one per zone, see cells.cover_zones);
-        # -1 for an empty zone
+        # -1 for a zone with no covering cell
         zc, zz, self.zone_res = cells.cover_zones(
             *_exteriors(enumerate(self.parts)), len(self.parts), res,
             max_cells_per_zone)
