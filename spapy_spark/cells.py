@@ -207,12 +207,21 @@ def cell_to_parent(cell, parent_res: int) -> np.ndarray:
 # ---------------------------------------------------------------------------
 
 
+def _max_ij(lat, lon, res: int):
+    """:func:`latlon_to_ij` of a bbox's max corner: longitude clamps into
+    [-180, 180] instead of wrapping, so a box reaching lon 180 ends in
+    the last column, not in column 0."""
+    fx = np.clip((np.asarray(lon, dtype=np.float64) + 180.0) / 360.0, 0.0, 1.0)
+    ix = np.clip(np.floor(fx * (1 << res)).astype(np.int64), 0, (1 << res) - 1)
+    return ix, latlon_to_ij(lat, lon, res)[1]
+
+
 def cover_bbox(lon_min, lat_min, lon_max, lat_max, res: int) -> np.ndarray:
     """All res-``res`` cells intersecting an axis-aligned bbox (no
     antimeridian wrap — callers split wrapped boxes first)."""
     n = 1 << res
     ix0, iy0 = latlon_to_ij(np.float64(lat_min), np.float64(lon_min), res)
-    ix1, iy1 = latlon_to_ij(np.float64(min(lat_max, 90.0)), np.float64(lon_max), res)
+    ix1, iy1 = _max_ij(np.float64(min(lat_max, 90.0)), np.float64(lon_max), res)
     ix0, iy0, ix1, iy1 = int(ix0), int(iy0), int(ix1), int(iy1)
     ix1 = min(max(ix1, ix0), n - 1)
     iy1 = min(max(iy1, iy0), n - 1)
@@ -244,7 +253,7 @@ def cover_zones(xy, ring_start, ring_zone, n_zones: int, res: int,
     grouped by zone in ascending order, and each zone's res (-1 for a
     zone with no cell).
     """
-    from .geometry import kernels  # local import: avoid cycle at module load
+    from .geometry import kernels, wkb  # local import: avoid cycle at module load
 
     xy = np.asarray(xy, dtype=np.float64)
     start = np.asarray(ring_start, dtype=np.int64)
@@ -278,7 +287,7 @@ def cover_zones(xy, ring_start, ring_zone, n_zones: int, res: int,
     for r in np.unique(lev).tolist():
         m = lev == r
         ix0[m], iy0[m] = latlon_to_ij(ry0[m], rx0[m], r)
-        ix1[m], iy1[m] = latlon_to_ij(ry1[m], rx1[m], r)
+        ix1[m], iy1[m] = _max_ij(ry1[m], rx1[m], r)
     h = np.maximum(iy1, iy0) - iy0 + 1
     cnt = (np.maximum(ix1, ix0) - ix0 + 1) * h
     first = np.cumsum(cnt) - cnt
@@ -287,7 +296,10 @@ def cover_zones(xy, ring_start, ring_zone, n_zones: int, res: int,
     out = ij_to_cell(ix0[ring] + k // h[ring], iy0[ring] + k % h[ring], lev[ring])
     oz = rz[ring]
     big = np.nonzero(cnt > 4)[0]
-    trim = big[~_bbox_rings(xy, lo[big], hi[big])]
+    five = big[hi[big] - lo[big] == 5]
+    rect = np.zeros(len(lo), dtype=bool)
+    rect[five] = wkb.bbox_rings(xy[lo[five, None] + np.arange(5)])
+    trim = big[~rect[big]]
     if len(trim):
         keep = np.ones(len(out), dtype=bool)
         clo, cla, chi, cha = cell_bounds(out)
@@ -310,20 +322,6 @@ def cover_zones(xy, ring_start, ring_zone, n_zones: int, res: int,
     covered[oz] = True
     eff[~covered] = -1  # every bbox cell trimmed away
     return out, oz, eff
-
-
-def _bbox_rings(xy, lo, hi) -> np.ndarray:
-    """True per ring ``xy[lo:hi]`` that is exactly its bbox: 5 vertices,
-    closed, axis-parallel edges (one coordinate changes per edge), and
-    both pairs of opposite vertices differing in both coordinates."""
-    out = np.zeros(len(lo), dtype=bool)
-    five = np.nonzero(hi - lo == 5)[0]
-    v = xy[lo[five, None] + np.arange(5)]
-    d = np.diff(v, axis=1)
-    out[five] = ((v[:, 0] == v[:, 4]).all(axis=1)
-                 & ((d[..., 0] == 0) != (d[..., 1] == 0)).all(axis=1)
-                 & (v[:, 0] != v[:, 2]).all(axis=1) & (v[:, 1] != v[:, 3]).all(axis=1))
-    return out
 
 
 __all__ = [

@@ -15,9 +15,19 @@ as :func:`promote_multi` (/root/reference/SpaVectors.py:308-309,659-663).
 
 WKB is always emitted little-endian (byte order 1); both byte orders are
 accepted on read.  Coordinate payloads are decoded with
-``np.frombuffer`` — one numpy call per ring, no per-coordinate Python;
-:func:`decode_convex_rings` decodes a whole batch of small convex
-single-ring Polygons (tiles, boxes) at once.
+``np.frombuffer`` — one numpy call per ring, no per-coordinate Python.
+
+The batch fast paths (overlay/relate refine, rectangle buffer, zone
+coverings) share one decoder, one rectangle test and one encoder:
+
+- :func:`decode_convex_rings` decodes a whole batch of small convex
+  single-ring Polygons (tiles, boxes) at once;
+- :func:`bbox_rings` is the rectangle test — a ring is a rectangle when
+  it is exactly its own bbox — and :func:`rect_bounds` applies it to
+  decoded rings (4 vertices) and returns their bounds;
+- :func:`encode_mp_rings` encodes a batch of rings as 1-part
+  MultiPolygons; rectangles go through it as their
+  :func:`box_corners`.
 """
 
 from __future__ import annotations
@@ -190,6 +200,63 @@ def decode_convex_rings(
     return ok, pts, cnt
 
 
+def bbox_rings(v) -> np.ndarray:
+    """The rectangle test: True per closed 5-vertex ring ``v[i]`` ((m, 5,
+    2)) that is exactly its bbox — axis-parallel edges (one coordinate
+    changes per edge) and both pairs of opposite vertices differing in
+    both coordinates, so a ring that doubles back on itself fails."""
+    d = np.diff(v, axis=1)
+    return ((v[:, 0] == v[:, 4]).all(axis=1)
+            & ((d[..., 0] == 0) != (d[..., 1] == 0)).all(axis=1)
+            & (v[:, 0] != v[:, 2]).all(axis=1) & (v[:, 1] != v[:, 3]).all(axis=1))
+
+
+def rect_bounds(ok, pts, cnt) -> tuple[np.ndarray, np.ndarray]:
+    """The rectangles among :func:`decode_convex_rings` output: returns
+    ``(rect, bounds)``, ``rect[i]`` True iff ring *i* decoded to 4
+    vertices that pass :func:`bbox_rings`, and ``bounds[i]`` its
+    ``(minx, miny, maxx, maxy)`` there (zeros elsewhere)."""
+    v = pts[:, [0, 1, 2, 3, 0]]  # every row, closed: no masked copies
+    rect = ok & (cnt == 4) & bbox_rings(v)
+    q = v[:, :4]
+    bounds = np.concatenate([q.min(axis=1), q.max(axis=1)], axis=1)
+    return rect, np.where(rect[:, None], bounds, 0.0)
+
+
+def box_corners(b) -> np.ndarray:
+    """(n, 4) ``[minx, miny, maxx, maxy]`` rows → (n, 4, 2) open CCW rings
+    starting at (minx, miny), the vertex order of :func:`box`."""
+    return np.asarray(b, dtype=np.float64)[:, [[0, 1], [2, 1], [2, 3], [0, 3]]]
+
+
+def encode_mp_rings(pts: np.ndarray, cnt: np.ndarray) -> list[bytes]:
+    """Batch-encode padded OPEN rings as 1-part MultiPolygon WKB
+    (closing vertex appended), byte-identical to :func:`dumps` —
+    grouped by vertex count, one header stamp + coord view per group."""
+    n = len(cnt)
+    out: list = [None] * n
+    for c in np.unique(cnt):
+        ci = int(c)
+        idx = np.nonzero(cnt == c)[0]
+        v = ci + 1  # closed
+        L = 9 + 13 + 16 * v
+        hdr = np.frombuffer(
+            bytes([1, 6, 0, 0, 0, 1, 0, 0, 0, 1, 3, 0, 0, 0, 1, 0, 0, 0])
+            + v.to_bytes(4, "little"),
+            dtype=np.uint8,
+        )
+        buf = np.empty((len(idx), L), dtype=np.uint8)
+        buf[:, : len(hdr)] = hdr
+        ring = np.empty((len(idx), v, 2), dtype="<f8")
+        ring[:, :ci] = pts[idx, :ci]
+        ring[:, ci] = pts[idx, 0]
+        buf[:, len(hdr):] = ring.reshape(len(idx), -1).view(np.uint8)
+        flat = buf.tobytes()
+        for i, k in zip(idx.tolist(), range(0, len(flat), L)):
+            out[i] = flat[k:k + L]
+    return out
+
+
 # ---------------------------------------------------------------------------
 # Convenience constructors / reference semantics
 # ---------------------------------------------------------------------------
@@ -220,17 +287,11 @@ def dumps_boxes(b: np.ndarray) -> list[bytes]:
     maxy] rows — byte-identical output, one header stamp + one coord
     view instead of n per-ring encodes (fixture/bbox layers are built
     by the hundred-thousand)."""
-    b = np.asarray(b, dtype=np.float64)
-    m = len(b)
+    ring = np.ascontiguousarray(box_corners(b)[:, [0, 1, 2, 3, 0]], dtype="<f8")
+    m = len(ring)
     out = np.empty((m, 13 + 80), dtype=np.uint8)
     out[:, :13] = _BOX_WKB_HDR
-    ring = np.empty((m, 5, 2), dtype="<f8")
-    ring[:, 0, 0] = b[:, 0]; ring[:, 0, 1] = b[:, 1]
-    ring[:, 1, 0] = b[:, 2]; ring[:, 1, 1] = b[:, 1]
-    ring[:, 2, 0] = b[:, 2]; ring[:, 2, 1] = b[:, 3]
-    ring[:, 3, 0] = b[:, 0]; ring[:, 3, 1] = b[:, 3]
-    ring[:, 4, 0] = b[:, 0]; ring[:, 4, 1] = b[:, 1]
-    out[:, 13:] = ring.reshape(m, -1).view(np.uint8)
+    out[:, 13:] = ring.reshape(m, 10).view(np.uint8)
     return [r.tobytes() for r in out]
 
 
@@ -270,4 +331,8 @@ __all__ = [
     "promote_multi",
     "polygons_of",
     "decode_convex_rings",
+    "bbox_rings",
+    "rect_bounds",
+    "box_corners",
+    "encode_mp_rings",
 ]

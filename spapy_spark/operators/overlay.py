@@ -9,15 +9,16 @@ Semantics parity (SpaVectors.py:901-983):
 - Polygon results promoted to MultiPolygon (type promotion, :308-309).
 
 Geometry construction is a three-level strategy dispatch, refined
-whole-batch first:
+whole-batch first.  Both sides of a batch are decoded once
+(``wkb.decode_convex_rings``); the rectangles among them are those
+that pass ``wkb.rect_bounds``:
 
 1. axis-aligned rect × rect — closed-form min/max interval overlap,
-   vectorized over the whole Arrow batch (``decode_aa_rects`` +
-   ``encode_mp_boxes``);
-2. convex rings ≤16 verts — decoded (``wkb.decode_convex_rings``) and
-   clipped (Sutherland–Hodgman, ``clip_convex_batch``) whole-batch,
-   proven bit-identical to the per-pair kernel
-   (tests/test_rect_fastpath.py pattern);
+   vectorized over the whole Arrow batch and encoded from the result
+   box's corners (``wkb.encode_mp_rings``);
+2. convex rings ≤16 verts — clipped (Sutherland–Hodgman,
+   ``clip_convex_batch``) whole-batch, proven bit-identical to the
+   per-pair kernel (tests/test_rect_fastpath.py pattern);
 3. anything else (concave, holed, multi-part) — general
    Greiner–Hormann composition per pair (geometry/clip2.boolean_op),
    behind a whole-batch bbox pre-reject that skips provably-empty
@@ -369,88 +370,12 @@ def _contains(g1: dict, g2: dict) -> bool:
 # rings (tiles, bboxes, grid cells — and the reference's own Box.shp
 # tests).  Decoding those through wkb.loads + the per-pair dict-geometry
 # kernels pays ~50 µs of interpreter overhead per pair; the whole-batch
-# numpy path below decodes every candidate WKB in ONE frombuffer and
-# decides clip/predicates as array ops — per-pair cost ~0.5 µs.  Pairs
-# that are not rect×rect (holes, non-axis-aligned, multipolygons) fall
-# through to the exact per-pair kernels unchanged.
+# numpy path below decodes every candidate WKB with one frombuffer per
+# byte length (wkb.decode_convex_rings + wkb.rect_bounds) and decides
+# clip/predicates as array ops — per-pair cost ~0.5 µs.  Pairs that are
+# not rect×rect (holes, non-axis-aligned, multipolygons) fall through
+# to the exact per-pair kernels unchanged.
 # ---------------------------------------------------------------------------
-
-# WKB header of a little-endian single-ring 5-point Polygon
-_RECT_HDR = np.frombuffer(
-    bytes([1, 3, 0, 0, 0, 1, 0, 0, 0, 5, 0, 0, 0]), dtype=np.uint8
-)
-_RECT_LEN = 13 + 5 * 16  # 93 bytes
-
-
-def decode_aa_rects(bufs) -> tuple[np.ndarray, np.ndarray]:
-    """Batch-decode WKB buffers that are axis-aligned rectangles.
-
-    Returns ``(ok, rects)``: ``ok[i]`` is True iff buffer *i* is a
-    little-endian single-ring closed 5-point Polygon whose ring is an
-    axis-aligned non-degenerate rectangle (either orientation, any
-    starting corner); ``rects[i] = (minx, miny, maxx, maxy)`` where ok.
-    """
-    n = len(bufs)
-    ok = np.zeros(n, dtype=bool)
-    rects = np.zeros((n, 4), dtype=np.float64)
-    if n == 0:
-        return ok, rects
-    vals = bufs.to_numpy() if hasattr(bufs, "to_numpy") else np.asarray(bufs, dtype=object)
-    lens = np.fromiter((len(b) for b in vals), dtype=np.int64, count=n)
-    cand = np.nonzero(lens == _RECT_LEN)[0]
-    if len(cand) == 0:
-        return ok, rects
-    raw = np.frombuffer(
-        b"".join(bytes(vals[i]) for i in cand), dtype=np.uint8
-    ).reshape(-1, _RECT_LEN)
-    hdr_ok = (raw[:, :13] == _RECT_HDR).all(axis=1)
-    coords = (
-        np.ascontiguousarray(raw[:, 13:]).view("<f8").reshape(-1, 5, 2)
-    )
-    closed = (coords[:, 0] == coords[:, 4]).all(axis=1)
-    xs, ys = coords[:, :4, 0], coords[:, :4, 1]
-    x0, x1 = xs.min(axis=1), xs.max(axis=1)
-    y0, y1 = ys.min(axis=1), ys.max(axis=1)
-    at_corner = (
-        ((xs == x0[:, None]) | (xs == x1[:, None]))
-        & ((ys == y0[:, None]) | (ys == y1[:, None]))
-    ).all(axis=1)
-    dx = np.diff(coords[:, :, 0], axis=1)
-    dy = np.diff(coords[:, :, 1], axis=1)
-    axis_par = ((dx == 0) ^ (dy == 0)).all(axis=1)
-    good = hdr_ok & closed & at_corner & axis_par & (x0 < x1) & (y0 < y1)
-    idx = cand[good]
-    ok[idx] = True
-    rects[idx, 0] = x0[good]
-    rects[idx, 1] = y0[good]
-    rects[idx, 2] = x1[good]
-    rects[idx, 3] = y1[good]
-    return ok, rects
-
-
-# MultiPolygon(1 part, 1 ring, 5 pts) WKB template for the encoder
-_MP_BOX_LEN = 9 + _RECT_LEN
-_MP_BOX_HDR = np.frombuffer(
-    bytes([1, 6, 0, 0, 0, 1, 0, 0, 0]) + bytes(_RECT_HDR), dtype=np.uint8
-)
-
-
-def encode_mp_boxes(b: np.ndarray) -> list[bytes]:
-    """Batch-encode (m, 4) [minx,miny,maxx,maxy] rows as MultiPolygon
-    WKB (single CCW box ring each) — the fast-path twin of
-    ``wkb.dumps({'type': 'MultiPolygon', ...})``."""
-    m = len(b)
-    out = np.empty((m, _MP_BOX_LEN), dtype=np.uint8)
-    out[:, : len(_MP_BOX_HDR)] = _MP_BOX_HDR
-    ring = np.empty((m, 5, 2), dtype="<f8")
-    ring[:, 0, 0] = b[:, 0]; ring[:, 0, 1] = b[:, 1]
-    ring[:, 1, 0] = b[:, 2]; ring[:, 1, 1] = b[:, 1]
-    ring[:, 2, 0] = b[:, 2]; ring[:, 2, 1] = b[:, 3]
-    ring[:, 3, 0] = b[:, 0]; ring[:, 3, 1] = b[:, 3]
-    ring[:, 4, 0] = b[:, 0]; ring[:, 4, 1] = b[:, 1]
-    out[:, len(_MP_BOX_HDR):] = ring.reshape(m, -1).view(np.uint8)
-    return [r.tobytes() for r in out]
-
 
 def _shoelace_open(r: np.ndarray, cnt: np.ndarray) -> np.ndarray:
     """Signed area ×2 of padded OPEN rings (n, M, 2) with counts."""
@@ -547,33 +472,6 @@ def clip_convex_batch(
         m = np.where(live, m_new, m)
     valid = m >= 3
     return valid, cur, m
-
-
-def encode_mp_rings(pts: np.ndarray, cnt: np.ndarray) -> list[bytes]:
-    """Batch-encode padded OPEN rings as 1-part MultiPolygon WKB
-    (closing vertex appended) — grouped by vertex count, one header
-    stamp + coord view per group."""
-    n = len(cnt)
-    out: list = [None] * n
-    for c in np.unique(cnt):
-        ci = int(c)
-        idx = np.nonzero(cnt == c)[0]
-        v = ci + 1  # closed
-        L = 9 + 13 + 16 * v
-        hdr = np.frombuffer(
-            bytes([1, 6, 0, 0, 0, 1, 0, 0, 0, 1, 3, 0, 0, 0, 1, 0, 0, 0])
-            + v.to_bytes(4, "little"),
-            dtype=np.uint8,
-        )
-        buf = np.empty((len(idx), L), dtype=np.uint8)
-        buf[:, : len(hdr)] = hdr
-        ring = np.empty((len(idx), v, 2), dtype="<f8")
-        ring[:, :ci] = pts[idx, :ci]
-        ring[:, ci] = pts[idx, 0]
-        buf[:, len(hdr):] = ring.reshape(len(idx), -1).view(np.uint8)
-        for k, i in enumerate(idx):
-            out[i] = buf[k].tobytes()
-    return out
 
 
 def rect_predicates(lr: np.ndarray, rr: np.ndarray) -> dict[str, np.ndarray]:
@@ -818,40 +716,37 @@ def overlay_join(
             if use_rect_fast and len(pdf):
                 li_all = pdf[left_id].to_numpy()
                 ri_all = pdf[right_id].to_numpy()
-                lok, lr = decode_aa_rects(pdf["__lg"])
-                rok, rr = decode_aa_rects(pdf["__rg"])
+                cok_l, cp_l, cc_l = wkb.decode_convex_rings(pdf["__lg"])
+                cok_r, cp_r, cc_r = wkb.decode_convex_rings(pdf["__rg"])
+                lok, lr = wkb.rect_bounds(cok_l, cp_l, cc_l)
+                rok, rr = wkb.rect_bounds(cok_r, cp_r, cc_r)
                 both = lok & rok
-                ib = np.empty((len(pdf), 4), dtype=np.float64)
-                ib[:, 0] = np.maximum(lr[:, 0], rr[:, 0])
-                ib[:, 1] = np.maximum(lr[:, 1], rr[:, 1])
-                ib[:, 2] = np.minimum(lr[:, 2], rr[:, 2])
-                ib[:, 3] = np.minimum(lr[:, 3], rr[:, 3])
+                ib = np.hstack([np.maximum(lr[:, :2], rr[:, :2]),
+                                np.minimum(lr[:, 2:], rr[:, 2:])])
                 # only strictly-overlapping pairs take the rect exit;
                 # touching/disjoint rects keep the per-pair kernel's
                 # exact empty/degenerate handling
                 fast = both & (ib[:, 0] < ib[:, 2]) & (ib[:, 1] < ib[:, 3])
                 if fast.any():
                     fast_parts.append((
-                        li_all[fast], ri_all[fast], encode_mp_boxes(ib[fast])
+                        li_all[fast], ri_all[fast],
+                        wkb.encode_mp_rings(wkb.box_corners(ib[fast]),
+                                            np.full(int(fast.sum()), 4)),
                     ))
                 # non-rect CONVEX pairs: whole-batch Sutherland–Hodgman
                 # — bit-identical outputs to the per-pair kernel
-                rest = ~fast & ~both
-                if rest.any():
-                    cok_l, cp_l, cc_l = wkb.decode_convex_rings(pdf["__lg"])
-                    cok_r, cp_r, cc_r = wkb.decode_convex_rings(pdf["__rg"])
-                    conv = rest & cok_l & cok_r
-                    if conv.any():
-                        vld, oc, ocnt = clip_convex_batch(
-                            cp_l[conv], cc_l[conv], cp_r[conv], cc_r[conv]
-                        )
-                        keep = np.nonzero(conv)[0][vld]
-                        fast[conv] = True  # decided (incl. empty ones)
-                        if vld.any():
-                            fast_parts.append((
-                                li_all[keep], ri_all[keep],
-                                encode_mp_rings(oc[vld], ocnt[vld]),
-                            ))
+                conv = ~both & cok_l & cok_r
+                if conv.any():
+                    vld, oc, ocnt = clip_convex_batch(
+                        cp_l[conv], cc_l[conv], cp_r[conv], cc_r[conv]
+                    )
+                    keep = np.nonzero(conv)[0][vld]
+                    fast[conv] = True  # decided (incl. empty ones)
+                    if vld.any():
+                        fast_parts.append((
+                            li_all[keep], ri_all[keep],
+                            wkb.encode_mp_rings(oc[vld], ocnt[vld]),
+                        ))
             ids1, ids2, geoms = [], [], []
             slow = np.nonzero(~fast)[0] if fast.any() else range(len(pdf))
             lgs = pdf["__lg"].to_numpy()
@@ -892,19 +787,6 @@ def overlay_join(
     if untouched is not None:
         out = out.unionByName(untouched)
     return out
-
-
-def overlay_intersection(
-    left: DataFrame,
-    right: DataFrame,
-    res: int = 8,
-    left_id: str = "left_id",
-    right_id: str = "right_id",
-    geometry: str = "geometry",
-) -> DataFrame:
-    """Pairwise A∩B for all candidate pairs (right rings convex)."""
-    return overlay_join(left, right, "intersection", res, left_id,
-                        right_id, geometry)
 
 
 def self_overlay_fold(
@@ -1012,8 +894,8 @@ def relate_join(
 
     def refine(batches):
         for pdf in batches:
-            lok, lr = decode_aa_rects(pdf["__lg"])
-            rok, rr = decode_aa_rects(pdf["__rg"])
+            lok, lr = wkb.rect_bounds(*wkb.decode_convex_rings(pdf["__lg"]))
+            rok, rr = wkb.rect_bounds(*wkb.decode_convex_rings(pdf["__rg"]))
             both = lok & rok
             hold = np.zeros(len(pdf), dtype=bool)
             if both.any():
@@ -1060,8 +942,8 @@ def relate_counts_multi(
     def refine(batches):
         acc = {p: 0 for p in predicates}
         for pdf in batches:
-            lok, lr = decode_aa_rects(pdf["__lg"])
-            rok, rr = decode_aa_rects(pdf["__rg"])
+            lok, lr = wkb.rect_bounds(*wkb.decode_convex_rings(pdf["__lg"]))
+            rok, rr = wkb.rect_bounds(*wkb.decode_convex_rings(pdf["__rg"]))
             both = lok & rok
             if both.any():
                 rp = rect_predicates(lr[both], rr[both])

@@ -250,18 +250,11 @@ def buffer_rects_batch(
     rects: np.ndarray, amount: float, quad_segs: int = 16
 ) -> list[bytes]:
     """Whole-batch rectangle buffer → 1-part MultiPolygon WKB rings."""
-    from .overlay import encode_mp_rings
-
     anch, offs = _rect_buffer_template(amount, quad_segs)
-    n = len(rects)
-    corners = np.empty((n, 4, 2), dtype=np.float64)
-    corners[:, 0, 0] = rects[:, 2]; corners[:, 0, 1] = rects[:, 3]  # TR
-    corners[:, 1, 0] = rects[:, 0]; corners[:, 1, 1] = rects[:, 3]  # TL
-    corners[:, 2, 0] = rects[:, 0]; corners[:, 2, 1] = rects[:, 1]  # BL
-    corners[:, 3, 0] = rects[:, 2]; corners[:, 3, 1] = rects[:, 1]  # BR
+    corners = wkb.box_corners(rects)[:, [2, 3, 0, 1]]  # TR, TL, BL, BR
     rings = corners[:, anch, :] + offs[None, :, :]
-    cnt = np.full(n, rings.shape[1], dtype=np.int64)
-    return encode_mp_rings(rings, cnt)
+    cnt = np.full(len(rects), rings.shape[1], dtype=np.int64)
+    return wkb.encode_mp_rings(rings, cnt)
 
 
 def buffer(df: DataFrame, amount: float, geometry: str = "geometry",
@@ -275,7 +268,6 @@ def buffer(df: DataFrame, amount: float, geometry: str = "geometry",
     shapes run the exact per-feature Minkowski kernel."""
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import BinaryType
-    from .overlay import decode_aa_rects
 
     def op(g):
         out = buffer_geom(g, amount, quad_segs)
@@ -288,7 +280,7 @@ def buffer(df: DataFrame, amount: float, geometry: str = "geometry",
     def u(geom: pd.Series) -> pd.Series:
         vals = geom.to_numpy()
         out: list = [None] * len(vals)
-        ok, rects = decode_aa_rects(vals)
+        ok, rects = wkb.rect_bounds(*wkb.decode_convex_rings(vals))
         if ok.any():
             fast = buffer_rects_batch(rects[ok], amount, quad_segs)
             for j, i in enumerate(np.nonzero(ok)[0]):

@@ -108,10 +108,10 @@ class TestDistributedOverlay:
         want = self._brute_pairs(zones_df, boxes_df, "intersects")
         assert got == want and len(want) > 3
 
-    def test_overlay_intersection_matches_bruteforce(
+    def test_overlay_join_intersection_matches_bruteforce(
         self, spark, zones_df, boxes_df
     ):
-        res = overlay.overlay_intersection(zones_df, boxes_df).collect()
+        res = overlay.overlay_join(zones_df, boxes_df, "intersection").collect()
         got = {(r["left_id"], r["right_id"]) for r in res}
         # brute: nonempty convex-clip intersection per pair
         zs = [(r["left_id"], wkb.loads(bytes(r["geometry"])))

@@ -148,6 +148,28 @@ def test_contains_near_a_cell_edge(spark):
     assert brute_pairs([3], geoms, px, py, "contains") == {(1, 3)}
 
 
+def test_zone_reaching_lon_180(spark):
+    """A box whose max corner is lon 180 covers its last cell column:
+    the corner is clamped into the grid, not wrapped to column 0, so
+    points at lon 171, 176 and 179.9 are all candidates and matches."""
+    geoms = [wkb.box(170.0, 10.0, 180.0, 20.0)]
+    px, py = np.array([171.0, 176.0, 179.9]), np.full(3, 15.0)
+    own = set(cells.latlon_to_cell(py, px, 6).tolist())
+    cover = cells.cover_bbox(170.0, 10.0, 180.0, 20.0, 6)
+    assert len(cover) == 10 and own <= set(cover.tolist())
+    zdf = _zone_df(spark, [9], geoms)
+    rows = pip.zone_cell_covering(zdf, 6).collect()
+    assert own <= {r["cell"] for r in rows}
+    pts = _points_df(spark, px, py)
+    for predicate in ("covers", "contains"):
+        want = {(0, 9), (1, 9), (2, 9)}
+        assert brute_pairs([9], geoms, px, py, predicate) == want
+        assert pairs(pip.pip_join_cells(pts, zdf, res=6, point_cols=["point_id"],
+                                        predicate=predicate)) == want
+        assert pairs(pip.pip_join_broadcast(pts, zdf, point_cols=["point_id"],
+                                             predicate=predicate, res=6)) == want
+
+
 @pytest.mark.parametrize("res", [6, 7, 8])
 def test_index_covering_equals_zone_cell_covering(spark, res):
     """The cell join's covering (the ZoneIndex buckets it ships) is the

@@ -1,6 +1,7 @@
-"""Vectorized axis-aligned-rectangle fast path (operators/overlay.py):
-the whole-batch decode/predicate/encode helpers must agree bit-for-bit
-with the per-pair dict-geometry kernels they shortcut."""
+"""Vectorized axis-aligned-rectangle fast path (operators/overlay.py,
+geometry/wkb.py): the whole-batch decode/predicate/encode helpers must
+agree bit-for-bit with the per-pair dict-geometry kernels they
+shortcut."""
 
 import numpy as np
 import pytest
@@ -22,7 +23,8 @@ def test_decode_roundtrip_and_rejects():
     rects = _rand_rects(50, rng)
     bufs = [wkb.dumps(wkb.box(*r)) for r in rects]
     # adversarial non-rects of the same byte length (93): rotated
-    # 5-point ring, degenerate (zero-height), non-closed ring
+    # 5-point ring, degenerate (zero-height), a ring that doubles back
+    # with every vertex on a bbox corner; and a 1-part MultiPolygon
     tri_like = wkb.dumps({
         "type": "Polygon",
         "coordinates": [np.array(
@@ -34,22 +36,27 @@ def test_decode_roundtrip_and_rejects():
                     "coordinates": [[np.array(
                         [[0, 0], [1, 0], [1, 1], [0, 1], [0, 0]],
                         dtype=np.float64)]]})
-    bufs += [tri_like, degen, mp]
-    ok, out = overlay.decode_aa_rects(np.array(bufs, dtype=object))
+    back = wkb.dumps({"type": "Polygon", "coordinates": [np.array(
+        [[0, 0], [8, 0], [0, 0], [0, 8], [0, 0]], dtype=np.float64)]})
+    bufs += [tri_like, degen, mp, back]
+    ok, out = wkb.rect_bounds(
+        *wkb.decode_convex_rings(np.array(bufs, dtype=object)))
     assert ok[:50].all() and not ok[50:].any()
     np.testing.assert_array_equal(out[:50], rects)
 
 
-def test_encode_mp_boxes_matches_wkb_dumps():
+def test_encode_mp_rings_of_box_corners_matches_wkb_dumps():
     rng = np.random.default_rng(3)
     rects = _rand_rects(20, rng)
-    fast = overlay.encode_mp_boxes(rects)
-    for r, buf in zip(rects, fast):
+    fast = wkb.encode_mp_rings(wkb.box_corners(rects), np.full(20, 4))
+    for r, buf, poly in zip(rects, fast, wkb.dumps_boxes(rects)):
         slow = wkb.dumps({
             "type": "MultiPolygon",
             "coordinates": [[wkb.box(*r)["coordinates"][0]]],
         })
         assert buf == slow
+        assert poly == wkb.dumps(wkb.box(*r))
+    assert wkb.dumps_boxes(np.empty((0, 4))) == []
 
 
 @pytest.mark.parametrize("predicate", [
@@ -251,3 +258,33 @@ def test_rect_buffer_fast_path_exact():
         inside = kernels.points_in_polygon_geom(pts[:, 0], pts[:, 1], fast)
         clear = (dist < r * np.cos(np.pi / n) * 0.999) | (dist > r * 1.001)
         assert (inside[clear] == (dist < r)[clear]).all()
+
+
+def test_doubled_back_ring_takes_the_per_pair_kernels(spark):
+    """A zero-area ring that doubles back, every vertex on a corner of
+    its bbox [0,8]², is not a rectangle: overlay, relate and buffer give
+    the per-pair kernels' answers against box(2,2,4,4), not a full
+    box's (one covering cell at res 3, so the pair is a candidate)."""
+    from spapy_spark.operators import vector
+
+    back = {"type": "Polygon", "coordinates": [np.array(
+        [[0, 0], [8, 0], [0, 0], [0, 8], [0, 0]], dtype=np.float64)]}
+    box = wkb.box(2, 2, 4, 4)
+    left = spark.createDataFrame([(1, wkb.dumps(back))],
+                                 "left_id bigint, geometry binary")
+    right = spark.createDataFrame([(2, wkb.dumps(box))],
+                                  "right_id bigint, geometry binary")
+    assert overlay.overlay_geom(back, box, "intersection") is None
+    assert overlay.overlay_join(left, right, "intersection", res=3).count() == 0
+    preds = ("intersects", "touches", "overlaps", "contains", "within")
+    for p in preds + ("crosses", "disjoint"):
+        want = overlay.predicate_pair(back, box, p)
+        got = overlay.relate_join(left, right, p, res=3).collect()
+        assert [(r["left_id"], r["right_id"]) for r in got] == (
+            [(1, 2)] if want else []), p
+    counts = {r["predicate"]: r["n_pairs"] for r in
+              overlay.relate_counts_multi(left, right, preds, res=3).collect()}
+    assert counts == {p: 0 for p in preds}
+    want = wkb.dumps(wkb.promote_multi(vector.buffer_geom(back, 1.0, 16)))
+    got = vector.buffer(left, 1.0).collect()
+    assert [bytes(r["geometry"]) for r in got] == [want]
