@@ -4,7 +4,8 @@ A *cell* is an int64 encoding ``(resolution, morton(ix, iy))`` of a square
 lat/lon grid tile:
 
 - resolution ``r`` in [0, 26]: the world is split into ``2^r × 2^r`` tiles
-  (lon axis -180..180, lat axis -90..90, half-open on the top edge).
+  (lon axis -180..180, lat axis -90..90, half-open on the high edges
+  but for the last column and the top row, which hold lon 180 and lat 90).
 - ``ix`` indexes longitude, ``iy`` latitude; bits interleaved (Morton /
   Z-order) so that a parent cell id is a *prefix* of its children —
   the "cell-prefix hash join" key of BASELINE.json's north rule.
@@ -19,8 +20,8 @@ floating-point platform drift in the join keys (SURVEY.md §7.3).
 
 Everything here is a pure function of numpy arrays (driver side, and
 inside Arrow-batched Python stages such as the ZoneIndex probe), except
-:func:`cell_col` and :func:`parent_col`: their Catalyst twins, so cell
-keys of a DataFrame are computed in the JVM without a Python stage.
+the Catalyst twins (``*_col``), so the grid keys of every operator's
+DataFrames are computed in the JVM without a Python stage.
 
 Every zone covering comes from one function, :func:`cover_zones`, which
 covers a whole batch of zones in one pass: the ZoneIndex behind both
@@ -87,17 +88,20 @@ def _interleave(ix: np.ndarray, iy: np.ndarray) -> np.ndarray:
 def latlon_to_ij(lat, lon, res: int):
     """Quantize lat/lon arrays to integer grid coords at ``res``.
 
-    Longitude wraps modulo 360 into [-180, 180); latitude clamps to the
-    valid band (poles land in the top/bottom row; +inf and huge values
-    too — ``fy`` is clamped before the int cast, whose result on
-    out-of-range doubles is platform-defined).  NaN lands in row/column 0.
+    Lon in [-180, 180] maps monotonically as ``(lon + 180) / 360`` (lon
+    180 in the last column, as lat 90 in the top row); other lon wraps
+    ``lon + 180`` modulo 360, but for the ulp above 180, whose sum rounds
+    to 360.  Latitude clamps (+inf and huge values too — ``fy`` is clamped
+    before the int cast, whose result on out-of-range doubles is
+    platform-defined).  NaN lands in row/column 0.
     """
     if not 0 <= res <= MAX_RES:
         raise ValueError(f"res must be in [0, {MAX_RES}], got {res}")
     lat = np.asarray(lat, dtype=np.float64)
     lon = np.asarray(lon, dtype=np.float64)
     n = np.int64(1) << np.int64(res)
-    fx = (np.mod(lon + 180.0, 360.0)) / 360.0  # [0, 1)
+    m = lon + 180.0
+    fx = np.where(m == 360.0, m, np.mod(m, 360.0)) / 360.0
     fy = np.clip((lat + 90.0) / 180.0, 0.0, 1.0)
     ix = np.clip(np.floor(fx * n).astype(np.int64), 0, int(n) - 1)
     iy = np.clip(np.floor(fy * n).astype(np.int64), 0, int(n) - 1)
@@ -117,37 +121,46 @@ def latlon_to_cell(lat, lon, res: int) -> np.ndarray:
     return ij_to_cell(ix, iy, res)
 
 
-def cell_col(lat, lon, res: int):
-    """Catalyst twin of :func:`latlon_to_cell`: the res-``res`` cell id
-    of Columns ``lat``/``lon`` as a LongType Column, bit-identical to the
-    numpy encoder for every double (NaN, ±inf, wrapped lon, clamped lat).
-
-    Quantize as :func:`latlon_to_ij` does — Java's double ``%`` is C
-    ``fmod``, and adding 360 to a negative remainder is ``np.mod``'s sign
-    fix (``pmod`` differs: it maps lon one ulp below -180 to column 0,
-    numpy to column n-1).  ``FLOOR`` saturates where numpy's clamped
-    ``fy`` does.  The interleave is per bit, so the expression is linear
-    in ``res``: the magic-mask spread reads its input twice per step, and
-    as nested Columns that copies the quantize expression 2^5 times.
+def ij_col(lat, lon, res: int):
+    """Catalyst twin of :func:`latlon_to_ij`: LongType ``(ix, iy)``
+    Columns, equal to it for every double (NaN, ±inf, wrapped lon).
+    Java's double ``%`` is C ``fmod``, and adding 360 to a negative
+    remainder is ``np.mod``'s sign fix (``pmod`` maps lon one ulp below
+    -180 to column 0, numpy to column n-1).  ``fx`` is never negative,
+    so ``ix`` (which a cell key copies once per bit) has no lower clamp.
     """
     from pyspark.sql import functions as F
 
     if not 0 <= res <= MAX_RES:
         raise ValueError(f"res must be in [0, {MAX_RES}], got {res}")
     n = 1 << res
-    m = (lon + 180.0) % 360.0
-    fx = (m + F.when(m < 0.0, 360.0).otherwise(0.0)) / 360.0
+    m = lon + 180.0
+    r = m % 360.0
+    fx = (r + F.when((r < 0.0) | (m == 360.0), 360.0).otherwise(0.0)) / 360.0
     fy = (lat + 90.0) / 180.0
+    ix = F.least(F.floor(fx * float(n)), F.lit(n - 1))
+    iy = F.least(F.greatest(F.floor(fy * float(n)), F.lit(0)), F.lit(n - 1))
+    return ix, iy
 
-    def quantize(f):
-        return F.least(F.greatest(F.floor(f * float(n)), F.lit(0)), F.lit(n - 1))
 
-    ix, iy = quantize(fx), quantize(fy)
+def ij_cell_col(ix, iy, res: int):
+    """Catalyst twin of :func:`ij_to_cell`.  The interleave is per bit,
+    so the expression is linear in ``res``: the magic-mask spread reads
+    its input twice per step, and as nested Columns that copies the
+    input expression 2^5 times.  The key of (ix, iy) is the OR of the
+    keys of (ix, 0) and (0, iy)."""
+    from pyspark.sql import functions as F
+
     out = F.lit(res << _RES_SHIFT)
     for b in range(res):
         out = out.bitwiseOR(F.shiftleft(ix.bitwiseAND(1 << b), b)).bitwiseOR(
             F.shiftleft(iy.bitwiseAND(1 << b), b + 1))
     return out
+
+
+def cell_col(lat, lon, res: int):
+    """Catalyst twin of :func:`latlon_to_cell`."""
+    return ij_cell_col(*ij_col(lat, lon, res), res)
 
 
 def parent_col(cell, res: int, parent_res: int):
@@ -178,16 +191,17 @@ def cell_to_ij(cell):
     return ix, iy
 
 
+def ij_bounds(ix, iy, res):
+    """(lon_min, lat_min, lon_max, lat_max) of grid cells (ix, iy): numpy
+    arrays, or Columns for an int ``res``."""
+    w, h = 360.0 / 2.0 ** res, 180.0 / 2.0 ** res
+    x0, y0 = ix * w - 180.0, iy * h - 90.0
+    return x0, y0, x0 + w, y0 + h
+
+
 def cell_bounds(cell):
     """(lon_min, lat_min, lon_max, lat_max) float64 arrays per cell."""
-    cell = np.asarray(cell, dtype=np.uint64)
-    res = cell_res(cell)
-    ix, iy = cell_to_ij(cell)
-    size_lon = 360.0 / (np.float64(2.0) ** res)
-    size_lat = 180.0 / (np.float64(2.0) ** res)
-    lon_min = -180.0 + ix * size_lon
-    lat_min = -90.0 + iy * size_lat
-    return lon_min, lat_min, lon_min + size_lon, lat_min + size_lat
+    return ij_bounds(*cell_to_ij(cell), cell_res(cell))
 
 
 def cell_to_parent(cell, parent_res: int) -> np.ndarray:
@@ -207,26 +221,15 @@ def cell_to_parent(cell, parent_res: int) -> np.ndarray:
 # ---------------------------------------------------------------------------
 
 
-def _max_ij(lat, lon, res: int):
-    """:func:`latlon_to_ij` of a bbox's max corner: longitude clamps into
-    [-180, 180] instead of wrapping, so a box reaching lon 180 ends in
-    the last column, not in column 0."""
-    fx = np.clip((np.asarray(lon, dtype=np.float64) + 180.0) / 360.0, 0.0, 1.0)
-    ix = np.clip(np.floor(fx * (1 << res)).astype(np.int64), 0, (1 << res) - 1)
-    return ix, latlon_to_ij(lat, lon, res)[1]
-
-
 def cover_bbox(lon_min, lat_min, lon_max, lat_max, res: int) -> np.ndarray:
     """All res-``res`` cells intersecting an axis-aligned bbox (no
     antimeridian wrap — callers split wrapped boxes first)."""
-    n = 1 << res
     ix0, iy0 = latlon_to_ij(np.float64(lat_min), np.float64(lon_min), res)
-    ix1, iy1 = _max_ij(np.float64(min(lat_max, 90.0)), np.float64(lon_max), res)
+    ix1, iy1 = latlon_to_ij(np.float64(lat_max),
+                            np.clip(np.float64(lon_max), -180.0, 180.0), res)
     ix0, iy0, ix1, iy1 = int(ix0), int(iy0), int(ix1), int(iy1)
-    ix1 = min(max(ix1, ix0), n - 1)
-    iy1 = min(max(iy1, iy0), n - 1)
-    xs = np.arange(ix0, ix1 + 1, dtype=np.int64)
-    ys = np.arange(iy0, iy1 + 1, dtype=np.int64)
+    xs = np.arange(ix0, max(ix1, ix0) + 1, dtype=np.int64)
+    ys = np.arange(iy0, max(iy1, iy0) + 1, dtype=np.int64)
     gx, gy = np.meshgrid(xs, ys, indexing="ij")
     return ij_to_cell(gx.ravel(), gy.ravel(), res)
 
@@ -287,7 +290,7 @@ def cover_zones(xy, ring_start, ring_zone, n_zones: int, res: int,
     for r in np.unique(lev).tolist():
         m = lev == r
         ix0[m], iy0[m] = latlon_to_ij(ry0[m], rx0[m], r)
-        ix1[m], iy1[m] = _max_ij(ry1[m], rx1[m], r)
+        ix1[m], iy1[m] = latlon_to_ij(ry1[m], np.clip(rx1[m], -180.0, 180.0), r)
     h = np.maximum(iy1, iy0) - iy0 + 1
     cnt = (np.maximum(ix1, ix0) - ix0 + 1) * h
     first = np.cumsum(cnt) - cnt
@@ -328,11 +331,14 @@ __all__ = [
     "MAX_RES",
     "latlon_to_cell",
     "cell_col",
+    "ij_col",
+    "ij_cell_col",
     "parent_col",
     "latlon_to_ij",
     "ij_to_cell",
     "cell_res",
     "cell_to_ij",
+    "ij_bounds",
     "cell_bounds",
     "cell_to_parent",
     "cover_bbox",

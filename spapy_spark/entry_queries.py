@@ -95,8 +95,10 @@ _SPREAD_STEPS = [  # (shift, mask) — low-byte subset of cells._part1by1
 def _morton_cte(pts_sql: str, res: int = _RES) -> str:
     """CTE chain computing the engine's Z-order cell id in pure SQL.
 
-    Matches cells.latlon_to_cell exactly: quantize (floor + clip), bit
-    -spread ix/iy with the magic-mask chain, OR with the res header.
+    Matches cells.latlon_to_cell exactly on lon [-180, 180] (lat clamps
+    on both sides): quantize (floor + clip), bit-spread ix/iy with the
+    magic-mask chain, OR with the res header.  Outside that lon range
+    the two differ: this clamps lon, the engine wraps it modulo 360.
     ``res`` must be ≤ 8 here (8-bit spread steps suffice).
     """
     if res > 8:

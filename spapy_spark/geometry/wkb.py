@@ -154,8 +154,8 @@ def decode_convex_rings(
 
     Returns ``(ok, pts, cnt)``: ``pts`` is (n, max_pts, 2) float64 with
     the OPEN ring (closing vertex dropped, original orientation) padded
-    with zeros; ``cnt[i]`` the vertex count.  One frombuffer per
-    distinct byte length — no per-row wkb.loads."""
+    with zeros; ``cnt[i]`` the vertex count; a ``None`` is not ``ok``.
+    One frombuffer per distinct byte length — no per-row wkb.loads."""
     n = len(bufs)
     ok = np.zeros(n, dtype=bool)
     pts = np.zeros((n, max_pts, 2), dtype=np.float64)
@@ -165,7 +165,9 @@ def decode_convex_rings(
     vals = bufs.to_numpy() if hasattr(bufs, "to_numpy") else np.asarray(
         bufs, dtype=object
     )
-    lens = np.fromiter(map(len, vals), dtype=np.int64, count=n)
+    # a null (None) is no Polygon: length 0 is never decodable
+    lens = np.fromiter((0 if b is None else len(b) for b in vals),
+                       dtype=np.int64, count=n)
     for L in np.unique(lens):
         if (L - 13) % 16 != 0:
             continue

@@ -28,7 +28,9 @@ broadcast when it is small, a partitioned join when it is not:
   others for every point in it, and the point stream joins its single
   cell's list after one shuffle.
 
-``within_distance`` is the range (theta) join on the same grid.
+``within_distance`` is the range (theta) join on the same grid.  All
+three key cells by ``cells`` (the SiteGrid by ``latlon_to_ij``, the grid
+joins by its Catalyst twin ``ij_col``), as the PIP plans do.
 
 Tie-break is deterministic everywhere: order by (distance, site_id) —
 the DuckDB oracle mirrors it with ``ORDER BY dist, site_id``.
@@ -146,18 +148,15 @@ def _topk_block(
 # ---------------------------------------------------------------------------
 
 
-def _cell_ij(lon_c, lat_c, n: int):
-    """Catalyst ``(ix, iy)`` of the lon/lat point's cell on the n×n
-    grid, clamped into the grid (the cell id is ``ix·n + iy``)."""
-    ix = F.least(
-        F.greatest(F.floor((lon_c + 180.0) / 360.0 * n), F.lit(0)),
-        F.lit(n - 1),
-    ).cast("long")
-    iy = F.least(
-        F.greatest(F.floor((lat_c + 90.0) / 180.0 * n), F.lit(0)),
-        F.lit(n - 1),
-    ).cast("long")
-    return ix, iy
+# knn_join_grid_exact's cell of every site, unpruned (no Morton id is < 0)
+_ALL_SITES = -1
+
+
+def _grid_points(points, point_id, x, y, res):
+    """Points as (point_id, __px, __py, __ix, __iy), bound in a Project."""
+    ix, iy = cells.ij_col(F.col(y), F.col(x), res)
+    return points.select(F.col(point_id), F.col(x).alias("__px"),
+                         F.col(y).alias("__py"), ix.alias("__ix"), iy.alias("__iy"))
 
 
 def within_distance(
@@ -178,6 +177,12 @@ def within_distance(
     the (2·rx+1)×(2·ry+1) cell neighborhood that provably covers a
     radius-``d`` disc; equi-join on the cell + exact distance filter.
 
+    No pair is lost to the wrap of lon outside [-180, 180]: around the
+    360° circle of wrapped lon two lons are never farther apart than in
+    the plane, so a pair within ``d`` is at most ``rx = ceil(d / cell_w)``
+    columns apart, and the neighbor ring wraps its columns with ``pmod``.
+    Lat clamps, which moves no two rows farther apart.
+
     Pure Catalyst (no Python, no broadcast): both sides can be
     arbitrarily large; the shuffle key is the cell, and the explosion
     factor is fixed by d/cell size, so the plan scales linearly.
@@ -187,28 +192,27 @@ def within_distance(
     import math
 
     n = 1 << res
-    cell_w, cell_h = 360.0 / n, 180.0 / n
-    rx = int(math.ceil(d / cell_w))
-    ry = int(math.ceil(d / cell_h))
+    rx, ry = (int(math.ceil(d / (span / n))) for span in (360.0, 180.0))
 
-    s_ix, s_iy = _cell_ij(F.col(sx), F.col(sy), n)
     s = sites.select(
         F.col(site_id).alias("__sid"), F.col(sx).alias("__sx"),
-        F.col(sy).alias("__sy"), (s_ix * n + s_iy).alias("__cell"),
+        F.col(sy).alias("__sy"),
+        cells.cell_col(F.col(sy), F.col(sx), res).alias("__cell"),
     )
-    p_ix, p_iy = _cell_ij(F.col(x), F.col(y), n)
-    offs = [(dy, dx) for dy in range(-ry, ry + 1) for dx in range(-rx, rx + 1)]
-    cells_arr = F.array(*[
-        F.when(
-            ((p_iy + dy) >= 0) & ((p_iy + dy) < n),
-            F.pmod(p_ix + dx, F.lit(n)) * n + (p_iy + dy),
-        )
-        for dy, dx in offs
-    ])
-    p = points.select(
-        F.col(point_id), F.col(x).alias("__px"), F.col(y).alias("__py"),
-        F.explode(cells_arr).alias("__cell"),
-    ).where(F.col("__cell").isNotNull())
+    # a cell key is the OR of its column's and its row's keys: key each
+    # once in a Project, so the explode (no subexpression reuse) only ORs
+    ix, iy, zero = F.col("__ix"), F.col("__iy"), F.lit(0)
+    p = _grid_points(points, point_id, x, y, res).select(
+        point_id, "__px", "__py",
+        *[cells.ij_cell_col(F.pmod(ix + dx, F.lit(n)), zero, res).alias(f"__c{dx}")
+          for dx in range(-rx, rx + 1)],
+        *[F.when((iy + dy >= 0) & (iy + dy < n), cells.ij_cell_col(zero, iy + dy, res))
+          .alias(f"__r{dy}") for dy in range(-ry, ry + 1)],
+    )
+    nbrs = F.array(*[F.col(f"__c{dx}").bitwiseOR(F.col(f"__r{dy}"))
+                     for dy in range(-ry, ry + 1) for dx in range(-rx, rx + 1)])
+    p = p.select(point_id, "__px", "__py", F.explode(nbrs).alias("__cell")
+                 ).where(F.col("__cell").isNotNull())
     j = p.join(s, "__cell")
     dx = F.col("__px") - F.col("__sx")
     dy = F.col("__py") - F.col("__sy")
@@ -247,6 +251,12 @@ def knn_join_grid_exact(
     takes the top-k — the hash distribution from the one point shuffle
     satisfies both the join and the window, so no second Exchange.
 
+    A point outside the rectangle of the cell it encodes to (lon
+    wrapped, lat clamped) breaks that argument, so it joins the extra
+    cell ``_ALL_SITES`` instead, which holds every site unpruned.
+    Points with a null or NaN coordinate are dropped, as no distance
+    to them ranks (``knn_join_cells``).
+
     This holds for a shuffle join: points above
     ``spark.sql.autoBroadcastJoinThreshold``, or the threshold at -1.
     Below it the repartitioned points are broadcast (``BuildLeft``) and
@@ -259,31 +269,28 @@ def knn_join_grid_exact(
     from pyspark.sql import Window
 
     n = 1 << res
-    cell_w, cell_h = 360.0 / n, 180.0 / n
-
     spark = points.sparkSession
-    cells_df = spark.range(n * n).select(F.col("id").alias("__cell"))
+    grid = spark.range(n).select(F.col("id").alias("__ix")).crossJoin(
+        spark.range(n).select(F.col("id").alias("__iy")))
+    x0, y0, x1, y1 = cells.ij_bounds(F.col("__ix"), F.col("__iy"), res)
     s0 = sites.select(
         F.col(site_id).alias("__sid"), F.col(sx).alias("__sx"),
         F.col(sy).alias("__sy"),
     )
-    pairs = cells_df.crossJoin(s0)
-    # cell rect from the id (__cell = ix·n + iy, _cell_ij encoding)
-    x0 = (F.floor(F.col("__cell") / n) * cell_w - 180.0)
-    y0 = (F.pmod(F.col("__cell"), F.lit(n)) * cell_h - 90.0)
-    ldx = F.greatest(x0 - F.col("__sx"), F.col("__sx") - (x0 + cell_w), F.lit(0.0))
-    ldy = F.greatest(y0 - F.col("__sy"), F.col("__sy") - (y0 + cell_h), F.lit(0.0))
-    udx = F.greatest(F.col("__sx") - x0, (x0 + cell_w) - F.col("__sx"))
-    udy = F.greatest(F.col("__sy") - y0, (y0 + cell_h) - F.col("__sy"))
-    pairs = pairs.select(
-        "__cell", "__sid", "__sx", "__sy",
+    ldx = F.greatest(x0 - F.col("__sx"), F.col("__sx") - x1, F.lit(0.0))
+    ldy = F.greatest(y0 - F.col("__sy"), F.col("__sy") - y1, F.lit(0.0))
+    udx = F.greatest(F.col("__sx") - x0, x1 - F.col("__sx"))
+    udy = F.greatest(F.col("__sy") - y0, y1 - F.col("__sy"))
+    pairs = grid.crossJoin(s0).select(
+        "__ix", "__iy", "__sid", "__sx", "__sy",
         (ldx * ldx + ldy * ldy).alias("__ld2"),
         (udx * udx + udy * udy).alias("__ud2"),
     )
-    wrank = Window.partitionBy("__cell").orderBy(
+    # windows by (ix, iy), which the range grid already clusters
+    wrank = Window.partitionBy("__ix", "__iy").orderBy(
         F.col("__ud2").asc(), F.col("__sid").asc()
     )
-    wcell = Window.partitionBy("__cell")
+    wcell = Window.partitionBy("__ix", "__iy")
     s = (
         pairs.withColumn("__rn", F.row_number().over(wrank))
         .withColumn(
@@ -291,14 +298,19 @@ def knn_join_grid_exact(
             F.max(F.when(F.col("__rn") <= k, F.col("__ud2"))).over(wcell),
         )
         .where(F.col("__ld2") <= F.col("__thresh"))
-        .select("__cell", "__sid", "__sx", "__sy")
+        .select(cells.ij_cell_col(F.col("__ix"), F.col("__iy"), res).alias("__cell"),
+                "__sid", "__sx", "__sy")
+        .unionByName(s0.withColumn("__cell", F.lit(_ALL_SITES)))
     )
 
-    p_ix, p_iy = _cell_ij(F.col(x), F.col(y), n)
-    p = points.select(
-        F.col(point_id), F.col(x).alias("__px"), F.col(y).alias("__py"),
-        (p_ix * n + p_iy).alias("__cell"),
-    ).where(F.col("__cell").isNotNull())
+    x0, y0, x1, y1 = cells.ij_bounds(F.col("__ix"), F.col("__iy"), res)
+    px, py = F.col("__px"), F.col("__py")
+    inside = (px >= x0) & (px <= x1) & (py >= y0) & (py <= y1)
+    p = _grid_points(points.dropna(subset=[x, y]), point_id, x, y, res).select(
+        point_id, "__px", "__py",
+        F.when(~inside, _ALL_SITES).otherwise(
+            cells.ij_cell_col(F.col("__ix"), F.col("__iy"), res)).alias("__cell"),
+    )
     p = p.repartition(F.col("__cell"))
     j = p.join(s, "__cell")
     dx = F.col("__px") - F.col("__sx")
@@ -384,7 +396,7 @@ class SiteGrid:
     can be nearer.  An edge on the grid's lat border, or a lon edge
     that reaches column 0 or n-1, bounds nothing.  Lon edges are only
     trusted when the point and every site lie in the cell they were
-    quantized to (lon in [-180, 180)); otherwise the x bound falls back
+    quantized to (lon in [-180, 180]); otherwise the x bound falls back
     to the wrap-safe ``r · cell_w``.
     """
 

@@ -53,15 +53,11 @@ _FULL_MARGIN = 1e-9
 def _near_own_cell(px, py, res: int) -> np.ndarray:
     """True where a point lies within ``_FULL_MARGIN`` of the square of
     the res-``res`` cell it encodes to.  False for NaN and for points the
-    encoder wraps or clamps into a cell (lon outside [-180, 180), |lat|
+    encoder wraps or clamps into a cell (lon outside [-180, 180], |lat|
     above 90), which must take the exact refine."""
-    ix, iy = cells.latlon_to_ij(py, px, res)
-    w, h = 360.0 / (1 << res), 180.0 / (1 << res)
-    x0 = -180.0 + ix * w
-    y0 = -90.0 + iy * h
+    x0, y0, x1, y1 = cells.ij_bounds(*cells.latlon_to_ij(py, px, res), res)
     m = _FULL_MARGIN
-    return ((px >= x0 - m) & (px <= x0 + w + m)
-            & (py >= y0 - m) & (py <= y0 + h + m))
+    return (px >= x0 - m) & (px <= x1 + m) & (py >= y0 - m) & (py <= y1 + m)
 
 
 # Per-worker-process cache of broadcast-built indexes (ZoneIndex here,

@@ -204,16 +204,76 @@ def parity_points(spark, tmp_path_factory):
 
 
 def test_out_of_domain_classes_are_pinned():
-    # lon one ulp below -180: np.mod gives 360.0, so column n-1 (Spark's
-    # pmod would give column 0); lat +inf and huge lat clamp to the top
-    # row, -inf and NaN to row 0
-    lat = np.array([0.0, np.inf, 1e300, -np.inf, np.nan])
-    lon = np.array([_ULP_BELOW, 0.0, 0.0, 0.0, 0.0])
+    # lon 180 and the ulp below it land in the last column (the closed
+    # interval [-180, 180] maps monotonically); lon one ulp below -180:
+    # np.mod gives 360.0, so column n-1 too (Spark's pmod would give
+    # column 0); the ulp above 180 sums to 360 as 180 does, while
+    # 180 + 1e-9 wraps to column 0; lat +inf and huge lat clamp to the
+    # top row, -inf and NaN to row 0
+    lat = np.array([0.0] * 5 + [np.inf, 1e300, -np.inf, np.nan])
+    lon = np.array([_ULP_BELOW, 180.0, np.nextafter(180.0, 0.0),
+                    np.nextafter(180.0, np.inf), 180.0 + 1e-9, 0.0, 0.0, 0.0, 0.0])
     for res in (1, 7, 26):
         n = 1 << res
         ix, iy = cells.latlon_to_ij(lat, lon, res)
-        assert ix[0] == n - 1
-        assert iy[1:].tolist() == [n - 1, n - 1, 0, 0]
+        assert ix[:5].tolist() == [n - 1, n - 1, n - 1, n - 1, 0]
+        assert iy[5:].tolist() == [n - 1, n - 1, 0, 0]
+
+
+def test_ij_col_matches_numpy_quantizer_at_the_seam(spark, tmp_path):
+    """The quantize half of the Catalyst encoder equals ``latlon_to_ij``
+    on the longitudes around both ends of [-180, 180] and their wrapped
+    images, and ``ij_cell_col`` of it equals ``ij_to_cell``."""
+    from pyspark.sql import functions as F
+
+    seam = []
+    for edge in (-180.0, 180.0, 540.0, -540.0):
+        v = edge
+        for _ in range(3):
+            v = float(np.nextafter(v, -np.inf))
+        for _ in range(7):
+            seam.append(v)
+            v = float(np.nextafter(v, np.inf))
+    lon = np.array(seam)
+    lat = np.linspace(-90.0, 90.0, len(lon))
+    path = str(tmp_path / "seam")
+    spark.createDataFrame(
+        [(i, float(a), float(b)) for i, (a, b) in enumerate(zip(lat, lon))],
+        "id long, lat double, lon double").write.parquet(path)
+    df = spark.read.parquet(path)
+    for res in (1, 8, 26):
+        ix, iy = cells.ij_col(F.col("lat"), F.col("lon"), res)
+        rows = sorted(df.select("id", ix.alias("ix"), iy.alias("iy"),
+                                cells.ij_cell_col(ix, iy, res).alias("c")).collect())
+        wx, wy = cells.latlon_to_ij(lat, lon, res)
+        assert [r["ix"] for r in rows] == wx.tolist(), res
+        assert [r["iy"] for r in rows] == wy.tolist(), res
+        assert [r["c"] for r in rows] == cells.ij_to_cell(wx, wy, res).tolist()
+
+
+def test_duckdb_morton_oracle_matches_engine():
+    """The DuckDB tile oracle's Morton CTE gives the engine's cell ids
+    on [-180, 180] × [-90, 90], the grid edges included."""
+    import duckdb
+    import pandas as pd
+
+    from spapy_spark.entry_queries import _morton_cte
+
+    rng = np.random.default_rng(8)
+    edge_lon = [-180.0, 180.0, float(np.nextafter(180.0, 0.0)),
+                float(np.nextafter(-180.0, np.inf)), 0.0]
+    edge_lat = [-90.0, 90.0, float(np.nextafter(90.0, 0.0)), 0.0]
+    glon, glat = np.meshgrid(edge_lon, edge_lat)
+    lon = np.concatenate([rng.uniform(-180, 180, 2000), glon.ravel()])
+    lat = np.concatenate([rng.uniform(-90, 90, 2000), glat.ravel()])
+    con = duckdb.connect()
+    con.register("p", pd.DataFrame({"point_id": np.arange(len(lon)),
+                                    "lat": lat, "lon": lon}))
+    got = con.execute(_morton_cte("SELECT point_id, lat, lon FROM p")
+                      + " SELECT cell FROM enc ORDER BY point_id").fetchnumpy()
+    want = cells.latlon_to_cell(lat, lon, 8)
+    bad = np.nonzero(got["cell"] != want)[0]
+    assert not len(bad), (lon[bad[:5]], lat[bad[:5]])
 
 
 def test_cell_col_matches_numpy_encoder(parity_points):

@@ -227,6 +227,57 @@ def test_knn_grid_exact_matches_broadcast(spark):
         assert len(rows) == 800 * 3 and _got(rows) == want
 
 
+def test_knn_grid_exact_points_outside_their_cell(spark):
+    """Points the encoder wraps (lon 250) or clamps (lat 120) into a
+    cell lie outside its rectangle, where the per-cell pruning proves
+    nothing: they get their true nearest sites, as the brute force and
+    the broadcast plan do.  Points with a null or NaN coordinate get
+    no neighbors in either plan."""
+    sites = spark.createDataFrame(
+        [(1, 175.0, 80.0), (2, 179.9, 60.0), (3, 90.0, 10.0),
+         (4, 60.0, 85.0), (5, 0.0, 50.0)],
+        "site_id long, x double, y double")
+    nan = float("nan")
+    rows = [(0, 80.0, 250.0), (1, 120.0, 0.0), (2, 20.0, 10.0), (3, nan, 10.0),
+            (4, 10.0, nan), (5, None, 3.0), (6, 4.0, None)]
+    pts = spark.createDataFrame(rows, "point_id long, lat double, lon double")
+    pid = np.array([r[0] for r in rows])
+    py, px = (np.array([r[c] for r in rows], dtype=np.float64) for c in (1, 2))
+    for k in (1, 2):
+        want = _brute(sites, pid, px, py, k)
+        assert want[(0, 1)][0] == 2 and want[(1, 1)][0] == 4
+        assert {p for p, _ in want} == {0, 1, 2}
+        assert _got(knn.knn_join_grid_exact(pts, sites, k=k, res=5).collect()) == want
+        assert _got(knn.knn_join_cells(pts, sites, k=k, res=5,
+                                       point_cols=["point_id"]).collect()) == want
+
+
+def test_within_distance_across_the_antimeridian(spark):
+    """The range join finds the pairs the brute force finds for points
+    and sites at, beyond and around lon ±180, whose cells wrap."""
+    edge = [180.0, float(np.nextafter(180.0, 0.0)), float(np.nextafter(180.0, np.inf)),
+            180.0 + 1e-9, -180.0, 179.5, -179.5, 180.7, -180.7, 181.9, 178.2]
+    rng = np.random.default_rng(4)
+    sxy = [(int(i), x, float(y)) for i, (x, y) in
+           enumerate(zip(edge, rng.uniform(-3, 3, len(edge))))]
+    sites = spark.createDataFrame(sxy, "site_id long, x double, y double")
+    px = np.concatenate([edge, rng.uniform(177, 183, 40)])
+    py = rng.uniform(-3, 3, len(px))
+    pts = spark.createDataFrame(
+        [(i, float(b), float(a)) for i, (a, b) in enumerate(zip(px, py))],
+        "point_id long, lat double, lon double")
+    d = 2.0
+    got = {(r["point_id"], r["site_id"]): r["dist"]
+           for r in knn.within_distance(pts, sites, d, res=6).collect()}
+    want = {}
+    for i in range(len(px)):
+        for j, x, y in sxy:
+            d2 = (px[i] - x) ** 2 + (py[i] - y) ** 2
+            if d2 <= d * d:
+                want[(i, j)] = float(np.sqrt(d2))
+    assert len(want) > len(px) and got == want
+
+
 def test_knn_grid_exact_k_exceeds_sites(spark):
     """k larger than the site count degrades to |sites| rows/point."""
     sites = synth.sites(spark, 5)
@@ -323,14 +374,14 @@ def test_sitegrid_block_edge_quantization_margin(axis):
 @pytest.mark.parametrize("res", [3, 6])
 def test_sitegrid_antimeridian(res):
     """Planar distance does not wrap, but the grid's lon axis does;
-    a site whose lon rounds onto +180 sits in column 0."""
+    a site beyond +180 wraps into column 0."""
     near = [179.99, -179.99, 180.0 - 1e-12, -180.0, 179.0, -179.5]
     px = np.array(near + [0.0, 90.0])
     py = np.array([10.0, 10.0, -5.0, 0.0, 45.0, -45.0, 0.0, 30.0])
     base = [(10, 179.9, 10.0), (11, -179.9, 10.0), (12, 178.0, -5.0),
             (13, -178.0, 0.0), (14, 170.0, 40.0), (15, -170.0, -40.0),
             (16, 0.0, 60.0), (17, 90.0, -60.0)]
-    wrapped = base + [(18, float(np.nextafter(180.0, -np.inf)), 9.0)]
+    wrapped = base + [(18, 180.0 + 1e-9, 9.0)]
     assert cells.latlon_to_ij(np.array([9.0]), np.array([wrapped[-1][1]]),
                               res)[0][0] == 0
     assert SiteGrid(base, res=res).x_edges_ok
@@ -342,7 +393,7 @@ def test_sitegrid_antimeridian(res):
     # point's own last-column cell (distance 1.2): trusting the lon
     # edges here would stop after ring 0 on the wrong site
     yc = 90.0 / (1 << res)  # center of the first row north of 0°
-    rows = [(1, 177.8, yc), (2, float(np.nextafter(180.0, -np.inf)), yc),
+    rows = [(1, 177.8, yc), (2, 180.0 + 1e-9, yc),
             (3, -100.0, -70.0)]
     pi, si, rk, d = _assert_grid_matches_brute(rows, [179.0], [yc], 1, res)
     assert si.tolist() == [2]

@@ -150,10 +150,14 @@ def test_contains_near_a_cell_edge(spark):
 
 def test_zone_reaching_lon_180(spark):
     """A box whose max corner is lon 180 covers its last cell column:
-    the corner is clamped into the grid, not wrapped to column 0, so
-    points at lon 171, 176 and 179.9 are all candidates and matches."""
+    the corner is clamped into the grid, not wrapped to column 0, and
+    so are points at lon 180 and one ulp below it, which land in the
+    last column like lon 179.9.  Every point is a candidate of both
+    plans and of ``zone_cell_covering``.  The zone covers, but does not
+    contain, the two points on (or an ulp from) its edge lon 180."""
     geoms = [wkb.box(170.0, 10.0, 180.0, 20.0)]
-    px, py = np.array([171.0, 176.0, 179.9]), np.full(3, 15.0)
+    px = np.array([171.0, 176.0, 179.9, np.nextafter(180.0, 0.0), 180.0])
+    py = np.full(len(px), 15.0)
     own = set(cells.latlon_to_cell(py, px, 6).tolist())
     cover = cells.cover_bbox(170.0, 10.0, 180.0, 20.0, 6)
     assert len(cover) == 10 and own <= set(cover.tolist())
@@ -162,12 +166,15 @@ def test_zone_reaching_lon_180(spark):
     assert own <= {r["cell"] for r in rows}
     pts = _points_df(spark, px, py)
     for predicate in ("covers", "contains"):
-        want = {(0, 9), (1, 9), (2, 9)}
-        assert brute_pairs([9], geoms, px, py, predicate) == want
+        want = brute_pairs([9], geoms, px, py, predicate)
+        assert want == {(i, 9) for i in range(5 if predicate == "covers" else 3)}
         assert pairs(pip.pip_join_cells(pts, zdf, res=6, point_cols=["point_id"],
                                         predicate=predicate)) == want
         assert pairs(pip.pip_join_broadcast(pts, zdf, point_cols=["point_id"],
                                              predicate=predicate, res=6)) == want
+        pi, zid = pip.ZoneIndex([(9, wkb.dumps(geoms[0]))], res=6).query(
+            px, py, predicate)
+        assert set(zip(pi.tolist(), zid.tolist())) == want
 
 
 @pytest.mark.parametrize("res", [6, 7, 8])

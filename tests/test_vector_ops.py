@@ -119,6 +119,17 @@ def test_buffer_point(spark):
     assert kernels.geom_area(g) == pytest.approx(np.pi * 4, rel=0.01)
 
 
+def test_buffer_drops_null_geometry(spark):
+    """A null geometry is dropped like any feature without a buffer; the
+    batch decoder marks it undecodable instead of failing the task."""
+    df = spark.createDataFrame(
+        [(0, wkb.dumps(wkb.box(0, 0, 1, 1))), (1, None)],
+        "fid long, geometry binary")
+    assert vector.buffer(df, 0.5).count() == 1
+    ok, _, _ = wkb.decode_convex_rings([wkb.dumps(wkb.box(0, 0, 1, 1)), None])
+    assert ok.tolist() == [True, False]
+
+
 def test_convex_hull(spark, layer):
     out = {r["fid"]: wkb.loads(bytes(r["geometry"]))
            for r in vector.convex_hull(layer).collect()}

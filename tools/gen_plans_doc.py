@@ -89,7 +89,12 @@ def main():
         "Range join via buffered cell covering: sites bucket to one "
         "cell, points explode to the (2rx+1)×(2ry+1) neighborhood, one "
         "hash join on the integer cell + exact distance filter — no "
-        "Python node, no broadcast; the shuffle key is the cell.",
+        "Python node, no broadcast; the shuffle key is the cell.  Both "
+        "sides key cells by the engine's Morton ids (`cells.ij_col` + "
+        "`cells.ij_cell_col`); the points' (ix, iy) are bound in a "
+        "Project below the `Generate`, so each neighbor key reads them "
+        "instead of repeating the quantize expression.",
+        limit=6000,
     )
     # broadcast joins off, as for a point stream too large to broadcast
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -98,7 +103,8 @@ def main():
     )
     cap(
         "Distributed grid kNN (no broadcast, no Python)", kg,
-        "Per-cell domination pruning on the site side: every grid cell "
+        "Per-cell domination pruning on the site side: every grid cell, "
+        "an (ix, iy) pair of two `range`s, "
         "crosses every site once, ranks the sites by their max distance "
         "to the cell rectangle, and keeps only those whose min distance "
         "does not exceed the k-th smallest max distance — a dropped site "
@@ -106,8 +112,14 @@ def main():
         "stream is hash-partitioned once on its cell and joins that "
         "cell's pruned list; the per-point top-k is a sort-based window "
         "`row_number over (d2, site_id)` in the same distribution, so "
-        "there is no second point-side Exchange.  Shown with broadcast "
-        "joins off, as for a point stream too large to broadcast.",
+        "there is no second point-side Exchange.  The site windows "
+        "partition by (ix, iy), which the range-partitioned grid "
+        "already clusters, and only the kept sites get the Morton key "
+        "(`cells.ij_cell_col`) the points join on.  A point outside its "
+        "cell's rectangle (lon wrapped, lat clamped) joins the extra "
+        "cell -1, which the `Union` fills with every site unpruned.  "
+        "Shown with broadcast joins off, as for a point stream too "
+        "large to broadcast.",
         limit=6000,
     )
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
