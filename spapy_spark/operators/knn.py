@@ -28,9 +28,11 @@ broadcast when it is small, a partitioned join when it is not:
   others for every point in it, and the point stream joins its single
   cell's list after one shuffle.
 
-``within_distance`` is the range (theta) join on the same grid.  All
-three key cells by ``cells`` (the SiteGrid by ``latlon_to_ij``, the grid
-joins by its Catalyst twin ``ij_col``), as the PIP plans do.
+``within_distance`` is the range (theta) join on the same grid: the
+site side carries the buffered cell covering and each point joins on
+its one cell.  All three key cells by ``cells`` (the SiteGrid by
+``latlon_to_ij``, the grid joins by its Catalyst twins), as the PIP
+plans do.
 
 Tie-break is deterministic everywhere: order by (distance, site_id) —
 the DuckDB oracle mirrors it with ``ORDER BY dist, site_id``.
@@ -152,13 +154,6 @@ def _topk_block(
 _ALL_SITES = -1
 
 
-def _grid_points(points, point_id, x, y, res):
-    """Points as (point_id, __px, __py, __ix, __iy), bound in a Project."""
-    ix, iy = cells.ij_col(F.col(y), F.col(x), res)
-    return points.select(F.col(point_id), F.col(x).alias("__px"),
-                         F.col(y).alias("__py"), ix.alias("__ix"), iy.alias("__iy"))
-
-
 def within_distance(
     points: DataFrame,
     sites: DataFrame,
@@ -173,46 +168,47 @@ def within_distance(
 ) -> DataFrame:
     """Distance-within (range/theta) join — every (point, site) pair
     with planar distance ≤ ``d``, via the buffered cell covering named
-    in SURVEY §2.4: sites bucket at one cell each; points explode to
-    the (2·rx+1)×(2·ry+1) cell neighborhood that provably covers a
-    radius-``d`` disc; equi-join on the cell + exact distance filter.
+    in SURVEY §2.4: ``sites``, the replicated side, explode to the
+    (2·rx+1)×(2·ry+1) cell neighborhood that provably covers a
+    radius-``d`` disc; each point keys its one cell (``cells.cell_col``,
+    as in ``pip.pip_join_cells``); equi-join on the cell + exact
+    distance filter.
 
-    No pair is lost to the wrap of lon outside [-180, 180]: around the
-    360° circle of wrapped lon two lons are never farther apart than in
-    the plane, so a pair within ``d`` is at most ``rx = ceil(d / cell_w)``
-    columns apart, and the neighbor ring wraps its columns with ``pmod``.
-    Lat clamps, which moves no two rows farther apart.
+    No pair is lost: around the 360° circle of wrapped lon two lons are
+    never farther apart than in the plane, so a pair within ``d`` is at
+    most ``rx = ceil(d / cell_w)`` columns apart on that circle and
+    ``ry`` rows apart (lat clamps, which moves no two rows farther
+    apart).  The relation is symmetric, so buffering the sites gives the
+    candidates that buffering the points would.  No pair repeats: the
+    columns wrap with ``pmod`` and, once 2·rx+1 ≥ 2^res, are each column
+    once; the rows clamp to the grid.
 
-    Pure Catalyst (no Python, no broadcast): both sides can be
-    arbitrarily large; the shuffle key is the cell, and the explosion
-    factor is fixed by d/cell size, so the plan scales linearly.
-    The reference has no range join (nearest-neighbor gap, SURVEY
-    §2.4); this is new engine surface.
+    Pure Catalyst (no Python): the neighborhood is data, two exploded
+    ``sequence``s, so the plan does not grow with ``d``.  The reference
+    has no range join (nearest-neighbor gap, SURVEY §2.4); this is new
+    engine surface.
     """
     import math
 
+    if not d >= 0:
+        raise ValueError(f"d must be >= 0, got {d}")
     n = 1 << res
     rx, ry = (int(math.ceil(d / (span / n))) for span in (360.0, 180.0))
-
-    s = sites.select(
-        F.col(site_id).alias("__sid"), F.col(sx).alias("__sx"),
-        F.col(sy).alias("__sy"),
-        cells.cell_col(F.col(sy), F.col(sx), res).alias("__cell"),
+    ix, iy = cells.ij_col(F.col(sy), F.col(sx), res)
+    s = sites.select(F.col(site_id).alias("__sid"), F.col(sx).alias("__sx"),
+                     F.col(sy).alias("__sy"), ix.alias("__ix"), iy.alias("__iy"))
+    # the neighborhood as data: bound (ix, iy) → columns → rows → key
+    site, ix, iy = ["__sid", "__sx", "__sy"], F.col("__ix"), F.col("__iy")
+    cols = (F.sequence(F.lit(0), F.lit(n - 1)) if 2 * rx + 1 >= n
+            else F.sequence(ix - rx, ix + rx))
+    rows = F.sequence(F.greatest(iy - ry, F.lit(0)), F.least(iy + ry, F.lit(n - 1)))
+    s = s.select(*site, rows.alias("__rows"), F.explode(cols).alias("__ix")).select(
+        *site, F.pmod(ix, F.lit(n)).alias("__ix"), F.explode("__rows").alias("__iy"))
+    s = s.select(*site, cells.ij_cell_col(ix, iy, res).alias("__cell"))
+    p = points.select(
+        F.col(point_id), F.col(x).alias("__px"), F.col(y).alias("__py"),
+        cells.cell_col(F.col(y), F.col(x), res).alias("__cell"),
     )
-    # a cell key is the OR of its column's and its row's keys: key each
-    # once in a Project, so the explode (no subexpression reuse) only ORs
-    ix, iy, zero = F.col("__ix"), F.col("__iy"), F.lit(0)
-    p = _grid_points(points, point_id, x, y, res).select(
-        point_id, "__px", "__py",
-        *[cells.ij_cell_col(F.pmod(ix + dx, F.lit(n)), zero, res).alias(f"__c{dx}")
-          for dx in range(-rx, rx + 1)],
-        *[F.when((iy + dy >= 0) & (iy + dy < n), cells.ij_cell_col(zero, iy + dy, res))
-          .alias(f"__r{dy}") for dy in range(-ry, ry + 1)],
-    )
-    nbrs = F.array(*[F.col(f"__c{dx}").bitwiseOR(F.col(f"__r{dy}"))
-                     for dy in range(-ry, ry + 1) for dx in range(-rx, rx + 1)])
-    p = p.select(point_id, "__px", "__py", F.explode(nbrs).alias("__cell")
-                 ).where(F.col("__cell").isNotNull())
     j = p.join(s, "__cell")
     dx = F.col("__px") - F.col("__sx")
     dy = F.col("__py") - F.col("__sy")
@@ -306,7 +302,11 @@ def knn_join_grid_exact(
     x0, y0, x1, y1 = cells.ij_bounds(F.col("__ix"), F.col("__iy"), res)
     px, py = F.col("__px"), F.col("__py")
     inside = (px >= x0) & (px <= x1) & (py >= y0) & (py <= y1)
-    p = _grid_points(points.dropna(subset=[x, y]), point_id, x, y, res).select(
+    ix, iy = cells.ij_col(F.col(y), F.col(x), res)
+    p = points.dropna(subset=[x, y]).select(
+        F.col(point_id), F.col(x).alias("__px"), F.col(y).alias("__py"),
+        ix.alias("__ix"), iy.alias("__iy"),
+    ).select(
         point_id, "__px", "__py",
         F.when(~inside, _ALL_SITES).otherwise(
             cells.ij_cell_col(F.col("__ix"), F.col("__iy"), res)).alias("__cell"),

@@ -218,16 +218,6 @@ _OVERLAY_KERNELS = {
 }
 
 
-def _rings_of(g: dict) -> list[np.ndarray]:
-    return [np.asarray(rings[0]) for rings in wkb.polygons_of(g)]
-
-
-def _pt_in(g: dict, x: float, y: float) -> bool:
-    return bool(
-        kernels.points_in_polygon_geom(np.array([x]), np.array([y]), g)[0]
-    )
-
-
 def _boundary_touch(g1: dict, g2: dict) -> bool:
     for r1 in _all_rings(g1):
         for r2 in _all_rings(g2):

@@ -38,6 +38,7 @@ from __future__ import annotations
 import hashlib
 import json
 import os
+import posixpath
 import time
 import uuid
 from dataclasses import dataclass, field
@@ -46,6 +47,7 @@ from urllib.parse import unquote, urlparse
 
 import pandas as pd
 import pyarrow.parquet as pq
+from pyarrow import fs as pafs
 from pyspark import SparkContext
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -60,24 +62,24 @@ class Stage:
     invariant_col: str | None = None
 
 
-def _manifest_path(base: str, name: str) -> str:
-    return os.path.join(base, name, "manifest.json")
+def _manifest_path(root: str, name: str) -> str:
+    return posixpath.join(root, name, "manifest.json")
 
 
-def _read_manifest(base: str, name: str) -> dict | None:
-    p = _manifest_path(base, name)
-    if not os.path.exists(p):
+def _read_manifest(fs: pafs.FileSystem, root: str, name: str) -> dict | None:
+    p = _manifest_path(root, name)
+    if fs.get_file_info(p).type == pafs.FileType.NotFound:
         return None
-    with open(p) as f:
-        return json.load(f)
+    with fs.open_input_stream(p) as f:
+        return json.loads(f.read())
 
 
-def _write_manifest(base: str, name: str, m: dict) -> None:
-    p = _manifest_path(base, name)
+def _write_manifest(fs: pafs.FileSystem, root: str, name: str, m: dict) -> None:
+    p = _manifest_path(root, name)
     tmp = p + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(m, f, indent=1, sort_keys=True)
-    os.replace(tmp, p)  # atomic: complete-flag appears all-or-nothing
+    with fs.open_output_stream(tmp) as f:
+        f.write(json.dumps(m, indent=1, sort_keys=True).encode())
+    fs.move(tmp, p)  # a rename: complete-flag appears all-or-nothing
 
 
 def _fingerprint(parents: list[dict]) -> str:
@@ -111,12 +113,13 @@ def _content_fingerprint(df: DataFrame, col: str) -> str:
     return f"sum={s['s']},n={s['n']}"
 
 
-def _write_lineage(sc: SparkContext, tag: str, ddir: str) -> dict[str, list[int]]:
+def _write_lineage(sc: SparkContext, tag: str, fs: pafs.FileSystem,
+                   ddir: str) -> dict[str, list[int]]:
     """Per-partition lineage of the write run under job tag ``tag``: one
     row per partition of its result stage (the highest stage id of the
     tagged jobs), ``wall_ms`` from that partition's successful task and
-    ``rows_out`` from the footers of its committed files in ``ddir``
-    (0 when it wrote none)."""
+    ``rows_out`` from the footers of its committed files in ``ddir`` on
+    ``fs`` (0 when it wrote none)."""
     jsc = sc._jsc.sc()
     jsc.listenerBus().waitUntilEmpty()  # the status store trails the bus
     tracker = jsc.statusTracker()
@@ -131,20 +134,26 @@ def _write_lineage(sc: SparkContext, tag: str, ddir: str) -> dict[str, list[int]
             if t.status() == "SUCCESS":
                 wall.setdefault(t.partitionId(), t.duration().get())
     rows = dict.fromkeys(wall, 0)
-    for f in os.listdir(ddir):
-        if f.startswith("part-"):
-            n = pq.read_metadata(os.path.join(ddir, f)).num_rows
-            rows[int(f.split("-")[1])] += n
+    for f in fs.get_file_info(pafs.FileSelector(ddir)):
+        if f.base_name.startswith("part-"):
+            n = pq.read_metadata(f.path, filesystem=fs).num_rows
+            rows[int(f.base_name.split("-")[1])] += n
     pids = sorted(wall)
     return {"partition_id": pids, "rows_out": [rows[p] for p in pids],
             "wall_ms": [wall[p] for p in pids]}
 
 
 class CheckpointRunner:
+    """Runs stages under ``base_dir``, a local path or a URI.  Spark
+    writes the stage data; the manifests and the part-file footers go
+    through the base's ``pyarrow.fs`` filesystem."""
+
     def __init__(self, spark: SparkSession, base_dir: str):
         self.spark = spark
         self.base = base_dir
-        os.makedirs(base_dir, exist_ok=True)
+        self.fs, self.root = pafs.FileSystem.from_uri(
+            base_dir if urlparse(base_dir).scheme else os.path.abspath(base_dir))
+        self.fs.create_dir(self.root, recursive=True)
 
     # -- main entry ------------------------------------------------------
     def run(self, stages: list[Stage], verbose: bool = False) -> dict[str, DataFrame]:
@@ -155,15 +164,14 @@ class CheckpointRunner:
         manifests: dict[str, dict] = {}
         self.skipped: set[str] = set()  # stages resumed from checkpoint
         for st in stages:
-            sdir = os.path.join(self.base, st.name)
-            ddir = os.path.join(sdir, "data")
+            ddir = os.path.join(self.base, st.name, "data")
             df = None
             if st.parents:
                 fp = _fingerprint([manifests[p] for p in st.parents])
             else:  # a root stage is as fresh as the files it reads
                 df = st.fn(self.spark)
                 fp = _source_fingerprint(df)
-            existing = _read_manifest(self.base, st.name)
+            existing = _read_manifest(self.fs, self.root, st.name)
             if (
                 existing is not None
                 and existing.get("complete")
@@ -175,7 +183,7 @@ class CheckpointRunner:
                 if verbose:
                     print(f"[checkpoint] skip {st.name} (complete)")
                 continue
-            os.makedirs(sdir, exist_ok=True)
+            self.fs.create_dir(posixpath.join(self.root, st.name), recursive=True)
             t0 = time.time()
             if df is None:
                 df = st.fn(self.spark, *[outputs[p] for p in st.parents])
@@ -185,7 +193,8 @@ class CheckpointRunner:
                 df.write.mode("overwrite").parquet(ddir)
             finally:
                 sc.removeJobTag(tag)
-            lineage = _write_lineage(sc, tag, ddir)
+            lineage = _write_lineage(sc, tag, self.fs,
+                                     posixpath.join(self.root, st.name, "data"))
             out = self.spark.read.parquet(ddir)
             outputs[st.name] = out
             m = {
@@ -200,7 +209,7 @@ class CheckpointRunner:
                 "wall_s": round(time.time() - t0, 3),
                 "complete": True,
             }
-            _write_manifest(self.base, st.name, m)
+            _write_manifest(self.fs, self.root, st.name, m)
             manifests[st.name] = m
             if verbose:
                 print(f"[checkpoint] ran {st.name} in {m['wall_s']}s")
@@ -217,4 +226,4 @@ class CheckpointRunner:
         return pd.DataFrame(self.manifest(stage)["lineage"])
 
     def manifest(self, stage: str) -> dict | None:
-        return _read_manifest(self.base, stage)
+        return _read_manifest(self.fs, self.root, stage)

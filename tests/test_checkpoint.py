@@ -180,3 +180,29 @@ def test_incomplete_stage_reruns(spark, base):
     assert r2.skipped == {"docs", "geo"}  # only the crashed stage reruns
     assert r2.manifest("pip")["complete"]
     assert out["pip"].count() > 0
+
+
+def test_file_uri_base(spark, tmp_path, monkeypatch):
+    """A ``file://`` base holds the data, manifests and lineage under
+    its path (no stray ``file:`` directory in the cwd), and a fresh
+    runner on it resumes."""
+    monkeypatch.chdir(tmp_path)
+    base = (tmp_path / "ckpt").as_uri()
+    assert base.startswith("file:///")
+
+    def stages():
+        return [Stage("a", lambda spark: spark.range(0, 10, 1, 2)),
+                Stage("b", lambda spark, a: a.where("id < 4"), parents=["a"])]
+
+    r1 = CheckpointRunner(spark, base)
+    assert r1.run(stages())["b"].count() == 4
+    assert os.listdir(tmp_path) == ["ckpt"]
+    m = json.load(open(tmp_path / "ckpt" / "a" / "manifest.json"))
+    assert m["complete"] and m["output_fingerprint"] == "rows=10"
+    assert r1.lineage("a")["rows_out"].tolist() == [5, 5]
+    assert r1.manifest("b")["output_fingerprint"] == "rows=4"
+
+    r2 = CheckpointRunner(spark, base)
+    assert r2.run(stages())["b"].count() == 4
+    assert r2.skipped == {"a", "b"}
+    pd.testing.assert_frame_equal(r2.lineage("a"), r1.lineage("a"))

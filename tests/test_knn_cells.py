@@ -3,6 +3,8 @@ and the distributed grid join (``knn_join_grid_exact``) — must agree
 exactly with the numpy brute force ``_topk_block`` (same tie-break,
 bit-equal dist) on clustered + uniform points."""
 
+import re
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -189,8 +191,9 @@ def test_within_distance_matches_bruteforce(spark):
         "point_id long, lat double, lon double",
     )
     d = 2.5
-    got = {(r["point_id"], r["site_id"]): r["dist"]
-           for r in knn.within_distance(pts, sites, d, res=6).collect()}
+    out = knn.within_distance(pts, sites, d, res=6).collect()
+    got = {(r["point_id"], r["site_id"]): r["dist"] for r in out}
+    assert len(out) == len(got)  # no pair repeats
     rows = synth._site_rows(200)
     sx = np.array([r[2] for r in rows])
     sy = np.array([r[3] for r in rows])
@@ -267,8 +270,9 @@ def test_within_distance_across_the_antimeridian(spark):
         [(i, float(b), float(a)) for i, (a, b) in enumerate(zip(px, py))],
         "point_id long, lat double, lon double")
     d = 2.0
-    got = {(r["point_id"], r["site_id"]): r["dist"]
-           for r in knn.within_distance(pts, sites, d, res=6).collect()}
+    rows = knn.within_distance(pts, sites, d, res=6).collect()
+    got = {(r["point_id"], r["site_id"]): r["dist"] for r in rows}
+    assert len(rows) == len(got)  # no pair repeats
     want = {}
     for i in range(len(px)):
         for j, x, y in sxy:
@@ -276,6 +280,74 @@ def test_within_distance_across_the_antimeridian(spark):
             if d2 <= d * d:
                 want[(i, j)] = float(np.sqrt(d2))
     assert len(want) > len(px) and got == want
+
+
+def test_within_distance_one_row_per_pair(spark):
+    """A radius wider than the grid (2·rx+1 > 2^res columns) still
+    gives each pair one row."""
+    pts = spark.createDataFrame([(1, 10.0, 10.0)],
+                                "point_id long, lat double, lon double")
+    sites = spark.createDataFrame([(7, 12.0, 11.0)], "site_id long, x double, y double")
+    rows = knn.within_distance(pts, sites, 200.0, res=1).collect()
+    assert [tuple(r) for r in rows] == [(1, 7, float(np.sqrt(5.0)))]
+    with pytest.raises(ValueError):
+        knn.within_distance(pts, sites, -1.0)
+
+
+def _plan_tree(df):
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.initialPlan()
+    return plan
+
+
+def _kids(node):
+    ch = node.children()
+    return [ch.apply(i) for i in range(ch.size())]
+
+
+def _subtree(node):
+    return [node] + [m for c in _kids(node) for m in _subtree(c)]
+
+
+def test_within_distance_wide_radius_plan_constant_in_d(spark, tmp_path):
+    """At res 3 a radius of 500° wraps every column and clamps every
+    row, and the join still equals the brute force.  The neighborhood
+    is data, not plan: the executed plan is as long at d=30 as at d=3,
+    and the point stream has no ``Generate``."""
+    rng = np.random.default_rng(7)
+    sxy = [(int(i), float(rng.uniform(-200, 200)), float(rng.uniform(-95, 95)))
+           for i in range(6)]
+    pxy = [(int(i), float(rng.uniform(-100, 100)), float(rng.uniform(-250, 250)))
+           for i in range(30)]
+    sites = spark.createDataFrame(sxy, "site_id long, x double, y double")
+    pts = spark.createDataFrame(pxy, "point_id long, lat double, lon double")
+    d = 500.0
+    rows = knn.within_distance(pts, sites, d, res=3).collect()
+    got = {(r["point_id"], r["site_id"]): r["dist"] for r in rows}
+    want = {}
+    for i, lat, lon in pxy:
+        for j, x, y in sxy:
+            d2 = (lon - x) ** 2 + (lat - y) ** 2
+            if d2 <= d * d:
+                want[(i, j)] = float(np.sqrt(d2))
+    assert len(rows) == len(got) == len(pxy) * len(sxy) and got == want
+
+    path = str(tmp_path / "pts")
+    pts.write.parquet(path)
+    lens = []
+    for d in (3.0, 30.0):
+        plan = _plan_tree(knn.within_distance(spark.read.parquet(path),
+                                              synth.sites(spark, 64), d, res=6))
+        # expression ids gain digits as the session ages: not plan size
+        lens.append(len(re.sub(r"#\d+L?|plan_id=\d+", "", plan.toString())))
+        node = plan
+        while "Join" not in node.nodeName():
+            (node,) = _kids(node)
+        (points,) = [c for c in _kids(node)
+                     if any("Scan parquet" in n.toString() for n in _subtree(c))]
+        assert not any("Generate" in n.nodeName() for n in _subtree(points))
+    assert abs(lens[1] - lens[0]) <= 0.01 * lens[0]
 
 
 def test_knn_grid_exact_k_exceeds_sites(spark):
@@ -475,28 +547,18 @@ def test_knn_grid_exact_one_point_shuffle(spark, tmp_path):
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        ex = knn.knn_join_grid_exact(spark.read.parquet(path),
-                                     synth.sites(spark, 64), k=3, res=5)
-        plan = ex._jdf.queryExecution().executedPlan()
-        if plan.nodeName() == "AdaptiveSparkPlan":
-            plan = plan.initialPlan()
+        plan = _plan_tree(knn.knn_join_grid_exact(spark.read.parquet(path),
+                                                  synth.sites(spark, 64), k=3, res=5))
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-
-    def kids(node):
-        ch = node.children()
-        return [ch.apply(i) for i in range(ch.size())]
-
-    def subtree(node):
-        return [node] + [m for c in kids(node) for m in subtree(c)]
 
     # root → the point/site join is a chain of one-child nodes; the
     # join's left child is the point stream
     above, node = [], plan
     while "Join" not in node.nodeName():
         above.append(node)
-        (node,) = kids(node)
-    points = subtree(kids(node)[0])
+        (node,) = _kids(node)
+    points = _subtree(_kids(node)[0])
     assert any("Scan parquet" in n.toString() for n in points)
     ex_nodes = [n for n in above + points if "Exchange" in n.nodeName()]
     assert len(ex_nodes) == 1

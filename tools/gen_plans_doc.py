@@ -86,14 +86,15 @@ def main():
     )
     cap(
         "Distance-within join (pure Catalyst, both sides unbounded)", wd,
-        "Range join via buffered cell covering: sites bucket to one "
-        "cell, points explode to the (2rx+1)×(2ry+1) neighborhood, one "
-        "hash join on the integer cell + exact distance filter — no "
-        "Python node, no broadcast; the shuffle key is the cell.  Both "
-        "sides key cells by the engine's Morton ids (`cells.ij_col` + "
-        "`cells.ij_cell_col`); the points' (ix, iy) are bound in a "
-        "Project below the `Generate`, so each neighbor key reads them "
-        "instead of repeating the quantize expression.",
+        "Range join via buffered cell covering: each site explodes to "
+        "the (2rx+1)×(2ry+1) cell neighborhood of its (ix, iy) — two "
+        "`Generate`s over `sequence`s of columns (wrapped by `pmod`) "
+        "and of clamped rows, so the plan does not grow with d — and "
+        "each point keys its one cell (`cells.cell_col`) with no "
+        "`Generate`; one hash join on the integer cell + exact distance "
+        "filter, no Python node.  Both sides key cells by the engine's "
+        "Morton ids: the sites by `cells.ij_col` + `cells.ij_cell_col`, "
+        "the points by `cells.cell_col`.",
         limit=6000,
     )
     # broadcast joins off, as for a point stream too large to broadcast
